@@ -11,10 +11,10 @@ OGR_ARC_STEPSIZE default of 4° per segment. Curved content arriving
 from GML/GPKG/PostGIS flows through that conversion into every linear
 operator.
 
-This module does the same for the engine: ISO WKB codes 8-12 parse
-and serialize here (the core `wkb` module stays the six linear
-types — every operator kernel consumes LINEAR geometry only, exactly
-like the reference's linear-geometry pipelines), and
+This module does the same for the engine: ISO WKB codes 8-12
+serialize here and parse in ``wkb.parse`` (every operator kernel
+consumes LINEAR geometry only, exactly like the reference's
+linear-geometry pipelines), and
 :func:`linearize` densifies arcs by a maximum angular step so curved
 inputs become ordinary LINESTRING/POLYGON/MULTI* WKB. The batch form
 :func:`linearize_udf` is an Arrow pandas_udf usable in any select —
@@ -35,12 +35,9 @@ import numpy as np
 import pandas as pd
 
 from . import wkb
-
-CIRCULARSTRING = 8
-COMPOUNDCURVE = 9
-CURVEPOLYGON = 10
-MULTICURVE = 11
-MULTISURFACE = 12
+from .wkb import (
+    CIRCULARSTRING, COMPOUNDCURVE, CURVEPOLYGON, MULTICURVE, MULTISURFACE,
+)
 
 DEFAULT_MAX_STEP_DEG = 4.0  # OGR_ARC_STEPSIZE default
 
@@ -48,7 +45,7 @@ _LE = 1
 
 
 # ---------------------------------------------------------------------------
-# WKB codec (codes 8-12; nested geometries carry their own headers,
+# WKB writers (codes 8-12; nested geometries carry their own headers,
 # exactly as ISO 13249-3 / PostGIS serialize them)
 # ---------------------------------------------------------------------------
 
@@ -70,7 +67,7 @@ def compoundcurve(parts: list[bytes]) -> bytes:
     parts must share endpoints (validated)."""
     prev_end = None
     for p in parts:
-        t, payload = _parse(p)
+        t, payload = wkb.parse(p)
         pts = np.asarray(payload)
         if prev_end is not None and not np.array_equal(
             pts[0], prev_end
@@ -106,68 +103,6 @@ def multisurface(surfaces: list[bytes]) -> bytes:
         struct.pack("<BII", _LE, MULTISURFACE, len(surfaces))
         + b"".join(surfaces)
     )
-
-
-class _Rd:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
-
-
-def _rd_geom(r: _Rd):
-    order = r.buf[r.pos]
-    fmt = "<" if order == 1 else ">"
-    (code,) = struct.unpack_from(fmt + "I", r.buf, r.pos + 1)
-    if code & 0x20000000:  # EWKB SRID
-        r.pos += 4
-        code &= ~0x20000000
-    gtype = code % 1000
-    r.pos += 5
-    if gtype == wkb.POINT:
-        xy = struct.unpack_from(fmt + "dd", r.buf, r.pos)
-        r.pos += 16
-        return gtype, np.array([xy])
-    if gtype in (wkb.LINESTRING, CIRCULARSTRING):
-        (n,) = struct.unpack_from(fmt + "I", r.buf, r.pos)
-        r.pos += 4
-        pts = np.frombuffer(
-            r.buf, fmt + "f8", 2 * n, r.pos
-        ).reshape(n, 2).astype(np.float64)
-        r.pos += 16 * n
-        return gtype, pts
-    if gtype == wkb.POLYGON:
-        (n,) = struct.unpack_from(fmt + "I", r.buf, r.pos)
-        r.pos += 4
-        rings = []
-        for _ in range(n):
-            (m,) = struct.unpack_from(fmt + "I", r.buf, r.pos)
-            r.pos += 4
-            rings.append(
-                np.frombuffer(r.buf, fmt + "f8", 2 * m, r.pos)
-                .reshape(m, 2).astype(np.float64)
-            )
-            r.pos += 16 * m
-        return gtype, rings
-    if gtype in (
-        wkb.MULTIPOINT, wkb.MULTILINESTRING, wkb.MULTIPOLYGON,
-        COMPOUNDCURVE, CURVEPOLYGON, MULTICURVE, MULTISURFACE,
-    ):
-        (n,) = struct.unpack_from(fmt + "I", r.buf, r.pos)
-        r.pos += 4
-        return gtype, [_rd_geom(r) for _ in range(n)]
-    raise ValueError(f"unsupported WKB geometry type {code}")
-
-
-def _parse(buf: bytes):
-    return _rd_geom(_Rd(bytes(buf)))
-
-
-def parse_curve(buf: bytes):
-    """WKB (linear OR curve types) → (type, payload) tree; curve
-    containers hold nested (type, payload) children."""
-    return _parse(buf)
 
 
 # ---------------------------------------------------------------------------
@@ -270,11 +205,8 @@ def linearize(
     (OGRGeometry::getLinearGeometry analog; arcs densified at ≤
     ``max_step_deg`` per segment, endpoints exact). Linear input
     passes through byte-identical."""
-    gtype, payload = _parse(buf)
-    if gtype in (
-        wkb.POINT, wkb.LINESTRING, wkb.POLYGON, wkb.MULTIPOINT,
-        wkb.MULTILINESTRING, wkb.MULTIPOLYGON,
-    ):
+    gtype, payload = wkb.parse(buf)
+    if gtype in wkb.LINEAR:
         return bytes(buf)
     step = np.radians(max_step_deg)
     if gtype in (CIRCULARSTRING, COMPOUNDCURVE):
@@ -290,24 +222,12 @@ def linearize(
         return wkb.multilinestring(
             [_linearize_curve_pts(t, pl, step) for t, pl in payload]
         )
-    if gtype == MULTISURFACE:
-        polys = []
-        for t, pl in payload:
-            if t == wkb.POLYGON:
-                polys.append(pl)
-            elif t == CURVEPOLYGON:
-                polys.append(
-                    [
-                        _linearize_curve_pts(rt, rpl, step)
-                        for rt, rpl in pl
-                    ]
-                )
-            else:
-                raise ValueError(
-                    f"MULTISURFACE member type {t} unsupported"
-                )
-        return wkb.multipolygon(polys)
-    raise ValueError(f"unsupported geometry type {gtype}")
+    # MULTISURFACE: members are POLYGON or CURVEPOLYGON (parse checks)
+    return wkb.multipolygon([
+        pl if t == wkb.POLYGON
+        else [_linearize_curve_pts(rt, rpl, step) for rt, rpl in pl]
+        for t, pl in payload
+    ])
 
 
 def linearize_udf(max_step_deg: float = DEFAULT_MAX_STEP_DEG):
@@ -360,7 +280,7 @@ def _member_wkt(t: int, payload) -> str:
 def wkt(buf: bytes) -> str:
     """Curve-aware ST_AsText: falls through to the linear writer for
     the six simple types."""
-    t, payload = _parse(buf)
+    t, payload = wkb.parse(buf)
     if t == CIRCULARSTRING:
         return f"CIRCULARSTRING ({_coords_wkt(payload)})"
     if t == COMPOUNDCURVE:

@@ -377,44 +377,26 @@ def rtree_search(
 # ---------------------------------------------------------------------------
 
 
-def _geom_fields(fb: _FBuilder, gwkb: bytes):
-    """WKB → Geometry-table field dict (built into fb)."""
-    gtype, payload = wkb.parse(gwkb)
-    gt = _GT_FROM_WKB[gtype]
-    fields: dict = {6: ("scalar", "B", gt)}
-    if gtype == wkb.POINT:
-        xy = np.array(payload, dtype="<f8")
-    elif gtype == wkb.LINESTRING:
-        xy = np.asarray(payload, dtype="<f8").ravel()
-    elif gtype == wkb.POLYGON:
-        rings = [np.asarray(r, dtype="<f8") for r in payload]
-        ends = np.cumsum([len(r) for r in rings]).astype("<u4")
-        xy = np.concatenate([r.ravel() for r in rings])
-        if len(rings) > 1:
-            fields[0] = (
-                "offset",
-                fb.vector(ends.tobytes(), 4, len(ends)),
-            )
-    elif gtype == wkb.MULTIPOINT:
-        xy = np.asarray(payload, dtype="<f8").ravel()
-    elif gtype == wkb.MULTILINESTRING:
-        lines = [np.asarray(ln, dtype="<f8") for ln in payload]
-        ends = np.cumsum([len(ln) for ln in lines]).astype("<u4")
-        xy = np.concatenate([ln.ravel() for ln in lines])
-        fields[0] = ("offset", fb.vector(ends.tobytes(), 4, len(ends)))
-    elif gtype == wkb.MULTIPOLYGON:
-        parts = [
-            fb.table(_geom_fields(fb, wkb.polygon(rings)))
+def _geom_fields(fb: _FBuilder, gtype: int, payload):
+    """Parsed linear geometry → Geometry-table field dict (built into
+    fb): flat xy, plus ring/line ``ends`` when there is more than one
+    sequence; a MultiPolygon nests one Geometry table per polygon."""
+    fields: dict = {6: ("scalar", "B", _GT_FROM_WKB[gtype])}
+    if gtype == wkb.MULTIPOLYGON:
+        polys = [
+            fb.table(_geom_fields(fb, wkb.POLYGON, rings))
             for rings in payload
         ]
-        fields[7] = ("offset", fb.table_vector(parts))
+        fields[7] = ("offset", fb.table_vector(polys))
         return fields
-    else:  # pragma: no cover
-        raise ValueError(f"unsupported geometry type {gtype}")
-    fields[1] = (
-        "offset",
-        fb.vector(xy.astype("<f8").tobytes(), 8, len(xy)),
-    )
+    seqs = wkb.parts(gtype, payload)
+    if gtype == wkb.MULTILINESTRING or (
+        gtype == wkb.POLYGON and len(seqs) > 1
+    ):
+        ends = np.cumsum([len(a) for a in seqs]).astype("<u4")
+        fields[0] = ("offset", fb.vector(ends.tobytes(), 4, len(ends)))
+    xy = np.concatenate([a.ravel() for a in seqs]).astype("<f8")
+    fields[1] = ("offset", fb.vector(xy.tobytes(), 8, len(xy)))
     return fields
 
 
@@ -458,25 +440,6 @@ def _geom_to_wkb(g: _FTable) -> bytes:
             a = int(e)
         return wkb.multilinestring(lines)
     raise ValueError(f"unsupported FlatGeobuf geometry type {gt}")
-
-
-def _wkb_bbox(gwkb: bytes) -> tuple[float, float, float, float]:
-    gtype, payload = wkb.parse(gwkb)
-    if gtype == wkb.POINT:
-        x, y = payload
-        return x, y, x, y
-    if gtype in (wkb.LINESTRING, wkb.MULTIPOINT):
-        a = np.asarray(payload, dtype=np.float64)
-    elif gtype == wkb.POLYGON:
-        a = np.vstack(payload)
-    elif gtype == wkb.MULTILINESTRING:
-        a = np.vstack(payload)
-    else:  # MULTIPOLYGON
-        a = np.vstack([r for rings in payload for r in rings])
-    return (
-        float(a[:, 0].min()), float(a[:, 1].min()),
-        float(a[:, 0].max()), float(a[:, 1].max()),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -572,8 +535,8 @@ def fgb_encode(
         if g is None:
             boxes[i] = (np.inf, np.inf, -np.inf, -np.inf)
         else:
-            boxes[i] = _wkb_bbox(g)
-            gts.add(wkb.parse(g)[0])
+            boxes[i] = wkb.bbox(g)  # raises ValueError on curve types
+            gts.add(wkb.header(g)[1])
     use_index = index and n > 0
     if use_index and any(g is None for g in geoms):
         # the reference writer refuses NULL geometry with a spatial
@@ -601,7 +564,7 @@ def fgb_encode(
         fields: dict = {}
         g = geoms[int(i)]
         if g is not None:
-            gf = _geom_fields(fb, g)
+            gf = _geom_fields(fb, *wkb.parse(g))
             fields[0] = ("offset", fb.table(gf))
         pb = _props_encode(records[int(i)], cols)
         if pb:
@@ -645,7 +608,8 @@ def fgb_encode(
 
 def _header_info(buf: bytes):
     """→ (cols, features_count, node_size, features_start, envelope)."""
-    assert bytes(buf[:3]) == b"fgb", "not a FlatGeobuf blob"
+    if bytes(buf[:3]) != b"fgb":
+        raise ValueError("not a FlatGeobuf blob: bad magic at byte offset 0")
     (hlen,) = struct.unpack_from("<I", buf, 8)
     h = _root(buf, 12)
     cols = [
@@ -739,7 +703,10 @@ def read_fgb(
     opener = opener or local_opener
     with opener(path) as f:
         head = f.read(12)
-        assert head[:3] == b"fgb", "not a FlatGeobuf file"
+        if head[:3] != b"fgb":
+            raise ValueError(
+                f"not a FlatGeobuf file: bad magic at byte offset 0 of {path}"
+            )
         (hlen,) = struct.unpack_from("<I", head, 8)
         header = f.read(hlen)
     buf = head + header
@@ -820,7 +787,7 @@ def read_fgb(
                         if g is None:
                             keep.append(False)
                             continue
-                        gx0, gy0, gx1, gy1 = _wkb_bbox(bytes(g))
+                        gx0, gy0, gx1, gy1 = wkb.bbox(bytes(g))
                         keep.append(
                             not (gx1 < bx0 or gx0 > bx1
                                  or gy1 < by0 or gy0 > by1)

@@ -40,83 +40,40 @@ from . import wkb as _wkb
 # --------------------------------------------------------------------------
 
 
+_GEOJSON_TYPES = {
+    "Point": _wkb.POINT,
+    "LineString": _wkb.LINESTRING,
+    "Polygon": _wkb.POLYGON,
+    "MultiPoint": _wkb.MULTIPOINT,
+    "MultiLineString": _wkb.MULTILINESTRING,
+    "MultiPolygon": _wkb.MULTIPOLYGON,
+}
+_GEOJSON_NAMES = {v: k for k, v in _GEOJSON_TYPES.items()}
+
+
+def _xy(positions) -> list[tuple[float, float]]:
+    """RFC 7946 positions → XY pairs (any altitude dropped)."""
+    return [(float(p[0]), float(p[1])) for p in positions]
+
+
 def geometry_to_wkb(geom: dict) -> bytes:
     t = geom["type"]
-    c = geom["coordinates"]
-    if t == "Point":
-        return _wkb.point(float(c[0]), float(c[1]))
-    if t == "LineString":
-        return _wkb.linestring([(float(x), float(y)) for x, y, *_ in c])
-    if t == "Polygon":
-        return _wkb.polygon(
-            [[(float(x), float(y)) for x, y, *_ in ring] for ring in c]
-        )
-    if t == "MultiPoint":
-        return _multi(_wkb.MULTIPOINT,
-                      [_wkb.point(float(p[0]), float(p[1])) for p in c])
-    if t == "MultiLineString":
-        return _multi(
-            _wkb.MULTILINESTRING,
-            [_wkb.linestring([(float(x), float(y)) for x, y, *_ in ls])
-             for ls in c],
-        )
-    if t == "MultiPolygon":
-        return _multi(
-            _wkb.MULTIPOLYGON,
-            [_wkb.polygon(
-                [[(float(x), float(y)) for x, y, *_ in ring]
-                 for ring in poly]
-            ) for poly in c],
-        )
-    raise ValueError(f"unsupported GeoJSON geometry type {t!r}")
-
-
-def _multi(code: int, parts: list[bytes]) -> bytes:
-    import struct
-
-    return (
-        b"\x01" + struct.pack("<I", code)
-        + struct.pack("<I", len(parts))
-        + b"".join(parts)
+    if t not in _GEOJSON_TYPES:
+        raise ValueError(f"unsupported GeoJSON geometry type {t!r}")
+    gtype = _GEOJSON_TYPES[t]
+    return _wkb.build(
+        gtype, _wkb.map_coords(gtype, geom["coordinates"], _xy)
     )
 
 
 def wkb_to_geometry(buf: bytes) -> dict:
     gtype, payload = _wkb.parse(bytes(buf))
-
-    def ring_list(rings):
-        return [[[float(x), float(y)] for x, y in np.asarray(r)]
-                for r in rings]
-
-    if gtype == _wkb.POINT:
-        return {"type": "Point", "coordinates": [payload[0], payload[1]]}
-    if gtype == _wkb.LINESTRING:
-        return {
-            "type": "LineString",
-            "coordinates": [[float(x), float(y)]
-                            for x, y in np.asarray(payload)],
-        }
-    if gtype == _wkb.POLYGON:
-        return {"type": "Polygon", "coordinates": ring_list(payload)}
-    if gtype == _wkb.MULTIPOINT:
-        return {
-            "type": "MultiPoint",
-            "coordinates": [[p[0], p[1]] for p in payload],
-        }
-    if gtype == _wkb.MULTILINESTRING:
-        return {
-            "type": "MultiLineString",
-            "coordinates": [
-                [[float(x), float(y)] for x, y in np.asarray(ls)]
-                for ls in payload
-            ],
-        }
-    if gtype == _wkb.MULTIPOLYGON:
-        return {
-            "type": "MultiPolygon",
-            "coordinates": [ring_list(poly) for poly in payload],
-        }
-    raise ValueError(f"unsupported WKB type {gtype}")
+    if gtype not in _GEOJSON_NAMES:
+        raise ValueError(f"unsupported WKB type {gtype}")
+    return {
+        "type": _GEOJSON_NAMES[gtype],
+        "coordinates": _wkb.map_coords(gtype, payload, np.ndarray.tolist),
+    }
 
 
 # --------------------------------------------------------------------------

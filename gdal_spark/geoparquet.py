@@ -50,37 +50,6 @@ _TYPE_NAMES = {
 }
 
 
-def wkb_bbox(buf: bytes) -> tuple[float, float, float, float]:
-    """(xmin, ymin, xmax, ymax) of any supported WKB geometry."""
-    gtype, payload = _wkb.parse(buf)
-
-    def _coords(gt, pl):
-        if gt == _wkb.POINT:
-            return [np.array([pl])]
-        if gt == _wkb.LINESTRING:
-            return [pl]
-        if gt == _wkb.POLYGON:
-            return pl
-        # multi*: element payloads keep their member type's shape
-        out = []
-        sub = {
-            _wkb.MULTIPOINT: _wkb.POINT,
-            _wkb.MULTILINESTRING: _wkb.LINESTRING,
-            _wkb.MULTIPOLYGON: _wkb.POLYGON,
-        }[gt]
-        for p in pl:
-            out.extend(_coords(sub, p))
-        return out
-
-    arrs = _coords(gtype, payload)
-    allc = np.vstack([np.asarray(a, dtype=np.float64).reshape(-1, 2)
-                      for a in arrs])
-    return (
-        float(allc[:, 0].min()), float(allc[:, 1].min()),
-        float(allc[:, 0].max()), float(allc[:, 1].max()),
-    )
-
-
 def geo_metadata(
     geometry_col: str,
     geometry_types: list[str],
@@ -135,9 +104,9 @@ def write_geoparquet(
         for buf in body[geometry_col]:
             if buf is None:
                 continue
-            gt, _ = _wkb.parse(bytes(buf))
-            types.add(_TYPE_NAMES[gt])
-            boxes.append(wkb_bbox(bytes(buf)))
+            # bbox first: it raises ValueError on curve types
+            boxes.append(_wkb.bbox(bytes(buf)))
+            types.add(_TYPE_NAMES[_wkb.header(bytes(buf))[1]])
         if boxes:
             bx = np.asarray(boxes, dtype=np.float64)
             bbox = (

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import geoparquet as _gpq
+from . import curves, wkb as _wkb
 
 _SQLITE_TO_SPARK = {
     "INTEGER": "long",
@@ -84,15 +84,12 @@ def gpb_to_wkb(blob: bytes) -> bytes:
 def wkb_to_gpb(wkb: bytes, srs_id: int = 0) -> bytes:
     """Plain WKB -> StandardGeoPackageBinary with the reference's
     writer conventions (GPkgGeometryFromOGR: little-endian header,
-    version 0, XY envelope for non-points, none for points;
-    envelope order minx, maxx, miny, maxy)."""
+    version 0, XY envelope for non-points, none for points of any
+    dimension; envelope order minx, maxx, miny, maxy)."""
     wkb = bytes(wkb)
-    is_point = wkb[1:5] in (
-        struct.pack("<I", 1), struct.pack(">I", 1)
-    )
     flags = 0x01  # little-endian header
     env = b""
-    if not is_point:
+    if _wkb.header(wkb)[1] != _wkb.POINT:
         x0, y0, x1, y1 = _curve_safe_bbox(wkb)
         flags |= 1 << 1  # envelope code 1 (XY)
         env = struct.pack("<4d", x0, x1, y0, y1)
@@ -100,18 +97,10 @@ def wkb_to_gpb(wkb: bytes, srs_id: int = 0) -> bytes:
 
 
 def _curve_safe_bbox(buf: bytes) -> tuple:
-    """Envelope of any supported WKB. Curve types (ISO codes 8-12)
-    densify FIRST — their control points do NOT bound arc bulges, so
-    a control-point envelope would be wrong; anything else
-    unsupported still raises loudly (no blanket except that would
-    let corrupt type words through)."""
-    fmt = "<" if buf[0] == 1 else ">"
-    (code,) = struct.unpack_from(fmt + "I", buf, 1)
-    if 8 <= (code & 0xFFFF) % 1000 <= 12:
-        from . import curves
-
-        return _gpq.wkb_bbox(curves.linearize(buf))
-    return _gpq.wkb_bbox(buf)
+    """Envelope of any supported WKB. Curve types densify FIRST —
+    their control points do NOT bound arc bulges, so a control-point
+    envelope would be wrong."""
+    return _wkb.bbox(curves.linearize(buf))
 
 
 # --------------------------------------------------------------------------

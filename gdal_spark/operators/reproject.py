@@ -43,112 +43,47 @@ def _densify(coords: np.ndarray, max_len: float) -> np.ndarray:
     return np.vstack(out)
 
 
-def _geom_coords(gt: int, payload, max_len: float):
-    """-> (list of coordinate arrays, rebuild closure)."""
-    if gt == _wkb.POINT:
-        arr = np.asarray([payload], dtype=np.float64)
-        return [arr], lambda parts: _wkb.point(
-            float(parts[0][0, 0]), float(parts[0][0, 1])
-        )
-    if gt == _wkb.LINESTRING:
-        arr = _densify(np.asarray(payload, dtype=np.float64), max_len)
-        return [arr], lambda parts: _wkb.linestring(parts[0].tolist())
-    if gt == _wkb.POLYGON:
-        rings = [
-            _densify(np.asarray(r, dtype=np.float64), max_len)
-            for r in payload
-        ]
-        return rings, lambda parts: _wkb.polygon(
-            [p.tolist() for p in parts]
-        )
-    if gt == _wkb.MULTIPOINT:
-        arr = np.asarray(payload, dtype=np.float64).reshape(-1, 2)
-        import struct
-
-        def rebuild(parts):
-            pts = parts[0]
-            return (
-                b"\x01"
-                + struct.pack("<II", _wkb.MULTIPOINT, len(pts))
-                + b"".join(
-                    _wkb.point(float(x), float(y)) for x, y in pts
-                )
-            )
-
-        return [arr], rebuild
-    if gt == _wkb.MULTILINESTRING:
-        lines = [
-            _densify(np.asarray(ls, dtype=np.float64), max_len)
-            for ls in payload
-        ]
-        import struct
-
-        def rebuild(parts):
-            return (
-                b"\x01"
-                + struct.pack("<II", _wkb.MULTILINESTRING, len(parts))
-                + b"".join(_wkb.linestring(p.tolist()) for p in parts)
-            )
-
-        return lines, rebuild
-    if gt == _wkb.MULTIPOLYGON:
-        flat: list[np.ndarray] = []
-        shape: list[int] = []
-        for poly in payload:
-            shape.append(len(poly))
-            for r in poly:
-                flat.append(
-                    _densify(np.asarray(r, dtype=np.float64), max_len)
-                )
-
-        def rebuild(parts):
-            polys = []
-            k = 0
-            for nr in shape:
-                polys.append([parts[k + j].tolist() for j in range(nr)])
-                k += nr
-            return _wkb.multipolygon(polys)
-
-        return flat, rebuild
-    raise ValueError(f"unsupported WKB type {gt}")
-
-
 def transform_wkb_batch(
     bufs: list[bytes | None], transform, densify_max_len: float = 0.0
 ) -> list[bytes | None]:
     """Apply ``transform(x, y) -> (X, Y)`` to a batch of WKB blobs
     with ONE vectorized call over every coordinate in the batch."""
-    parts_per_geom: list = []
-    rebuilds: list = []
+    geoms: list = []
     arrays: list[np.ndarray] = []
+
+    def densify(a):
+        a = _densify(np.asarray(a, dtype=np.float64), densify_max_len)
+        arrays.append(a)
+        return a
+
     for buf in bufs:
         if buf is None:
-            parts_per_geom.append(None)
-            rebuilds.append(None)
+            geoms.append(None)
             continue
         gt, payload = _wkb.parse(bytes(buf))
-        parts, rebuild = _geom_coords(gt, payload, densify_max_len)
-        parts_per_geom.append(parts)
-        rebuilds.append(rebuild)
-        arrays.extend(parts)
+        if gt not in _wkb.LINEAR:
+            raise ValueError(f"unsupported WKB type {gt}")
+        geoms.append((gt, _wkb.map_coords(gt, payload, densify)))
     if arrays:
         stacked = np.vstack(arrays)
         X, Y = transform(stacked[:, 0], stacked[:, 1])
         stacked = np.column_stack(
             [np.asarray(X, np.float64), np.asarray(Y, np.float64)]
         )
-    out: list[bytes | None] = []
     k = 0
-    for parts, rebuild in zip(parts_per_geom, rebuilds):
-        if parts is None:
-            out.append(None)
-            continue
-        new_parts = []
-        for p in parts:
-            new_parts.append(stacked[k : k + len(p)])
-            k += len(p)
-        out.append(rebuild(new_parts))
-    return out
+
+    def transformed(a):
+        # the same walk order as densify: each sequence takes the
+        # next len(a) rows of the transformed stack
+        nonlocal k
+        k += len(a)
+        return stacked[k - len(a): k]
+
+    return [
+        None if g is None
+        else _wkb.build(g[0], _wkb.map_coords(*g, transformed))
+        for g in geoms
+    ]
 
 
 def reproject_geometries(

@@ -202,7 +202,10 @@ def _pack_header(
 
 
 def _parse_header(h: bytes) -> dict:
-    assert h[:7] == MAGIC and h[7] == VERSION, "not a PMTiles v3 file"
+    if h[:7] != MAGIC or h[7] != VERSION:
+        raise ValueError(
+            "not a PMTiles v3 file: bad magic/version at byte offset 0"
+        )
     vals = struct.unpack_from("<QQQQQQQQQQQ", h, 8)
     return {
         "root_off": vals[0], "root_len": vals[1],
@@ -291,15 +294,29 @@ def pmtiles_encode(
     return hdr + root + meta + leaves + bytes(data)
 
 
+def _decompressor(hdr: dict, field: str):
+    """The decode a header compression field asks for: none or gzip;
+    any other codec raises."""
+    code = hdr[field]
+    if code == COMPRESSION_NONE:
+        return bytes
+    if code == COMPRESSION_GZIP:
+        return gzip.decompress
+    at = {"internal_compression": 97, "tile_compression": 98}[field]
+    raise ValueError(
+        f"PMTiles {field} at byte offset {at} is {code}: only none "
+        f"({COMPRESSION_NONE}) and gzip ({COMPRESSION_GZIP}) are read"
+    )
+
+
 def _all_entries(buf: bytes, hdr: dict) -> list[tuple[int, int, int, int]]:
     """Header + directories → every tile entry (leaf dirs resolved)."""
-    root = gzip.decompress(
-        buf[hdr["root_off"]: hdr["root_off"] + hdr["root_len"]]
-    )
+    unzip = _decompressor(hdr, "internal_compression")
+    root = unzip(buf[hdr["root_off"]: hdr["root_off"] + hdr["root_len"]])
     out = []
     for tid, off, ln, rl in parse_directory(root):
         if rl == 0:  # leaf pointer
-            leaf = gzip.decompress(
+            leaf = unzip(
                 buf[hdr["leaf_off"] + off: hdr["leaf_off"] + off + ln]
             )
             out.extend(parse_directory(leaf))
@@ -311,14 +328,13 @@ def _all_entries(buf: bytes, hdr: dict) -> list[tuple[int, int, int, int]]:
 def pmtiles_decode(buf: bytes) -> pd.DataFrame:
     """One archive → (z, tx, ty, data)."""
     hdr = _parse_header(buf[:HEADER_BYTES])
+    unzip = _decompressor(hdr, "tile_compression")
     rows = []
     for tid, off, ln, rl in _all_entries(buf, hdr):
+        data = unzip(buf[hdr["data_off"] + off: hdr["data_off"] + off + ln])
         for k in range(max(1, rl)):
             z, x, y = tileid_to_zxy(tid + k)
-            rows.append(
-                (z, x, y,
-                 buf[hdr["data_off"] + off: hdr["data_off"] + off + ln])
-            )
+            rows.append((z, x, y, data))
     return pd.DataFrame(rows, columns=["z", "tx", "ty", "data"])
 
 
@@ -335,7 +351,7 @@ def read_pmtiles(
     opener=None,
 ) -> DataFrame:
     """Ranged PMTiles scan: the driver reads the 127-byte header +
-    the gzipped directories (KBs — never a tile byte) and chunks the
+    the directories (KBs — never a tile byte) and chunks the
     entry list; executors seek-read their tile byte ranges. ``zoom``
     prunes entries by the tile-id interval of that zoom level before
     any read (the directory IS the index). ``opener`` (picklable
@@ -349,6 +365,7 @@ def read_pmtiles(
         f.seek(0)
         head_blob = f.read(hdr["data_off"])
     entries = _all_entries(head_blob, hdr)
+    unzip = _decompressor(hdr, "tile_compression")
     zrange = None
     if zoom is not None:
         zlo = ((1 << (2 * zoom)) - 1) // 3 if zoom else 0
@@ -395,7 +412,7 @@ def read_pmtiles(
                     blob = f.read(hi - lo)
                 rows = []
                 for tid, off, ln, rl in chunk:
-                    payload = blob[off - lo: off - lo + ln]
+                    payload = unzip(blob[off - lo: off - lo + ln])
                     for k in range(max(1, int(rl))):
                         t = int(tid) + k
                         if zrange is not None and not (

@@ -73,9 +73,7 @@ def shape_to_wkb(buf: bytes) -> bytes | None:
     if stype == MULTIPOINT:
         (n,) = struct.unpack_from("<i", buf, 36)
         pts = np.frombuffer(buf, "<f8", 2 * n, 40).reshape(n, 2)
-        return b"\x01" + struct.pack("<II", _wkb.MULTIPOINT, n) + b"".join(
-            _wkb.point(x, y) for x, y in pts
-        )
+        return _wkb.multipoint(pts)
     if stype in (POLYLINE, POLYGON):
         nparts, npoints = struct.unpack_from("<2i", buf, 36)
         parts = np.frombuffer(buf, "<i4", nparts, 44)
@@ -89,9 +87,7 @@ def shape_to_wkb(buf: bytes) -> bytes | None:
         if stype == POLYLINE:
             if nparts == 1:
                 return _wkb.linestring(rings[0])
-            return b"\x01" + struct.pack(
-                "<II", _wkb.MULTILINESTRING, nparts
-            ) + b"".join(_wkb.linestring(r) for r in rings)
+            return _wkb.multilinestring(rings)
         # polygon: organize rings (stored outer CW, holes CCW) and
         # normalize to the engine's WKB convention (outer CCW, holes
         # CW) — reversal preserves the first vertex of a closed ring,
@@ -144,8 +140,7 @@ def wkb_to_shape(wkb_buf: bytes | None) -> bytes:
         return rings
 
     if gt in (_wkb.LINESTRING, _wkb.MULTILINESTRING):
-        parts = [payload] if gt == _wkb.LINESTRING else payload
-        parts = [np.asarray(p, dtype=np.float64) for p in parts]
+        parts = _wkb.parts(gt, payload)
         stype = POLYLINE
     elif gt in (_wkb.POLYGON, _wkb.MULTIPOLYGON):
         polys = [payload] if gt == _wkb.POLYGON else payload
@@ -193,10 +188,7 @@ def _main_header(total_words: int, stype: int, bbox) -> bytes:
 def write_shp(geoms: list[bytes | None]) -> tuple[bytes, bytes]:
     """WKB list -> (.shp bytes, .shx bytes)."""
     payloads = [wkb_to_shape(g) for g in geoms]
-    # bbox over non-null
-    from . import geoparquet as _gpq
-
-    boxes = [_gpq.wkb_bbox(g) for g in geoms if g is not None]
+    boxes = [_wkb.bbox(g) for g in geoms if g is not None]
     bx = (
         np.asarray(boxes) if boxes else np.zeros((1, 4))
     )

@@ -1,12 +1,31 @@
-"""Minimal WKB encode/decode (little-endian, 2-D).
+"""WKB codec — the one module that knows the WKB format.
 
 The reference's Arrow export carries geometry as WKB binary
 (ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp geometry columns); the
 engine adopts the same at-rest representation: geometry is a
 ``BinaryType`` column, decoded to numpy coordinate arrays inside
-vectorized UDFs.  Supports the types the north rule needs: Point,
-LineString, Polygon (with holes), MultiPoint, MultiLineString,
-MultiPolygon.  No shapely dependency.
+vectorized UDFs. No shapely dependency.
+
+Read contract (:func:`parse`, :func:`header`):
+* ISO WKB and PostGIS EWKB, either byte order; an EWKB SRID word is
+  skipped;
+* any dimension — XY, Z, M or ZM, from the ISO 1000/2000/3000 type
+  offsets or the EWKB Z/M flag bits. Coordinates are read with a
+  stride of the dimension count and only X, Y are kept, as the
+  reference's linear pipelines flatten to 2-D (ogrgeometry.cpp
+  importFromWkb);
+* the linear types (Point, LineString, Polygon, MultiPoint,
+  MultiLineString, MultiPolygon) and the curve types (CircularString,
+  CompoundCurve, CurvePolygon, MultiCurve, MultiSurface — densified by
+  ``curves.linearize``);
+* anything else — a bad byte-order byte, an unknown type word, a
+  member type its collection cannot hold, a truncated buffer — raises
+  ``ValueError`` naming the field and byte offset.
+
+:func:`map_coords` / :func:`parts` / :func:`bbox` are the one walk
+over a parsed geometry's vertices. The writers emit little-endian 2-D
+WKB; :func:`build` is the inverse of :func:`parse` for the linear
+types.
 """
 
 from __future__ import annotations
@@ -21,6 +40,14 @@ POLYGON = 3
 MULTIPOINT = 4
 MULTILINESTRING = 5
 MULTIPOLYGON = 6
+CIRCULARSTRING = 8
+COMPOUNDCURVE = 9
+CURVEPOLYGON = 10
+MULTICURVE = 11
+MULTISURFACE = 12
+
+LINEAR = (POINT, LINESTRING, POLYGON, MULTIPOINT, MULTILINESTRING,
+          MULTIPOLYGON)
 
 _LE = 1
 
@@ -73,6 +100,57 @@ def multilinestring(lines) -> bytes:
     return b"".join(out)
 
 
+# collection type -> the member types it may hold
+_MEMBERS = {
+    MULTIPOINT: (POINT,),
+    MULTILINESTRING: (LINESTRING,),
+    MULTIPOLYGON: (POLYGON,),
+    COMPOUNDCURVE: (LINESTRING, CIRCULARSTRING),
+    CURVEPOLYGON: (LINESTRING, CIRCULARSTRING, COMPOUNDCURVE),
+    MULTICURVE: (LINESTRING, CIRCULARSTRING, COMPOUNDCURVE),
+    MULTISURFACE: (POLYGON, CURVEPOLYGON),
+}
+
+# EWKB (PostGIS) flag bits on the type word
+_EWKB_Z = 0x80000000
+_EWKB_M = 0x40000000
+_EWKB_SRID = 0x20000000
+
+
+def _truncated(field: str, pos: int, need: int, have: int):
+    return ValueError(
+        f"WKB truncated: {field} at byte offset {pos} needs {need} "
+        f"bytes, {have} left"
+    )
+
+
+def header(buf: bytes, pos: int = 0) -> tuple[str, int, int, bool]:
+    """Decode the WKB header (byte-order byte + type word) at ``pos``
+    → (struct byte-order prefix, base type, dims, EWKB SRID flag).
+
+    dims is 2, 3 or 4: Z and M come from the ISO 1000/2000/3000 type
+    offsets or the EWKB Z/M flag bits."""
+    if len(buf) - pos < 5:
+        raise _truncated("header", pos, 5, len(buf) - pos)
+    order = buf[pos]
+    if order not in (0, 1):
+        raise ValueError(
+            f"WKB byte order at byte offset {pos} is {order}, not 0 or 1"
+        )
+    fmt = "<" if order == 1 else ">"
+    (code,) = struct.unpack_from(fmt + "I", buf, pos + 1)
+    iso, gtype = divmod(code & ~(_EWKB_Z | _EWKB_M | _EWKB_SRID), 1000)
+    # 7 (GeometryCollection) is not read
+    if iso > 3 or gtype in (0, 7) or gtype > MULTISURFACE:
+        raise ValueError(
+            f"WKB type word at byte offset {pos + 1}: unsupported "
+            f"geometry type {code}"
+        )
+    has_z = bool(code & _EWKB_Z) or iso in (1, 3)
+    has_m = bool(code & _EWKB_M) or iso in (2, 3)
+    return fmt, gtype, 2 + has_z + has_m, bool(code & _EWKB_SRID)
+
+
 class _Reader:
     __slots__ = ("buf", "pos")
 
@@ -80,71 +158,130 @@ class _Reader:
         self.buf = buf
         self.pos = 0
 
-    def u8(self) -> int:
-        v = self.buf[self.pos]
-        self.pos += 1
-        return v
+    def take(self, n: int, field: str) -> int:
+        """Claim the next ``n`` bytes for ``field``; → their offset."""
+        pos = self.pos
+        if len(self.buf) - pos < n:
+            raise _truncated(field, pos, n, len(self.buf) - pos)
+        self.pos = pos + n
+        return pos
 
-    def u32(self, fmt: str) -> int:
-        v = struct.unpack_from(fmt + "I", self.buf, self.pos)[0]
-        self.pos += 4
-        return v
+    def u32(self, fmt: str, field: str) -> int:
+        return struct.unpack_from(fmt + "I", self.buf, self.take(4, field))[0]
 
-    def coords(self, n: int, fmt: str) -> np.ndarray:
-        arr = np.frombuffer(
-            self.buf, dtype=(fmt + "f8"), count=2 * n, offset=self.pos
-        ).reshape(n, 2)
-        self.pos += 16 * n
-        return np.asarray(arr, dtype=np.float64)
-
-
-def _geom_type(code: int) -> int:
-    # strip EWKB dimension flag bits (0x80000000 Z, 0x40000000 M,
-    # 0x20000000 SRID) then the ISO Z/M/ZM offsets (1000/2000/3000)
-    return (code & 0x0FFFFFFF) % 1000
+    def coords(self, fmt: str, dims: int, n: int, field: str) -> np.ndarray:
+        """n vertices of ``dims`` doubles each → (n, 2) XY."""
+        off = self.take(8 * dims * n, field)
+        arr = np.frombuffer(self.buf, fmt + "f8", dims * n, off)
+        return np.ascontiguousarray(
+            arr.reshape(n, dims)[:, :2], dtype=np.float64
+        )
 
 
 def parse(buf: bytes):
-    """Parse WKB → (type_code, payload).
+    """Parse WKB → (type_code, payload), XY only.
 
-    Point       → (POINT, (x, y))
-    LineString  → (LINESTRING, (M,2) array)
-    Polygon     → (POLYGON, [rings])
-    Multi*      → (type, [payloads])
+    Point                      → (POINT, (x, y))
+    LineString/CircularString  → (type, (M,2) array)
+    Polygon                    → (POLYGON, [rings])
+    MultiPoint/-LineString/-Polygon → (type, [member payloads])
+    CompoundCurve/CurvePolygon/MultiCurve/MultiSurface
+                               → (type, [(member type, payload)])
     """
-    r = _Reader(bytes(buf))
-    return _parse_geom(r)
+    return _parse_geom(_Reader(bytes(buf)))
 
 
-def _parse_geom(r: _Reader):
-    byte_order = r.u8()
-    fmt = "<" if byte_order == 1 else ">"
-    code = r.u32(fmt)
-    if code & 0x20000000:
-        # EWKB SRID flag (PostGIS): a 4-byte SRID follows the type
-        # word before any coordinates — consume it, else the SRID
-        # bytes would be read as the first coordinate.
-        r.u32(fmt)
-    gtype = _geom_type(code)
+def _parse_geom(r: _Reader, allowed: tuple = ()):
+    at = r.pos
+    fmt, gtype, dims, has_srid = header(r.buf, at)
+    if allowed and gtype not in allowed:
+        raise ValueError(
+            f"WKB type word at byte offset {at + 1}: member type "
+            f"{gtype} not allowed here"
+        )
+    r.pos += 5
+    if has_srid:
+        r.take(4, "SRID")
     if gtype == POINT:
-        x, y = struct.unpack_from(fmt + "dd", r.buf, r.pos)
-        r.pos += 16
-        return POINT, (x, y)
-    if gtype == LINESTRING:
-        n = r.u32(fmt)
-        return LINESTRING, r.coords(n, fmt)
+        return POINT, tuple(r.coords(fmt, dims, 1, "point")[0].tolist())
+    if gtype in (LINESTRING, CIRCULARSTRING):
+        n = r.u32(fmt, "point count")
+        return gtype, r.coords(fmt, dims, n, "coordinates")
     if gtype == POLYGON:
-        nrings = r.u32(fmt)
         rings = []
-        for _ in range(nrings):
-            n = r.u32(fmt)
-            rings.append(r.coords(n, fmt))
+        for _ in range(r.u32(fmt, "ring count")):
+            n = r.u32(fmt, "ring point count")
+            rings.append(r.coords(fmt, dims, n, "ring coordinates"))
         return POLYGON, rings
+    members = [
+        _parse_geom(r, _MEMBERS[gtype])
+        for _ in range(r.u32(fmt, "member count"))
+    ]
     if gtype in (MULTIPOINT, MULTILINESTRING, MULTIPOLYGON):
-        n = r.u32(fmt)
-        parts = [_parse_geom(r)[1] for _ in range(n)]
-        return gtype, parts
-    raise ValueError(f"unsupported WKB geometry type {code}")
+        return gtype, [payload for _, payload in members]
+    return gtype, members
+
+
+def map_coords(gtype: int, payload, fn):
+    """The one vertex walk: rebuild a parsed payload with every
+    coordinate sequence ``a`` replaced by ``fn(a)``. A point passes as
+    a one-row array and keeps row 0 of the result."""
+    if gtype == POINT:
+        return fn(np.array([payload], dtype=np.float64))[0]
+    if gtype in (LINESTRING, CIRCULARSTRING):
+        return fn(payload)
+    if gtype == POLYGON:
+        return [fn(ring) for ring in payload]
+    if gtype in (MULTIPOINT, MULTILINESTRING, MULTIPOLYGON):
+        return [map_coords(_MEMBERS[gtype][0], p, fn) for p in payload]
+    return [(t, map_coords(t, p, fn)) for t, p in payload]
+
+
+def parts(gtype: int, payload) -> list[np.ndarray]:
+    """Every coordinate sequence of a parsed geometry as an (M, 2)
+    array, in WKB order."""
+    out: list[np.ndarray] = []
+
+    def keep(a):
+        out.append(np.asarray(a, dtype=np.float64))
+        return a
+
+    map_coords(gtype, payload, keep)
+    return out
+
+
+def bbox(buf: bytes) -> tuple[float, float, float, float]:
+    """(xmin, ymin, xmax, ymax) of a linear geometry. Curve types
+    raise: their control points do not bound the arcs, so linearize
+    them first (``curves.linearize``)."""
+    gtype, payload = parse(buf)
+    if gtype not in LINEAR:
+        raise ValueError(
+            f"bbox of curve geometry type {gtype}: linearize it first"
+        )
+    a = np.vstack(parts(gtype, payload))
+    return (
+        float(a[:, 0].min()), float(a[:, 1].min()),
+        float(a[:, 0].max()), float(a[:, 1].max()),
+    )
+
+
+def build(gtype: int, payload) -> bytes:
+    """Inverse of :func:`parse` for the linear types (2-D,
+    little-endian)."""
+    if gtype not in _BUILDERS:
+        raise ValueError(f"cannot build WKB geometry type {gtype}")
+    return _BUILDERS[gtype](payload)
+
+
+_BUILDERS = {
+    POINT: lambda p: point(float(p[0]), float(p[1])),
+    LINESTRING: linestring,
+    POLYGON: polygon,
+    MULTIPOINT: multipoint,
+    MULTILINESTRING: multilinestring,
+    MULTIPOLYGON: multipolygon,
+}
 
 
 def polygon_rings(buf: bytes) -> list[list[np.ndarray]]:

@@ -138,11 +138,11 @@ def test_linear_passthrough_byte_identical():
 def test_curve_codec_round_trip_tree():
     s = np.sqrt(0.5)
     cs = curves.circularstring([[1, 0], [s, s], [0, 1]])
-    t, pts = curves.parse_curve(cs)
+    t, pts = wkb.parse(cs)
     assert t == curves.CIRCULARSTRING
     assert np.allclose(pts, [[1, 0], [s, s], [0, 1]])
     cc = curves.compoundcurve([wkb.linestring([[0, 1], [1, 0]]), cs][::-1])
-    t2, kids = curves.parse_curve(cc)
+    t2, kids = wkb.parse(cc)
     assert t2 == curves.COMPOUNDCURVE and len(kids) == 2
     assert kids[0][0] == curves.CIRCULARSTRING
     assert kids[1][0] == wkb.LINESTRING

@@ -29,14 +29,14 @@ def _geoms_df(spark):
 
 
 def test_wkb_bbox_all_types():
-    assert gpq.wkb_bbox(wkb.point(2.0, 3.0)) == (2.0, 3.0, 2.0, 3.0)
-    assert gpq.wkb_bbox(
+    assert wkb.bbox(wkb.point(2.0, 3.0)) == (2.0, 3.0, 2.0, 3.0)
+    assert wkb.bbox(
         wkb.linestring([(0.0, 1.0), (4.0, -2.0)])
     ) == (0.0, -2.0, 4.0, 1.0)
-    assert gpq.wkb_bbox(
+    assert wkb.bbox(
         wkb.polygon([[(0, 0), (2, 0), (2, 2), (0, 2), (0, 0)]])
     ) == (0.0, 0.0, 2.0, 2.0)
-    assert gpq.wkb_bbox(
+    assert wkb.bbox(
         wkb.multipolygon(
             [[[(5, 5), (6, 5), (6, 6), (5, 6), (5, 5)]],
              [[(7, 7), (9, 7), (9, 9), (7, 9), (7, 7)]]]

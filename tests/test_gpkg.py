@@ -110,15 +110,13 @@ def test_ranged_scan_equals_file_scan(spark, tmp_path):
 
 def test_downstream_composition(spark, tmp_path):
     """GPKG -> WKB column feeds the existing geometry machinery."""
-    from gdal_spark import geoparquet as gpq
-
     out = str(tmp_path / "gp2")
     manifest = gpkg.write_gpkg_dir(
         _feature_df(spark, 8).coalesce(1), out
     ).toPandas()
     back = gpkg.read_gpkg(spark, [manifest["path"].iloc[0]], "features")
     boxes = [
-        gpq.wkb_bbox(bytes(r["geometry"]))
+        wkb.bbox(bytes(r["geometry"]))
         for r in back.collect()
     ]
     assert len(boxes) == 8

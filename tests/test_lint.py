@@ -2,6 +2,7 @@
 per-row Python on the hot path — Arrow-batched pandas UDFs only — and
 never drop to RDDs."""
 
+import ast
 import pathlib
 import re
 
@@ -78,4 +79,16 @@ def test_iterrows_only_on_tile_cardinality():
         for i, line in enumerate(p.read_text().splitlines(), 1):
             if "iterrows" in line or "itertuples" in line:
                 offenders.append(f"{p.name}:{i}")
+    assert not offenders, offenders
+
+
+def test_no_assert_in_engine():
+    """Engine code validates input with exceptions, never `assert`:
+    `python -O` strips asserts, so the check would silently vanish."""
+    offenders = [
+        f"{p.name}:{node.lineno}"
+        for p in _sources()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Assert)
+    ]
     assert not offenders, offenders

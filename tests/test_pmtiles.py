@@ -216,3 +216,67 @@ def test_run_length_crossing_zoom_boundary(spark, tmp_path):
         for r in z2.itertuples(index=False)
     ) == [5, 6]
     assert all(bytes(d) == payload for d in z2["data"])
+
+
+def _hand_archive(payloads, internal, tile):
+    """Archive of z1 tiles ids 1.. with the given header compression
+    codes; directories and payloads stored as those codes say."""
+    pack = {pmtiles.COMPRESSION_NONE: bytes,
+            pmtiles.COMPRESSION_GZIP: lambda b: gzip.compress(b, mtime=0)}
+    blobs = [pack[tile](p) for p in payloads]
+    entries, off = [], 0
+    for i, b in enumerate(blobs):
+        entries.append((1 + i, off, len(b), 1))
+        off += len(b)
+    root = pack[internal](pmtiles.serialize_directory(entries))
+    meta = pack[internal](b"{}")
+    root_off = pmtiles.HEADER_BYTES
+    meta_off = root_off + len(root)
+    data_off = meta_off + len(meta)
+    hdr = bytearray(pmtiles._pack_header(
+        root_off, len(root), meta_off, len(meta), data_off, 0,
+        data_off, off, len(blobs), len(blobs), len(blobs),
+        pmtiles.TILE_TYPE["mvt"], 1, 1, (-180.0, -85.0, 180.0, 85.0),
+    ))
+    hdr[97], hdr[98] = internal, tile
+    return bytes(hdr) + root + meta + b"".join(blobs)
+
+
+PAYLOADS = [b"tile-one", b"tile-two" * 5, b"tile-three"]
+
+
+def test_uncompressed_directories_decode():
+    buf = _hand_archive(PAYLOADS, pmtiles.COMPRESSION_NONE,
+                        pmtiles.COMPRESSION_NONE)
+    out = pmtiles.pmtiles_decode(buf)
+    assert [bytes(d) for d in out["data"]] == PAYLOADS
+    assert out["z"].tolist() == [1, 1, 1]
+
+
+def test_gzip_tiles_decode(spark, tmp_path):
+    buf = _hand_archive(PAYLOADS, pmtiles.COMPRESSION_GZIP,
+                        pmtiles.COMPRESSION_GZIP)
+    assert [bytes(d) for d in pmtiles.pmtiles_decode(buf)["data"]] == PAYLOADS
+    p = str(tmp_path / "gz.pmtiles")
+    open(p, "wb").write(buf)
+    back = pmtiles.read_pmtiles(spark, p).toPandas()
+    got = {
+        pmtiles.zxy_to_tileid(int(r.z), int(r.tx), int(r.ty)): bytes(r.data)
+        for r in back.itertuples(index=False)
+    }
+    assert got == {1 + i: p for i, p in enumerate(PAYLOADS)}
+
+
+@pytest.mark.parametrize("field,at", [("internal_compression", 97),
+                                      ("tile_compression", 98)])
+def test_unknown_compression_raises(field, at):
+    buf = bytearray(_hand_archive(PAYLOADS, pmtiles.COMPRESSION_NONE,
+                                  pmtiles.COMPRESSION_NONE))
+    buf[at] = 3  # brotli
+    with pytest.raises(ValueError, match=field):
+        pmtiles.pmtiles_decode(bytes(buf))
+
+
+def test_bad_magic_raises_value_error():
+    with pytest.raises(ValueError, match="PMTiles"):
+        pmtiles.pmtiles_decode(b"NOTPMTILES" + bytes(200))

@@ -68,18 +68,6 @@ def test_big_endian_parse():
     assert t == wkb.POINT and (x, y) == (3.0, 4.0)
 
 
-def test_iso_z_type_codes_stripped():
-    import struct
-
-    # ISO WKB Polygon Z = 1003; we only read XY here but type must map
-    buf = struct.pack("<BII", 1, 1001, 0)  # PointZ header (no coords read)
-    # PointZ would carry 3 doubles; our parser reads 2 — only assert the
-    # type mapping helper
-    assert wkb._geom_type(1003) == wkb.POLYGON
-    assert wkb._geom_type(3006) == wkb.MULTIPOLYGON
-    assert wkb._geom_type(1) == wkb.POINT
-
-
 def test_ewkb_srid_flag_consumes_srid_word():
     """PostGIS EWKB sets 0x20000000 on the type word and inserts a
     4-byte SRID before the coordinates; the parser must skip it (the
@@ -107,3 +95,39 @@ def test_ewkb_srid_flag_consumes_srid_word():
     assert gt == wkb.POLYGON
     assert len(rings) == 1 and len(rings[0]) == 4
     assert rings[0][1][0] == 4.0
+
+
+def test_bad_byte_order_raises():
+    buf = bytearray(wkb.point(1.0, 2.0))
+    buf[0] = 2
+    with pytest.raises(ValueError, match="byte order at byte offset 0"):
+        wkb.parse(bytes(buf))
+    # a nested member's byte order is checked too
+    mp = bytearray(wkb.multipoint([[1.0, 2.0]]))
+    mp[9] = 7
+    with pytest.raises(ValueError, match="byte order at byte offset 9"):
+        wkb.parse(bytes(mp))
+
+
+def test_truncated_buffer_names_field_and_offset():
+    with pytest.raises(ValueError, match="point count at byte offset 5"):
+        wkb.parse(b"\x01\x02\x00\x00\x00")
+    with pytest.raises(ValueError, match="header at byte offset 0"):
+        wkb.parse(b"")
+
+
+def test_unknown_type_word_raises():
+    import struct
+
+    for code in (0, 7, 13, 4001, 0x10000001):
+        with pytest.raises(ValueError, match="type word at byte offset 1"):
+            wkb.parse(struct.pack("<BI", 1, code) + bytes(32))
+
+
+def test_member_type_must_fit_collection():
+    import struct
+
+    # a MULTIPOLYGON whose member is a POINT
+    bad = struct.pack("<BII", 1, wkb.MULTIPOLYGON, 1) + wkb.point(1, 2)
+    with pytest.raises(ValueError, match="member type 1 not allowed"):
+        wkb.parse(bad)
