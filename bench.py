@@ -6,9 +6,10 @@ JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Headline set = the north-rule operators (spatial join / PIP, kNN, tile
-assignment) plus the relational + dedup/similarity workhorses, so the
-number tracks the full engine, not one hot path.
+Headline set = the ``bench=True`` rows of ``__spark_entry__.QUERIES``
+in table order: the north-rule operators (spatial join / PIP, kNN, tile
+assignment) plus the raster, relational and dedup/similarity
+workhorses, so the number tracks the full engine, not one hot path.
 
 Each query is forced with a count() (no driver-side collect of payloads);
 timings are wall-clock per query, value = total.
@@ -24,97 +25,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    # north-rule spatial core
-    "sp_pip_engine",
-    "sp_pip_count",
-    "sp_knn_df",
-    "sp_cell_encode",
-    "sp_tile_assign",
-    "sp_grid_metrics",
-    "sp_utm_transform",
-    "sp_idw_grid",
-    # vector geometry / layer algebra
-    "geo_layer_algebra",
-    "geo_layer_algebra_big",
-    "geo_st_predicates",
-    "geo_curve_linearize",
-    "geo_clip_lines",
-    "geo_area_geodesic",
-    # raster / tiling
-    "rs_pyramid_checksum",
-    "rs_warp_nearest",
-    "rs_warp_bilinear",
-    "rs_warp_cubic",
-    "rs_warp_utm",
-    "rs_warp_lcc",
-    "rs_warp_aggregate",
-    "rs_overview_resamplers",
-    "rs_contour_lines",
-    "rs_contour_polygons",
-    "rs_polygonize",
-    "rs_grid_linear",
-    "rs_burn_lines",
-    "rs_fill_all_touched",
-    "rs_rasterize_add",
-    "rs_band_stats",
-    "rs_vrt_pixfn",
-    "rs_dem_focal",
-    "rs_viewshed",
-    "sp_utm_inverse",
-    # relational spine (incl. the OGR SQL front-end)
-    "q1_pricing_summary",
-    "q3_shipping_topk",
-    "q5_local_supplier",
-    "q_ogr_sql",
-    "q_sql_st_funcs",
-    "q_sql_spatial_join",
-    "q_sessionize",
-    # vector aggregate union + constructive ops via SQL
-    "geo_dissolve",
-    "geo_buffer_makevalid",
-    # GCP polynomial point probe (pure codegen)
-    "sp_gcp_poly",
-    # ED50->WGS84 datum shift (ECEF + Helmert + Bowring in mapInPandas)
-    "sp_datum_shift",
-    # container source round trips (WARC sf-sized; GeoTIFF COG path)
-    "src_warc",
-    "src_gtiff",
-    # training-data pipeline ops
-    "dd_exact_prefix",
-    "dd_minhash_lsh",
-    "dd_dup_clusters",
-    "dd_substring_spans",
-    "dd_contamination",
-    "tx_token_count",
-    "tx_repetition",
-    "tx_web_clean",
-    "tx_html_extract",
-    "dd_line_dedup",
-    "sim_cosine_topk",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "dd_sample_mixture",
-    # round-4 additions: GDAL-exact checksum reduce, pansharpen,
-    # median-cut PCT (bench-only; exactness pinned in pytest)
-    "rs_checksum_gdal",
-    "rs_pansharpen",
-    "rs_pct_map",
-    # the reference's own ogr2ogr benchmark rig (50k-feature 20-field
-    # point GPKG -> GPKG translate; autotest/benchmark/test_ogr2ogr.py)
-    "src_gpkg_copy",
-    "src_fgb_copy",
-    # BPE train (bounded histogram) + encode over the documents table
-    "tx_bpe",
-    # trigram stupid-backoff perplexity via the unbounded join path
-    "tx_perplexity",
-    # container sinks: COG with embedded overviews, MBTiles, PMTiles
-    "snk_cog",
-    "snk_mbtiles",
-    "snk_pmtiles",
-]
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -127,16 +37,13 @@ def main() -> int:
     from gdal_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
-    # all_queries: the bench may time gates retired from the driver's
-    # capped correctness list (e.g. sp_pip_engine)
-    qs = entry_mod.all_queries()
+    qs = entry_mod.bench_queries()
 
     timings: dict[str, float] = {}
     # warm the JVM + parquet footers once so q1 isn't charged for startup
     entry_mod._t(spark, sf_dir, "lineitem").count()
 
-    for name in HEADLINE:
-        fn = qs[name]
+    for name, fn in qs.items():
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         n = df.count()

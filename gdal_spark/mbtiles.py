@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from . import mercator
 
@@ -96,9 +97,10 @@ def write_mbtiles(
     ``2**z - 1 - ty`` (mbtilesdataset.cpp does the same flip).
 
     ``group_col=None`` → ONE file at path ``out``. Otherwise ``out``
-    is a directory and each distinct ``group_col`` value becomes
-    ``out/part-<key>.mbtiles`` written in parallel (the granule
-    pattern shared with write_gtiff_dir/write_gpkg_dir).
+    is a directory and each distinct value of the integral
+    ``group_col`` becomes ``out/part-<key>.mbtiles`` written in
+    parallel (the granule pattern shared with
+    write_gtiff_dir/write_gpkg_dir).
 
     Returns the manifest (path, n_tiles, minzoom, maxzoom, n_bytes,
     md5); deterministic bytes per granule content (rows sorted,
@@ -118,6 +120,12 @@ def write_mbtiles(
                     exist_ok=True)
         src = tiles.select(F.lit(0).cast("long").alias("__key"), *need)
     else:
+        key_type = tiles.schema[group_col].dataType
+        if not isinstance(key_type, IntegralType):
+            raise ValueError(
+                f"group_col {group_col!r} must be an integral column, "
+                f"got {key_type.simpleString()}"
+            )
         os.makedirs(out, exist_ok=True)
         src = tiles.select(
             F.col(group_col).cast("long").alias("__key"), *need

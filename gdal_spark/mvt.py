@@ -445,9 +445,10 @@ def write_tiles_mvt(
             parts: list[np.ndarray] = []
             ftype = None
             lo, hi = -pad_units, extent + pad_units
-            if gt == _wkb.POINT:
+            if gt in (_wkb.POINT, _wkb.MULTIPOINT):
                 pt = _tile_local(
-                    np.array([payload]), tx, ty_tms, zoom, extent
+                    np.vstack(_wkb.parts(gt, payload)),
+                    tx, ty_tms, zoom, extent,
                 )
                 keep = (
                     (pt[:, 0] >= lo) & (pt[:, 0] <= hi)

@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from .fgb import hilbert_d
 
@@ -434,9 +435,17 @@ def write_pmtiles_dir(
     fmt: str = "png",
     group_col: str | None = None,
 ) -> DataFrame:
-    """Granule-parallel sink: one .pmtiles archive per group (or per
-    partition), encoded inside the task from (z, tx, ty, data) rows.
-    Manifest (path, n_tiles). Shared-FS contract."""
+    """Granule-parallel sink: one .pmtiles archive per value of the
+    integral ``group_col`` (or per partition), encoded inside the task
+    from (z, tx, ty, data) rows. Manifest (path, n_tiles). Shared-FS
+    contract."""
+    if group_col is not None:
+        key_type = df.schema[group_col].dataType
+        if not isinstance(key_type, IntegralType):
+            raise ValueError(
+                f"group_col {group_col!r} must be an integral column, "
+                f"got {key_type.simpleString()}"
+            )
     os.makedirs(out_dir, exist_ok=True)
     if group_col is None:
         src = df.withColumn("__g", F.spark_partition_id())

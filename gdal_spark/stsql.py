@@ -300,34 +300,11 @@ def register_st_functions(spark) -> list[str]:
         for b, s, d in zip(g, src, dst):
             tf = crs_transform(str(s), str(d))
             gtype, payload = wkb.parse(bytes(b))
-            if gtype == wkb.POINT:
-                X, Y = tf(
-                    np.asarray([payload[0]]), np.asarray([payload[1]])
-                )
-                out.append(wkb.point(float(X[0]), float(Y[0])))
-            elif gtype == wkb.LINESTRING:
-                arr = np.asarray(payload)
-                X, Y = tf(arr[:, 0], arr[:, 1])
-                out.append(wkb.linestring(np.column_stack([X, Y])))
-            elif gtype == wkb.POLYGON:
-                rings = []
-                for r in payload:
-                    r = np.asarray(r)
-                    X, Y = tf(r[:, 0], r[:, 1])
-                    rings.append(np.column_stack([X, Y]))
-                out.append(wkb.polygon(rings))
-            elif gtype == wkb.MULTIPOLYGON:
-                polys = []
-                for rings_in in payload:
-                    rings = []
-                    for r in rings_in:
-                        r = np.asarray(r)
-                        X, Y = tf(r[:, 0], r[:, 1])
-                        rings.append(np.column_stack([X, Y]))
-                    polys.append(rings)
-                out.append(wkb.multipolygon(polys))
-            else:
-                raise ValueError(f"unsupported geometry type {gtype}")
+            # curve types parse but wkb.build raises ValueError on them
+            out.append(wkb.build(gtype, wkb.map_coords(
+                gtype, payload,
+                lambda a: np.column_stack(tf(a[:, 0], a[:, 1])),
+            )))
         return pd.Series(out, dtype="object")
 
     reg("st_transform", _transform_udf)

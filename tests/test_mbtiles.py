@@ -10,6 +10,7 @@ import sqlite3
 import numpy as np
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from gdal_spark import mbtiles
 from gdal_spark.png import png_encode
@@ -120,6 +121,15 @@ def test_group_col_shards(spark, tmp_path):
         meta = mbtiles.mbtiles_metadata(m.path)
         assert meta["minzoom"] == meta["maxzoom"]
 
+
+
+def test_group_col_must_be_integral(spark, tmp_path):
+    # a string key used to cast to NULL, merge every row into one
+    # granule and then fail with a TypeError
+    df = _tiles_df(spark).withColumn("zs", F.col("z").cast("string"))
+    with pytest.raises(ValueError, match="'zs'.*integral.*string"):
+        mbtiles.write_mbtiles(df, str(tmp_path / "s"), group_col="zs")
+    assert not os.path.exists(tmp_path / "s")
 
 def test_deterministic_rerun_bytes(spark, tmp_path):
     df = _tiles_df(spark)

@@ -155,6 +155,31 @@ def test_distributed_mvt_sink(spark, tmp_path):
     assert ring.min() >= -64 and ring.max() <= 4096 + 64
 
 
+
+def test_multipoint_is_one_point_feature(spark, tmp_path):
+    """A MultiPoint row becomes one MVT POINT feature carrying all of
+    its members (it was skipped before: only POINT was encoded)."""
+    out = str(tmp_path / "mvt_mp")
+    zoom = 6
+    members = [(10.0, 20.0), (10.01, 20.01), (10.02, 19.99)]
+    df = spark.createDataFrame(
+        [(7, wkb.multipoint(members))], "fid long, geometry binary"
+    )
+    manifest = mvt.write_tiles_mvt(df, out, zoom, id_col="fid").toPandas()
+    assert (manifest["n_features"] == 1).all()
+    mx, my = mercator.lat_lon_to_meters(
+        np.array([10.0]), np.array([20.0])
+    )
+    tx, ty_tms = mercator.meters_to_tile(mx, my, zoom)
+    ty_xyz = (1 << zoom) - 1 - int(ty_tms[0])
+    path = os.path.join(out, str(zoom), str(int(tx[0])), f"{ty_xyz}.mvt")
+    (feat,) = mvt.decode_tile(open(path, "rb").read())[0]["features"]
+    assert feat["type"] == mvt.POINT and feat["id"] == 7
+    want = mvt._tile_local(
+        np.array(members), int(tx[0]), int(ty_tms[0]), zoom, 4096
+    )
+    np.testing.assert_array_equal(np.vstack(feat["parts"]), want)
+
 def test_polygon_spanning_tiles_is_clipped_per_tile(spark, tmp_path):
     """A polygon wider than one tile lands (clipped) in several."""
     out = str(tmp_path / "mvt2")

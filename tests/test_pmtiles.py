@@ -6,6 +6,7 @@ import gzip
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from gdal_spark import pmtiles
 
@@ -176,6 +177,15 @@ def test_write_pmtiles_dir_round_trip(spark, tmp_path):
         for r in pdf.itertuples(index=False)
     }
 
+
+
+def test_write_pmtiles_dir_rejects_string_group_key(spark, tmp_path):
+    src = spark.createDataFrame(
+        pd.DataFrame([(1, 0, 0, b"a")], columns=["z", "tx", "ty", "data"])
+    ).withColumn("gk", F.lit("a"))
+    with pytest.raises(ValueError, match="'gk'.*integral.*string"):
+        pmtiles.write_pmtiles_dir(src, str(tmp_path / "sink"), group_col="gk")
+    assert not (tmp_path / "sink").exists()
 
 def test_run_length_crossing_zoom_boundary(spark, tmp_path):
     """Spec v3 allows a directory run to cross a zoom boundary;

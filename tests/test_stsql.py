@@ -184,6 +184,28 @@ def test_st_transform_in_sql(st):
     assert 5_700_000 < n < 5_800_000
 
 
+
+def test_st_transform_multilinestring_round_trip(st):
+    lines = [
+        np.array([[13.0, 52.0], [13.5, 52.25], [14.0, 52.5]]),
+        np.array([[-70.25, -33.5], [-70.0, -33.0]]),
+    ]
+    pdf = pd.DataFrame({"g": [wkb.multilinestring(lines)]})
+    st.createDataFrame(pdf).createOrReplaceTempView("mls")
+    r = st.sql(
+        "SELECT st_transform(g, 'EPSG:4326', 'EPSG:3857') AS m, "
+        "st_transform(st_transform(g, 'EPSG:4326', 'EPSG:3857'), "
+        "'EPSG:3857', 'EPSG:4326') AS g FROM mls"
+    ).collect()[0]
+    mtype, merc = wkb.parse(bytes(r.m))
+    assert mtype == wkb.MULTILINESTRING
+    assert merc[0][0, 0] == pytest.approx(13.0 * 20037508.342789244 / 180)
+    gtype, back = wkb.parse(bytes(r.g))
+    assert gtype == wkb.MULTILINESTRING
+    assert len(back) == len(lines)
+    for got, want in zip(back, lines):
+        np.testing.assert_allclose(got, want, rtol=0, atol=1e-9)
+
 def test_st_distance(st):
     spark = st
     # disjoint rects: rect(0,0,4,3) gid0 and donut at (10,10,16,14)

@@ -4,7 +4,7 @@ from collections import Counter
 
 import pandas as pd
 
-from gdal_spark.operators.text import repetition_signals
+from gdal_spark.operators.text import fingerprint, repetition_signals
 
 
 def _oracle(text):
@@ -54,3 +54,33 @@ def test_repetition_is_partitioning_invariant(spark):
     ).collect()
     key = lambda r: r["doc_id"]
     assert sorted(one, key=key) == sorted(many, key=key)
+
+
+def test_fingerprint_matches_closed_form(spark):
+    """fp = sum_i i * (len(w_i) + 1) mod 1000000007 over the 1-based
+    space-split tokens; doc 3 has 40000 tokens, so the raw sum
+    (40000 * 40001 = 1.6e9) exceeds the modulus."""
+    p = 1000000007
+    docs = [
+        (0, "the quick brown fox"),
+        (1, "x"),
+        (2, ""),                        # one empty token
+        (3, " ".join(["a"] * 40000)),
+        (4, "quick the brown fox"),     # order-sensitive
+    ]
+    got = {
+        r["doc_id"]: r["fp"]
+        for r in fingerprint(
+            spark.createDataFrame(
+                pd.DataFrame(docs, columns=["doc_id", "text"])
+            )
+        ).collect()
+    }
+    want = {
+        doc_id: sum(
+            i * (len(w) + 1) for i, w in enumerate(text.split(" "), 1)
+        ) % p
+        for doc_id, text in docs
+    }
+    assert got == want
+    assert got[0] != got[4]

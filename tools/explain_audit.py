@@ -172,9 +172,8 @@ def main() -> int:
             "cell_id",
         )
     )
-    entry._reg(spark, SF)
     plans["q1_pricing_summary"] = _plan(
-        spark.sql(entry.SHARED_SQL["q1_pricing_summary"])
+        entry.QUERIES["q1_pricing_summary"].fn(spark, SF)
     )
     from gdal_spark.operators.grid import idw_grid_quantized
     from gdal_spark.operators.layer_algebra import intersection_pieces
