@@ -76,13 +76,14 @@ def parent(cell_id, steps: int = 1) -> np.ndarray:
     return from_rixy(res - steps, ix >> steps, iy >> steps)
 
 
-def children(cell_id: int) -> np.ndarray:
-    """The 4 child cells one resolution down (scalar in, array out)."""
-    res, ix, iy = decode(np.int64(cell_id))
-    r2, x2, y2 = int(res) + 1, int(ix) << 1, int(iy) << 1
-    xs = np.array([x2, x2, x2 + 1, x2 + 1], dtype=np.int64)
-    ys = np.array([y2, y2 + 1, y2, y2 + 1], dtype=np.int64)
-    return from_rixy(r2, xs, ys)
+def children(cell_id) -> np.ndarray:
+    """The 4 child cells one resolution down of each input cell, flat
+    in input order (a scalar gives 4 cells)."""
+    res, ix, iy = decode(np.atleast_1d(cell_id))
+    n = res.size
+    xs = (np.repeat(ix, 4) << 1) + np.tile(np.array([0, 0, 1, 1]), n)
+    ys = (np.repeat(iy, 4) << 1) + np.tile(np.array([0, 1, 0, 1]), n)
+    return from_rixy(np.repeat(res + 1, 4), xs, ys)
 
 
 def from_rixy(res, ix, iy) -> np.ndarray:

@@ -28,59 +28,184 @@ import pandas as pd
 from . import cells, geometry, wkb
 
 INSIDE, OUTSIDE, BOUNDARY = 1, 0, 2
+# (cell, edge) lanes per numpy pass: bounds driver memory when big
+# frontiers meet rings with many vertices
+_LANES = 1 << 20
+
+
+def _spans(starts: np.ndarray, counts: np.ndarray):
+    """Concatenated ranges [start, start + count): (owner, index)."""
+    owner = np.repeat(np.arange(counts.size), counts)
+    first = np.cumsum(counts) - counts
+    return owner, np.repeat(starts - first, counts) + np.arange(owner.size)
+
+
+class _Rings:
+    """Flat edge table over the ring slots of a list of polygon parts.
+
+    Slot 0 of a part is its outer ring, slot k its k-th hole. Each slot
+    keeps its bbox (over the ring's vertices) and a run of edges of the
+    closed ring in ``ax, ay → bx, by``."""
+
+    def __init__(self, parts: list[list[np.ndarray]]):
+        self.n_slots = np.array([len(r) for r in parts], dtype=np.int64)
+        self.slot0 = np.cumsum(self.n_slots) - self.n_slots
+        bbox, n_edges, pip_ok, hole, ends = [], [], [], [], []
+        for rings in parts:
+            for k, ring in enumerate(rings):
+                ring = np.asarray(ring, dtype=np.float64)
+                bbox.append(geometry.ring_bbox(ring))
+                # points_in_ring treats a ring of < 3 vertices as empty
+                pip_ok.append(ring.shape[0] >= 3)
+                hole.append(k > 0)
+                if not (ring[0] == ring[-1]).all():
+                    ring = np.vstack([ring, ring[:1]])
+                n_edges.append(ring.shape[0] - 1)
+                ends.append(np.hstack([ring[:-1], ring[1:]]))
+        self.bbox = np.array(bbox, dtype=np.float64).reshape(-1, 4)
+        self.n_edges = np.array(n_edges, dtype=np.int64)
+        self.edge0 = np.cumsum(self.n_edges) - self.n_edges
+        self.pip_ok = np.array(pip_ok, dtype=bool)
+        self.hole = np.array(hole, dtype=bool)
+        self.ax, self.ay, self.bx, self.by = np.vstack(ends).T
+
+    def classify(self, part, minx, miny, maxx, maxy) -> np.ndarray:
+        """Rectangle i vs the polygon of part[i]: INSIDE / OUTSIDE /
+        BOUNDARY per rectangle.
+
+        Slots decide in order (outer ring, then holes); the first that
+        decides wins, and a rectangle no slot decides is INSIDE. The
+        outer ring decides OUTSIDE when its bbox misses the rectangle or
+        the centre is not inside it; a hole is skipped when its bbox
+        misses, and decides OUTSIDE when the centre is inside it. Either
+        decides BOUNDARY when an edge crosses the rectangle or its bbox
+        lies within the rectangle."""
+        rect, slot = _spans(self.slot0[part], self.n_slots[part])
+        rx0, ry0, rx1, ry1 = minx[rect], miny[rect], maxx[rect], maxy[rect]
+        sx0, sy0, sx1, sy1 = self.bbox[slot].T
+        disjoint = (rx0 > sx1) | (rx1 < sx0) | (ry0 > sy1) | (ry1 < sy0)
+        within = (sx0 >= rx0) & (sx1 <= rx1) & (sy0 >= ry0) & (sy1 <= ry1)
+        cross = np.zeros(slot.size, dtype=bool)
+        centre_in = np.zeros(slot.size, dtype=bool)
+        near = np.nonzero(~disjoint)[0]
+        ends = np.cumsum(self.n_edges[slot[near]])
+        lo = 0
+        while lo < near.size:
+            before = ends[lo - 1] if lo else 0
+            hi = max(lo + 1, int(np.searchsorted(ends, before + _LANES, "right")))
+            cs = near[lo:hi]
+            cross[cs], centre_in[cs] = self._edge_tests(
+                slot[cs], rx0[cs], ry0[cs], rx1[cs], ry1[cs]
+            )
+            lo = hi
+        hole = self.hole[slot]
+        decision = np.select(
+            [
+                disjoint & ~hole,
+                disjoint,
+                cross | within,
+                hole & centre_in,
+                ~hole & ~centre_in,
+            ],
+            [OUTSIDE, INSIDE, BOUNDARY, OUTSIDE, OUTSIDE],
+            INSIDE,
+        )
+        decisive = np.nonzero(decision != INSIDE)[0]
+        labels = np.full(part.size, INSIDE)
+        r, first = np.unique(rect[decisive], return_index=True)
+        labels[r] = decision[decisive[first]]
+        return labels
+
+    def _edge_tests(self, slot, minx, miny, maxx, maxy):
+        """Per (rectangle, slot) pair: does an edge of the slot cross
+        the rectangle, and is the rectangle's centre inside the ring
+        (points_in_ring's crossing arithmetic)."""
+        pair, e = _spans(self.edge0[slot], self.n_edges[slot])
+        ax, ay, bx, by = self.ax[e], self.ay[e], self.bx[e], self.by[e]
+        lx0, ly0, lx1, ly1 = minx[pair], miny[pair], maxx[pair], maxy[pair]
+        # bbox rejection per edge, exact clip for the survivors
+        hit = ~(
+            (np.maximum(ax, bx) < lx0)
+            | (np.minimum(ax, bx) > lx1)
+            | (np.maximum(ay, by) < ly0)
+            | (np.minimum(ay, by) > ly1)
+        )
+        hit[hit] = geometry.segs_intersect_rects(
+            ax[hit], ay[hit], bx[hit], by[hit],
+            lx0[hit], ly0[hit], lx1[hit], ly1[hit],
+        )
+        cross = np.bincount(pair[hit], minlength=slot.size) > 0
+
+        cx = ((minx + maxx) * 0.5)[pair]
+        cy = ((miny + maxy) * 0.5)[pair]
+        x1, y1 = bx - cx, by - cy  # segment end
+        x2, y2 = ax - cx, ay - cy  # segment start
+        straddles = ((y1 > 0) & (y2 <= 0)) | ((y2 > 0) & (y1 <= 0))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x1 * y2 - x2 * y1) / (y2 - y1)
+        crossings = np.bincount(
+            pair[straddles & (xint > 0.0)], minlength=slot.size
+        )
+        return cross, (crossings % 2 == 1) & self.pip_ok[slot]
 
 
 def classify_rect(
     rings: list[np.ndarray], minx: float, miny: float, maxx: float, maxy: float
 ) -> int:
     """Rectangle vs polygon(outer+holes): INSIDE / OUTSIDE / BOUNDARY."""
-    outer = rings[0]
-    ominx, ominy, omaxx, omaxy = geometry.ring_bbox(outer)
-    if minx > omaxx or maxx < ominx or miny > omaxy or maxy < ominy:
-        return OUTSIDE
-    # any outer edge crossing the rect → boundary cell
-    if _edges_cross_rect(outer, minx, miny, maxx, maxy):
-        return BOUNDARY
-    # polygon entirely inside the rect (coarse cell) → boundary
-    if ominx >= minx and omaxx <= maxx and ominy >= miny and omaxy <= maxy:
-        return BOUNDARY
-    # no edge crossing: rect is fully inside or fully outside the outer
-    cx, cy = np.array([(minx + maxx) * 0.5]), np.array([(miny + maxy) * 0.5])
-    if not geometry.points_in_ring(cx, cy, outer)[0]:
-        return OUTSIDE
-    # inside outer — consider holes
-    for hole in rings[1:]:
-        hminx, hminy, hmaxx, hmaxy = geometry.ring_bbox(hole)
-        if minx > hmaxx or maxx < hminx or miny > hmaxy or maxy < hminy:
-            continue
-        if _edges_cross_rect(hole, minx, miny, maxx, maxy):
-            return BOUNDARY
-        if hminx >= minx and hmaxx <= maxx and hminy >= miny and hmaxy <= maxy:
-            return BOUNDARY  # hole entirely within the rect
-        if geometry.points_in_ring(cx, cy, hole)[0]:
-            return OUTSIDE  # rect swallowed by the hole
-    return INSIDE
-
-
-def _edges_cross_rect(ring, minx, miny, maxx, maxy) -> bool:
-    ring = np.asarray(ring, dtype=np.float64)
-    if not (ring[0] == ring[-1]).all():
-        ring = np.vstack([ring, ring[:1]])
-    # vectorized bbox rejection per edge, exact clip test for survivors
-    x0, y0 = ring[:-1, 0], ring[:-1, 1]
-    x1, y1 = ring[1:, 0], ring[1:, 1]
-    reject = (
-        (np.maximum(x0, x1) < minx)
-        | (np.minimum(x0, x1) > maxx)
-        | (np.maximum(y0, y1) < miny)
-        | (np.minimum(y0, y1) > maxy)
+    return int(
+        _Rings([rings]).classify(
+            np.zeros(1, dtype=np.int64),
+            *(np.array([v], dtype=np.float64) for v in (minx, miny, maxx, maxy)),
+        )[0]
     )
-    for i in np.nonzero(~reject)[0]:
-        if geometry._seg_intersects_rect(
-            x0[i], y0[i], x1[i], y1[i], minx, miny, maxx, maxy
-        ):
-            return True
-    return False
+
+
+def _cover_parts(parts, res_min: int, res_max: int, max_cells: int):
+    """Quadtree refinement of every part at once: (part, cell_id, full).
+
+    Each part starts from the res_min cells over its outer bbox and
+    refines BOUNDARY cells until res_max or its cell budget is reached;
+    interior cells stay coarse (compact mixed-res cover). Rows come
+    per part: full cells in level order, then boundary cells."""
+    rings = _Rings(parts)
+    start = [
+        cells.cover_bbox(*rings.bbox[rings.slot0[p]], res_min)
+        for p in range(len(parts))
+    ]
+    part = np.repeat(np.arange(len(parts)), [c.size for c in start])
+    frontier = np.concatenate(start)
+    n_full = [0] * len(parts)
+    n_boundary = [0] * len(parts)
+    kept: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
+    res = res_min
+    while frontier.size:
+        labels = rings.classify(part, *cells.cell_bounds(frontier))
+        refine = np.zeros(frontier.size, dtype=bool)
+        if res < res_max:
+            # the budget counts cells in frontier order, so it is an
+            # int loop; 4 children enter the next frontier per refined
+            # cell and the budget weighs each of those 4 times
+            n_refined = [0] * len(parts)
+            live = np.nonzero(labels != OUTSIDE)[0]
+            for i, p, lab in zip(
+                live.tolist(), part[live].tolist(), labels[live].tolist()
+            ):
+                if lab == INSIDE:
+                    n_full[p] += 1
+                elif n_full[p] + n_boundary[p] + n_refined[p] * 16 < max_cells:
+                    refine[i] = True
+                    n_refined[p] += 1
+                else:
+                    n_boundary[p] += 1
+        keep = (labels != OUTSIDE) & ~refine
+        kept.append((part[keep], frontier[keep], labels[keep] == INSIDE))
+        frontier = cells.children(frontier[refine])
+        part = np.repeat(part[refine], 4)
+        res += 1
+    part, cid, full = (np.concatenate(a) for a in zip(*kept))
+    order = np.argsort(part * 2 + ~full, kind="stable")
+    return part[order], cid[order], full[order]
 
 
 def cover_polygon(
@@ -89,62 +214,35 @@ def cover_polygon(
     res_max: int = 9,
     max_cells: int = 1024,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Quadtree refinement: (cell_ids, full_flags).
-
-    Starts from the res_min cells over the polygon bbox and refines
-    BOUNDARY cells until res_max or the cell budget is reached;
-    interior cells stay coarse (compact mixed-res cover)."""
-    outer = rings[0]
-    minx, miny, maxx, maxy = geometry.ring_bbox(outer)
-    frontier = cells.cover_bbox(minx, miny, maxx, maxy, res_min).tolist()
-    full: list[int] = []
-    boundary: list[int] = []
-    res = res_min
-    while frontier:
-        next_frontier: list[int] = []
-        for c in frontier:
-            lo_lon, lo_lat, hi_lon, hi_lat = (
-                float(v) for v in cells.cell_bounds(np.int64(c))
-            )
-            cls = classify_rect(rings, lo_lon, lo_lat, hi_lon, hi_lat)
-            if cls == INSIDE:
-                full.append(c)
-            elif cls == BOUNDARY:
-                if res < res_max and (
-                    len(full) + len(boundary) + len(next_frontier) * 4 < max_cells
-                ):
-                    next_frontier.extend(cells.children(c).tolist())
-                else:
-                    boundary.append(c)
-        frontier = next_frontier
-        res += 1
-    cell_ids = np.array(full + boundary, dtype=np.int64)
-    flags = np.array([True] * len(full) + [False] * len(boundary), dtype=bool)
-    return cell_ids, flags
+    """One polygon (outer + holes) → (cell_ids, full_flags)."""
+    _, cid, full = _cover_parts([rings], res_min, res_max, max_cells)
+    return cid, full
 
 
-def _drop_descendants(acc: dict[int, bool]) -> dict[int, bool]:
-    """Remove cells having an ancestor in the set (multipart overlap).
+def _merge_parts(poly, cid, full):
+    """Merge the part covers of each polygon: rows keep the order of
+    their first occurrence, ``full`` ORs over duplicates, and a cell
+    with an ancestor in the same polygon's cover is dropped (multipart
+    overlap).
 
     Keeping the coarsest cell is safe: full ancestors accept outright;
     boundary ancestors route the pair to the exact PIP kernel, which
     evaluates ALL parts of the multipolygon."""
-    if len(acc) <= 1:
-        return acc
-    present = set(acc.keys())
-    out: dict[int, bool] = {}
-    for c, f in acc.items():
-        res = c >> 58
-        covered = False
-        cur = np.int64(c)
-        for _ in range(int(res)):
-            cur = np.int64(int(cells.parent(cur)))
-            if int(cur) in present:
-                covered = True
-                break
-        if not covered:
-            out[c] = f
-    return out
+    merged = (
+        pd.DataFrame({"poly": poly, "cid": cid, "full": full})
+        .groupby(["poly", "cid"], sort=False, as_index=False)["full"]
+        .any()
+    )
+    poly, cid, full = (merged[c].to_numpy() for c in ("poly", "cid", "full"))
+    present = pd.MultiIndex.from_arrays([poly, cid])
+    res, ix, iy = cells.decode(cid)
+    covered = np.zeros(cid.size, dtype=bool)
+    for r in np.unique(res)[:-1].tolist():
+        finer = res > r
+        up = res[finer] - r
+        anc = cells.from_rixy(r, ix[finer] >> up, iy[finer] >> up)
+        covered[finer] |= pd.MultiIndex.from_arrays([poly[finer], anc]).isin(present)
+    return poly[~covered], cid[~covered], full[~covered]
 
 
 def cover_polygons_pdf(
@@ -156,34 +254,30 @@ def cover_polygons_pdf(
     """Cover every polygon → (poly_id, cell_id, res, full) rows.
 
     Runs on the driver: the polygon side is the small/broadcast side by
-    design (the indexed side, like GDAL's method layer)."""
-    out_pid, out_cid, out_res, out_full = [], [], [], []
-    for pid, buf in zip(polygons["poly_id"], polygons["geom_wkb"]):
-        # multipolygon parts are covered independently, then merged so
-        # one polygon never emits overlapping cells (a point must match
-        # at most ONE cover row per polygon — join-fanout invariant)
-        acc: dict[int, bool] = {}
+    design (the indexed side, like GDAL's method layer). Multipolygon
+    parts are covered independently, then merged so one polygon never
+    emits overlapping cells (a point must match at most ONE cover row
+    per polygon — join-fanout invariant)."""
+    parts, owner = [], []
+    for i, buf in enumerate(polygons["geom_wkb"]):
         for rings in wkb.polygon_rings(bytes(buf)):
-            cids, flags = cover_polygon(rings, res_min, res_max, max_cells)
-            for c, f in zip(cids.tolist(), flags.tolist()):
-                acc[c] = acc.get(c, False) or f
-        kept = _drop_descendants(acc)
-        cids = np.fromiter(kept.keys(), dtype=np.int64, count=len(kept))
-        flags = np.fromiter(kept.values(), dtype=bool, count=len(kept))
-        res = (cids >> 58).astype(np.int32)
-        out_pid.append(np.full(cids.size, pid, dtype=np.int64))
-        out_cid.append(cids)
-        out_res.append(res)
-        out_full.append(flags)
-    if not out_pid:
-        return pd.DataFrame(
-            {"poly_id": [], "cell_id": [], "res": [], "full": []}
-        ).astype({"poly_id": "int64", "cell_id": "int64", "res": "int32", "full": "bool"})
+            if rings:
+                parts.append(rings)
+                owner.append(i)
+    if parts:
+        part, cid, full = _cover_parts(parts, res_min, res_max, max_cells)
+        poly, cid, full = _merge_parts(
+            np.asarray(owner, dtype=np.int64)[part], cid, full
+        )
+    else:
+        poly = cid = np.empty(0, dtype=np.int64)
+        full = np.empty(0, dtype=bool)
+    pids = polygons["poly_id"].to_numpy().astype(np.int64)
     return pd.DataFrame(
         {
-            "poly_id": np.concatenate(out_pid),
-            "cell_id": np.concatenate(out_cid),
-            "res": np.concatenate(out_res),
-            "full": np.concatenate(out_full),
+            "poly_id": pids[poly],
+            "cell_id": cid,
+            "res": (cid >> 58).astype(np.int32),
+            "full": full,
         }
     )

@@ -231,50 +231,60 @@ def segments_intersect_bbox(
     cy = np.array([miny, maxy, miny, maxy])
     if points_in_ring(cx, cy, ring).any():
         return True
-    # Edge-crossing test via Cohen-Sutherland-style outcode rejection
     if not (ring[0] == ring[-1]).all():
         ring = np.vstack([ring, ring[:1]])
-    for i in range(ring.shape[0] - 1):
-        if _seg_intersects_rect(
-            ring[i, 0], ring[i, 1], ring[i + 1, 0], ring[i + 1, 1],
+    return bool(
+        segs_intersect_rects(
+            ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1],
             minx, miny, maxx, maxy,
-        ):
-            return True
-    return False
+        ).any()
+    )
 
 
-def _seg_intersects_rect(x0, y0, x1, y1, minx, miny, maxx, maxy) -> bool:
-    def outcode(x, y):
-        c = 0
-        if x < minx:
-            c |= 1
-        elif x > maxx:
-            c |= 2
-        if y < miny:
-            c |= 4
-        elif y > maxy:
-            c |= 8
-        return c
+def _outcode(x, y, minx, miny, maxx, maxy) -> np.ndarray:
+    return np.where(x < minx, 1, np.where(x > maxx, 2, 0)) | np.where(
+        y < miny, 4, np.where(y > maxy, 8, 0)
+    )
 
-    c0, c1 = outcode(x0, y0), outcode(x1, y1)
-    while True:
-        if not (c0 | c1):
-            return True
-        if c0 & c1:
-            return False
-        c = c0 or c1
-        if c & 8:
-            x, y = x0 + (x1 - x0) * (maxy - y0) / (y1 - y0), maxy
-        elif c & 4:
-            x, y = x0 + (x1 - x0) * (miny - y0) / (y1 - y0), miny
-        elif c & 2:
-            x, y = maxx, y0 + (y1 - y0) * (maxx - x0) / (x1 - x0)
-        else:
-            x, y = minx, y0 + (y1 - y0) * (minx - x0) / (x1 - x0)
-        if c == c0:
-            x0, y0, c0 = x, y, outcode(x, y)
-        else:
-            x1, y1, c1 = x, y, outcode(x, y)
+
+def segs_intersect_rects(x0, y0, x1, y1, minx, miny, maxx, maxy) -> np.ndarray:
+    """Lane-wise Cohen-Sutherland clip: True where segment i touches
+    rectangle i (closed bounds). Arguments broadcast against each other;
+    the result is flat, one bool per broadcast lane.
+
+    Every lane runs the scalar algorithm's float operations in its
+    order: accept when both outcodes are 0, reject when they share a
+    bit, else move the outside endpoint (the first one if it is
+    outside) onto the top, bottom, right or left edge, in that
+    priority, and repeat."""
+    lanes = [
+        np.array(a, dtype=np.float64).ravel()
+        for a in np.broadcast_arrays(x0, y0, x1, y1, minx, miny, maxx, maxy)
+    ]
+    hit = np.zeros(lanes[0].size, dtype=bool)
+    idx = np.arange(lanes[0].size)
+    x0, y0, x1, y1, minx, miny, maxx, maxy = lanes
+    c0 = _outcode(x0, y0, minx, miny, maxx, maxy)
+    c1 = _outcode(x1, y1, minx, miny, maxx, maxy)
+    while idx.size:
+        hit[idx[(c0 | c1) == 0]] = True
+        live = ((c0 | c1) != 0) & ((c0 & c1) == 0)
+        idx, x0, y0, x1, y1, minx, miny, maxx, maxy, c0, c1 = (
+            a[live] for a in (idx, x0, y0, x1, y1, minx, miny, maxx, maxy, c0, c1)
+        )
+        first = c0 != 0
+        c = np.where(first, c0, c1)
+        on_y = (c & 12) != 0
+        ey = np.where(c & 8, maxy, miny)
+        ex = np.where(c & 2, maxx, minx)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            x = np.where(on_y, x0 + (x1 - x0) * (ey - y0) / (y1 - y0), ex)
+            y = np.where(on_y, ey, y0 + (y1 - y0) * (ex - x0) / (x1 - x0))
+        code = _outcode(x, y, minx, miny, maxx, maxy)
+        x0, y0 = np.where(first, x, x0), np.where(first, y, y0)
+        x1, y1 = np.where(first, x1, x), np.where(first, y1, y)
+        c0, c1 = np.where(first, code, c0), np.where(first, c1, code)
+    return hit
 
 
 # ---------------------------------------------------------------------------

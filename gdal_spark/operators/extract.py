@@ -1,9 +1,9 @@
 """pages.text → features: deterministic geocoding extraction.
 
 The ETL front of the pipeline (reference analog: ogr2ogr's per-feature
-translate loop, apps/ogr2ogr_lib.cpp:653 — here an Arrow-batched
-columnar pass, the moral equivalent of its TranslateArrow fast path,
-apps/ogr2ogr_lib.cpp:6118).
+translate loop, apps/ogr2ogr_lib.cpp:653). Feature extraction runs in
+the JVM: one ``regexp_extract_all`` over ``text``, a ``posexplode`` and
+two casts, all whole-stage codegen, with no Python worker.
 
 Extraction is a pure function of ``text`` (itself a pure function of
 ``url``), preserving the byte-identity invariant: re-extracting from
@@ -14,81 +14,38 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+from pyspark.sql import functions as F
 
-# "Observed near (13.372615,52.512345)" — fixed 6-decimal mentions
-MENTION_RE = re.compile(r"\(([-+]?\d+\.\d{6}),([-+]?\d+\.\d{6})\)")
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("feat_id", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ]
-)
-
-
-def extract_features_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Extraction over one pandas batch (url, text).
-
-    One regex pass over the NUL-joined batch text (a single C-level
-    scan) instead of pandas ``str.extractall`` (which builds a
-    MultiIndex frame per row and costs ~10x more CPU at this shape);
-    match→row attribution is a searchsorted over row offsets."""
-    texts = pdf["text"].tolist()
-    if not texts:
-        return _EMPTY.copy()
-    joined = "\x00".join(texts)
-    matches = list(MENTION_RE.finditer(joined))
-    if not matches:
-        return _EMPTY.copy()
-    starts = np.fromiter((m.start() for m in matches), dtype=np.int64)
-    # offsets[i] = start index of row i+1 in `joined`
-    lens = np.fromiter((len(t) + 1 for t in texts), dtype=np.int64)
-    offsets = np.cumsum(lens)
-    row_idx = np.searchsorted(offsets, starts, side="right")
-    idx = np.arange(len(starts), dtype=np.int64)
-    feat_id = idx - np.searchsorted(row_idx, row_idx, side="left")
-    lon = np.array([m.group(1) for m in matches], dtype=np.float64)
-    lat = np.array([m.group(2) for m in matches], dtype=np.float64)
-    return pd.DataFrame(
-        {
-            "url": pdf["url"].to_numpy()[row_idx],
-            "feat_id": feat_id.astype(np.int32),
-            "kind": "point",
-            "lon": lon,
-            "lat": lat,
-        }
-    )
-
-
-_EMPTY = pd.DataFrame(
-    {
-        "url": pd.Series([], dtype=str),
-        "feat_id": pd.Series([], dtype=np.int32),
-        "kind": pd.Series([], dtype=str),
-        "lon": pd.Series([], dtype=np.float64),
-        "lat": pd.Series([], dtype=np.float64),
-    }
-)
+# The mention grammar: "(lon,lat)", each a signed decimal with ASCII
+# digits and exactly 6 fraction digits, e.g. "Observed near
+# (13.372615,52.512345)". Matches are found left to right without
+# overlap; feat_id is the 0-based ordinal of a mention in its page.
+# Null or empty text has no mentions. ASCII digits keep the grammar the
+# same in Java's regex and in Python's, and every match is a valid
+# double literal for both: Java's Double.parseDouble and Python's
+# float() both round correctly, so the parsed values agree bit for bit.
+MENTION_GRAMMAR = r"\(([-+]?[0-9]+\.[0-9]{6},[-+]?[0-9]+\.[0-9]{6})\)"
 
 
 def extract_features(pages: DataFrame) -> DataFrame:
     """pages → features(url, feat_id, kind, lon, lat).
 
-    mapInPandas: Arrow batches in, vectorized regex, 1→N rows out.
     Column pruning: only (url, text) are read from the scan."""
-
-    def run(batches):
-        for pdf in batches:
-            yield extract_features_pdf(pdf)
-
-    return pages.select("url", "text").mapInPandas(run, schema=FEATURES_SCHEMA)
+    pair = F.col("pair")
+    return pages.select(
+        "url",
+        F.posexplode(
+            F.regexp_extract_all("text", F.lit(MENTION_GRAMMAR), 1)
+        ).alias("feat_id", "pair"),
+    ).select(
+        "url",
+        "feat_id",
+        F.lit("point").alias("kind"),
+        F.substring_index(pair, ",", 1).cast("double").alias("lon"),
+        F.substring_index(pair, ",", -1).cast("double").alias("lat"),
+    )
 
 
 # ---------------------------------------------------------------------------

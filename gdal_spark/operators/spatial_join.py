@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .. import cover as cover_mod
 from .. import geometry, wkb
+from ..cells import cell_sql
 
 
 def build_cover_df(
@@ -128,25 +129,22 @@ def spatial_join(
     points in no polygon are dropped; use a left join downstream for
     Identity-style semantics)."""
     spark = points.sparkSession
-    cover_df = build_cover_df(spark, polygons_pdf, res_min, res_max, max_cells)
-    rings_bc = broadcast_polygon_rings(spark, polygons_pdf)
-
-    res_levels = sorted(
-        r.res for r in cover_df.select("res").distinct().collect()
-    )
+    cov = cover_mod.cover_polygons_pdf(polygons_pdf, res_min, res_max, max_cells)
+    res_levels = np.unique(cov["res"]).tolist()
     if not res_levels:
         return points.limit(0).withColumn("poly_id", F.lit(None).cast("long"))
-
-    from ..cells import cell_expr
+    cover_df = spark.createDataFrame(cov)
+    rings_bc = broadcast_polygon_rings(spark, polygons_pdf)
 
     # point cell id at every cover resolution, JVM-side; explode is a
-    # narrow op (fanout = number of distinct res levels, typically ≤ 7)
-    cells_arr = F.array(
-        *[cell_expr(F.col(lon_col), F.col(lat_col), r) for r in res_levels]
+    # narrow op (fanout = number of distinct res levels, typically ≤ 7).
+    # One SQL fragment is one parse on the JVM; the same expression built
+    # from Column objects costs over a thousand py4j round trips.
+    lon, lat = f"`{lon_col}`", f"`{lat_col}`"
+    cells_arr = F.expr(
+        "array(" + ", ".join(cell_sql(lon, lat, r) for r in res_levels) + ")"
     )
-    pts = points.withColumn("__cells", cells_arr).withColumn(
-        "cell_id", F.explode("__cells")
-    ).drop("__cells")
+    pts = points.select("*", F.explode(cells_arr).alias("cell_id"))
 
     cand = pts.join(F.broadcast(cover_df), "cell_id", "inner")
 

@@ -9,6 +9,8 @@ only swaps master local[N]):
   (the reference's own columnar contract, ogrlayerarrow.cpp).
 * shuffle.partitions sized to cores locally; on a cluster this should
   be 2-3× total executor cores (set via spark-submit --conf).
+* cores and driver memory default to what this host has (see
+  ``host_defaults``).
 """
 
 from __future__ import annotations
@@ -18,14 +20,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver memory) for ``local[N]`` on this host.
+
+    ``$SPARK_GRAFT_CPUS`` and ``$SPARK_DRIVER_MEM`` win when set.
+    Otherwise cores are the CPUs this process may run on, and driver
+    memory is 16g capped at half of the host's physical memory."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cores = int(cpus) if cpus else len(os.sched_getaffinity(0))
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    mem = os.environ.get("SPARK_DRIVER_MEM") or f"{min(16 << 10, total_mb // 2)}m"
+    return cores, mem
+
+
 def get_spark(
     app_name: str = "gdal_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    host_cores, driver_mem = host_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = host_cores
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -38,7 +54,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate duplicates the generator's full

@@ -63,6 +63,18 @@ def test_spatial_join_broadcasts_cover(spark):
     assert "ShuffleExchange" not in plan.replace("BroadcastExchange", "")
 
 
+def test_extract_features_runs_in_the_jvm(spark):
+    """Mention extraction is a codegen'd Generate, with no Python
+    worker anywhere in its plan."""
+    from gdal_spark.operators.extract import extract_features
+    from gdal_spark.testdata import pages_pdf
+
+    plan = _plan(extract_features(spark.createDataFrame(pages_pdf(50))))
+    assert "Generate" in plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
+
+
 def test_spatial_join_count_has_partial_aggregation(spark):
     from gdal_spark.operators.spatial_join import spatial_join_count
     from gdal_spark.testdata import polygons_pdf

@@ -3,12 +3,14 @@ against a brute-force numpy oracle (every point × every polygon).
 Mirrors the reference's layer-algebra oracle tests
 (autotest/ogr/ogr_layer_algebra.py style — exact row-set equality)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from gdal_spark import geometry, testdata, wkb
-from gdal_spark.operators.extract import extract_features, extract_features_pdf
+from gdal_spark.operators.extract import extract_features
 from gdal_spark.operators.spatial_join import spatial_join, spatial_join_count
 
 N_PAGES = 2000
@@ -23,6 +25,20 @@ def pages_pdf():
 @pytest.fixture(scope="module")
 def polygons():
     return testdata.polygons_pdf(N_POLY)
+
+
+# The mention grammar, written out independently of the engine.
+MENTION = re.compile(r"\(([-+]?[0-9]+\.[0-9]{6}),([-+]?[0-9]+\.[0-9]{6})\)")
+
+
+def reference_features(pages: pd.DataFrame) -> pd.DataFrame:
+    """(url, feat_id, kind, lon, lat) by a plain ``re`` parse per page."""
+    rows = [
+        (url, k, "point", float(m.group(1)), float(m.group(2)))
+        for url, text in zip(pages["url"], pages["text"])
+        for k, m in enumerate(MENTION.finditer(text or ""))
+    ]
+    return pd.DataFrame(rows, columns=["url", "feat_id", "kind", "lon", "lat"])
 
 
 def brute_force_pairs(feats: pd.DataFrame, polygons: pd.DataFrame) -> set:
@@ -50,8 +66,8 @@ def test_text_byte_identity(pages_pdf):
     )
 
 
-def test_extract_deterministic_and_parses_own_format(pages_pdf):
-    feats = extract_features_pdf(pages_pdf)
+def test_extract_deterministic_and_parses_own_format(spark, pages_pdf):
+    feats = extract_features(spark.createDataFrame(pages_pdf)).toPandas()
     assert len(feats) >= N_PAGES  # 1-3 mentions per page
     assert feats["lon"].between(-180, 180).all()
     assert feats["lat"].between(-90, 90).all()
@@ -67,11 +83,50 @@ def test_distributed_extract_matches_local(spark, pages_pdf):
         .toPandas()
     )
     want = (
-        extract_features_pdf(pages_pdf)
+        reference_features(pages_pdf)
         .sort_values(["url", "feat_id"])
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_extract_mention_grammar(spark):
+    """ASCII digits, an optional sign, exactly 6 fraction digits,
+    matched left to right without overlap."""
+    texts = {
+        "u0": "a (1.000000,2.000000) b (+3.250000,-4.500000)",
+        "u1": "(\u0661.000000,2.000000) (1.00000,2.000000) (1.0000001,2.000000)",
+        "u2": "((10.123456,-0.000001)) (1.000000, 2.000000) (-.000000,1.000000)",
+        "u3": "(999.999999,-999.999999)(0.000000,0.000000)",
+    }
+    pdf = pd.DataFrame({"url": list(texts), "text": list(texts.values())})
+    got = (
+        extract_features(spark.createDataFrame(pdf))
+        .orderBy("url", "feat_id")
+        .toPandas()
+    )
+    assert list(zip(got["url"], got["feat_id"], got["lon"], got["lat"])) == [
+        ("u0", 0, 1.0, 2.0),
+        ("u0", 1, 3.25, -4.5),
+        ("u2", 0, 10.123456, -0.000001),
+        ("u3", 0, 999.999999, -999.999999),
+        ("u3", 1, 0.0, 0.0),
+    ]
+    assert (got["kind"] == "point").all()
+    pd.testing.assert_frame_equal(
+        got, reference_features(pdf), check_dtype=False
+    )
+
+
+def test_extract_null_and_empty_text_have_no_features(spark):
+    """A NULL or empty text yields no rows and does not fail the task
+    that also carries a page with mentions."""
+    pdf = pd.DataFrame(
+        {"url": ["n", "e", "ok"], "text": [None, "", "at (1.500000,2.500000)"]}
+    )
+    pages = spark.createDataFrame(pdf, "url string, text string").coalesce(1)
+    got = extract_features(pages).collect()
+    assert [(r.url, r.feat_id, r.lon, r.lat) for r in got] == [("ok", 0, 1.5, 2.5)]
 
 
 def test_distributed_pages_generator_byte_identical(spark, pages_pdf):
@@ -85,12 +140,19 @@ def test_distributed_pages_generator_byte_identical(spark, pages_pdf):
 def test_spatial_join_matches_bruteforce(spark, pages_pdf, polygons):
     pages = spark.createDataFrame(pages_pdf)
     feats = extract_features(pages)
-    joined = spatial_join(feats, polygons, res_min=3, res_max=8)
+    sc = spark.sparkContext
+    sc.setJobGroup("spatial_join_plan", "spatial_join planning")
+    try:
+        joined = spatial_join(feats, polygons, res_min=3, res_max=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # planning reads the cover levels on the driver: no Spark job
+    assert list(sc.statusTracker().getJobIdsForGroup("spatial_join_plan")) == []
     got = {
         (r.url, int(r.feat_id), int(r.poly_id))
         for r in joined.select("url", "feat_id", "poly_id").collect()
     }
-    want = brute_force_pairs(extract_features_pdf(pages_pdf), polygons)
+    want = brute_force_pairs(reference_features(pages_pdf), polygons)
     assert got == want
     assert len(want) > 50  # fixture sanity: the join is non-trivial
 
@@ -102,7 +164,7 @@ def test_spatial_join_count(spark, pages_pdf, polygons):
         int(r.poly_id): int(r.n_points)
         for r in spatial_join_count(feats, polygons, res_min=3, res_max=8).collect()
     }
-    want_pairs = brute_force_pairs(extract_features_pdf(pages_pdf), polygons)
+    want_pairs = brute_force_pairs(reference_features(pages_pdf), polygons)
     want = {}
     for _, _, pid in want_pairs:
         want[pid] = want.get(pid, 0) + 1

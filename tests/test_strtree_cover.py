@@ -1,6 +1,9 @@
 """STRtree and polygon cell-cover tests."""
 
+import hashlib
+
 import numpy as np
+import pandas as pd
 
 from gdal_spark import cells, cover, geometry, strtree, testdata, wkb
 
@@ -125,8 +128,6 @@ def test_cover_multipolygon_no_overlap():
             [np.array([[2, 2], [6, 2], [6, 6], [2, 6], [2, 2]], float)],
         ]
     )
-    import pandas as pd
-
     pdf = pd.DataFrame({"poly_id": [1], "geom_wkb": [buf]})
     cov = cover.cover_polygons_pdf(pdf, res_min=5, res_max=8)
     # invariant: per polygon, no cover cell is an ancestor of another
@@ -136,3 +137,59 @@ def test_cover_multipolygon_no_overlap():
         for _ in range(int(c >> 58) - 5):
             cur = np.int64(int(cells.parent(cur)))
             assert int(cur) not in cellset
+
+
+def _holed_multipolygons(n: int = 24, seed: int = 11) -> pd.DataFrame:
+    """Seeded multipolygons: 1-3 blob parts scattered around a centre,
+    so parts of one polygon often overlap, each part with 0-2 holes."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for pid in range(n):
+        x0, y0 = rng.uniform(-150, 150), rng.uniform(-70, 70)
+        parts = []
+        for _ in range(int(rng.integers(1, 4))):
+            r = float(rng.uniform(0.5, 12.0))
+            cx, cy = x0 + rng.uniform(-r, r), y0 + rng.uniform(-r, r)
+            k, ring_seed = int(rng.integers(6, 16)), int(rng.integers(1 << 30))
+            rings = [testdata._blob_ring(cx, cy, r, k, ring_seed)]
+            for _ in range(int(rng.integers(0, 3))):
+                hx = cx + rng.uniform(-0.2, 0.2) * r
+                hy = cy + rng.uniform(-0.2, 0.2) * r
+                hole = testdata._blob_ring(hx, hy, 0.2 * r, 7, int(rng.integers(1 << 30)))
+                rings.append(hole[::-1].copy())
+            parts.append(rings)
+        rows.append({"poly_id": pid, "geom_wkb": wkb.multipolygon(parts)})
+    return pd.DataFrame(rows)
+
+
+def _cover_sha256(cov: pd.DataFrame) -> str:
+    h = hashlib.sha256()
+    for col in ("poly_id", "cell_id", "res", "full"):
+        h.update(np.ascontiguousarray(cov[col].to_numpy()).tobytes())
+    return h.hexdigest()
+
+
+# sha256 of the cover rows, in row order, as the per-cell quadtree walk
+# produced them; the batched cover must reproduce them byte for byte
+# (order, dtypes and the refinement budget included).
+COVER_SHA256 = {
+    ("polygons_pdf(100)", 2, 7, 1024):
+        "5602ac3ef17dc2ce07120d88b86e10e801f4fb1d2278beab8dc44f696a0439d5",
+    ("polygons_pdf(100)", 3, 9, 1024):
+        "e098d8ae214c6108098248029bc59292ab70bbc929adb088405f5839a73c29c2",
+    ("polygons_pdf(100)", 2, 9, 64):
+        "c0b75572d5009787482588fa82a0b0c7ca644955db8de842d57f7274eae6d748",
+    ("holed multipolygons", 2, 9, 256):
+        "503cf0f7174f7103016c6a526860fc5d99db77d3b26f314dba0f85e06a254242",
+}
+
+
+def test_cover_bytes_pinned():
+    inputs = {
+        "polygons_pdf(100)": testdata.polygons_pdf(100),
+        "holed multipolygons": _holed_multipolygons(),
+    }
+    for (name, res_min, res_max, max_cells), want in COVER_SHA256.items():
+        cov = cover.cover_polygons_pdf(inputs[name], res_min, res_max, max_cells)
+        assert cov.dtypes.tolist() == ["int64", "int64", "int32", "bool"]
+        assert _cover_sha256(cov) == want, (name, res_min, res_max, max_cells)

@@ -23,7 +23,9 @@ SF = "/root/testdata/sf0.001"
 
 NOTES = {
     "spatial_join": """Intended shape: the point side NEVER shuffles — cell ids are
-codegen'd projections, the cover table broadcasts (BroadcastHashJoin),
+one codegen'd Generate (explode of the per-level cell expressions, the
+levels read from the driver's pandas cover: planning runs no Spark
+job), the cover table broadcasts (BroadcastHashJoin),
 the PIP pandas UDF (ArrowEvalPython) sits after the join. Catalyst
 extracts Python UDFs and evaluates them on every candidate row, so the
 full-cover shortcut lives INSIDE the kernel: the `full` column is the
@@ -42,8 +44,11 @@ pending set.""",
     "q1_pricing_summary": """Classic scan→partial agg→exchange→final agg; filters pushed
 to the parquet scan (PushedFilters), only referenced columns read
 (ReadSchema).""",
-    "extract_features": """Single mapInPandas over a pruned (url, text) projection —
-the scan never materializes html/warc_ts/lang.""",
+    "extract_features": """No Python: one Generate posexplode over regexp_extract_all on
+a pruned (url, text) projection, then two casts, all in one
+whole-stage codegen stage (*(2)). The MapInPandas under it is the
+synthetic pages generator standing in for the scan; a real scan
+never materializes html/warc_ts/lang.""",
     "layer_intersection": """Layer algebra A∩B: ONE narrow mapInPandas over the A scan —
 the convex B set rides a SparkContext broadcast (not visible as a
 plan node), the bbox pretest and clipping happen per batch, and no

@@ -13,7 +13,7 @@ CPUs and the comparison is meaningless).
 Method: the pages table is materialized to parquet ONCE (setup,
 untimed — the in-sandbox stand-in for the north rule's Iceberg pages
 table), then each pinned child runs the real job — column-pruned
-(url, text) parquet scan → extract (mapInPandas) → cell-cover
+(url, text) parquet scan → extract (JVM regex) → cell-cover
 broadcast spatial join + PIP — `count()` ITERS times; per-iteration
 throughput is reported and the best iteration is used for the
 efficiency ratio (the host is shared/noisy; best-of-N approximates
