@@ -2932,103 +2932,29 @@ def _q_geo_layer_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     includes donut (holed) and multipart B's: piece areas per pair sum
     over the disjoint decomposition, so hole interiors are excluded
     exactly (ogrlayer.cpp:3489-3503 full-geometry semantics)."""
-    from gdal_spark import geometry, wkb
     from gdal_spark.operators.layer_algebra import intersection_pieces
 
-    a_pdf = _la_fixture(_LA_NA, 101, 8, 18)
     b_pdf = _la_fixture_b()
-    a_df = spark.createDataFrame(
-        a_pdf[["poly_id", "geom_wkb"]].rename(columns={"poly_id": "a_id"})
-    )
-    pieces = intersection_pieces(a_df, b_pdf)
-    pair = pieces.groupBy("a_id", "b_id").agg(
-        F.sum("area").alias("inter")
+    return _la_pair_areas(
+        spark, lambda a_df: intersection_pieces(a_df, b_pdf)
     )
 
-    aa = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "a_id": a_pdf["poly_id"].astype("int64"),
-                "__area_a": [
-                    abs(
-                        geometry.ring_area(
-                            wkb.polygon_rings(bytes(b))[0][0]
-                        )
-                    )
-                    for b in a_pdf["geom_wkb"]
-                ],
-            }
-        )
-    )
-    b_area: dict[int, float] = {}
-    for bid, comp, sgn, ring in _la_b_components():
-        b_area[bid] = b_area.get(bid, 0.0) + sgn * abs(
-            geometry.ring_area(ring)
-        )
-    ab = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "b_id": sorted(b_area),
-                "__area_b": [b_area[k] for k in sorted(b_area)],
-            }
-        )
-    )
-    out = (
-        pair.join(F.broadcast(aa), "a_id")
-        .join(F.broadcast(ab), "b_id")
-        .select(
-            "a_id", "b_id",
-            F.round(F.col("inter") * 100).cast("long").alias("inter_q2"),
-            F.round(
-                (F.col("__area_a") + F.col("__area_b")
-                 - F.col("inter")) * 100
-            ).cast("long").alias("union_q2"),
-            F.round(
-                (F.col("__area_a") + F.col("__area_b")
-                 - 2 * F.col("inter")) * 100
-            ).cast("long").alias("sym_q2"),
-        )
-        .filter(F.col("inter_q2") >= 1)
-    )
-    return out
 
-
-def _la_comp_edges_values() -> str:
-    """Signed-component ring edges as SQL VALUES:
-    (bid, comp, sgn, x1, y1, x2, y2)."""
-    vals = []
-    for bid, comp, sgn, ring in _la_b_components():
-        for k in range(len(ring) - 1):
-            x1, y1 = ring[k]
-            x2, y2 = ring[k + 1]
-            vals.append(
-                f"({bid}, {comp}, {sgn}, {x1:.0f}e0, {y1:.0f}e0,"
-                f" {x2:.0f}e0, {y2:.0f}e0)"
-            )
-    return ", ".join(vals)
-
-
-def _q_geo_layer_algebra_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layer algebra at DataFrame × DataFrame scale: the SAME pair
-    areas as geo_layer_algebra, but with the method layer as a Spark
-    DataFrame run through intersection_join (cell-cover equi-join
-    prefilter → per-pair clip kernel; no driver-resident B, no cross
-    join) — OGRLayer::Intersection on two arbitrary layers
-    (ogr/ogrlayer.cpp:3345, :3450 filter pushdown)."""
+def _la_pair_areas(spark: SparkSession, pieces_of) -> DataFrame:
+    """The layer-algebra tail shared by both gates: ``pieces_of(a_df)``
+    clips the A fixture against the method layer; per-pair piece
+    areas → quantized intersection, union and symmetric-difference
+    areas."""
     from gdal_spark import geometry, wkb
-    from gdal_spark.operators.layer_algebra import intersection_join
 
     a_pdf = _la_fixture(_LA_NA, 101, 8, 18)
     a_df = spark.createDataFrame(
         a_pdf[["poly_id", "geom_wkb"]].rename(columns={"poly_id": "a_id"})
     )
-    b_df = spark.createDataFrame(
-        _la_fixture_b().rename(columns={"poly_id": "b_id"})
-    )
-    pieces = intersection_join(a_df, b_df, cell=32.0)
-    pair = pieces.groupBy("a_id", "b_id").agg(
+    pair = pieces_of(a_df).groupBy("a_id", "b_id").agg(
         F.sum("area").alias("inter")
     )
+
     aa = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -3073,6 +2999,38 @@ def _q_geo_layer_algebra_big(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("sym_q2"),
         )
         .filter(F.col("inter_q2") >= 1)
+    )
+
+
+def _la_comp_edges_values() -> str:
+    """Signed-component ring edges as SQL VALUES:
+    (bid, comp, sgn, x1, y1, x2, y2)."""
+    vals = []
+    for bid, comp, sgn, ring in _la_b_components():
+        for k in range(len(ring) - 1):
+            x1, y1 = ring[k]
+            x2, y2 = ring[k + 1]
+            vals.append(
+                f"({bid}, {comp}, {sgn}, {x1:.0f}e0, {y1:.0f}e0,"
+                f" {x2:.0f}e0, {y2:.0f}e0)"
+            )
+    return ", ".join(vals)
+
+
+def _q_geo_layer_algebra_big(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Layer algebra at DataFrame × DataFrame scale: the SAME pair
+    areas as geo_layer_algebra, but with the method layer as a Spark
+    DataFrame run through intersection_join (cell-cover equi-join
+    prefilter → per-pair clip kernel; no driver-resident B, no cross
+    join) — OGRLayer::Intersection on two arbitrary layers
+    (ogr/ogrlayer.cpp:3345, :3450 filter pushdown)."""
+    from gdal_spark.operators.layer_algebra import intersection_join
+
+    b_df = spark.createDataFrame(
+        _la_fixture_b().rename(columns={"poly_id": "b_id"})
+    )
+    return _la_pair_areas(
+        spark, lambda a_df: intersection_join(a_df, b_df, cell=32.0)
     )
 
 

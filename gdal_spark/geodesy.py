@@ -41,63 +41,7 @@ def vincenty_distance(
 ) -> np.ndarray:
     """Ellipsoidal inverse distance (metres), fixed 8-iteration
     Vincenty; coincident points → 0. Inputs in degrees."""
-    phi1 = np.radians(np.asarray(lat1, dtype=np.float64))
-    phi2 = np.radians(np.asarray(lat2, dtype=np.float64))
-    L = np.radians(
-        np.asarray(lon2, dtype=np.float64)
-        - np.asarray(lon1, dtype=np.float64)
-    )
-    U1 = np.arctan((1.0 - _F) * np.tan(phi1))
-    U2 = np.arctan((1.0 - _F) * np.tan(phi2))
-    sU1, cU1 = np.sin(U1), np.cos(U1)
-    sU2, cU2 = np.sin(U2), np.cos(U2)
-    lam = L.copy()
-    sin_s = np.zeros_like(lam)
-    cos_s = np.ones_like(lam)
-    sigma = np.zeros_like(lam)
-    cos2a = np.ones_like(lam)
-    cos2sm = np.zeros_like(lam)
-    for _ in range(VINCENTY_ITERS):
-        sl, cl = np.sin(lam), np.cos(lam)
-        t1 = cU2 * sl
-        t2 = cU1 * sU2 - sU1 * cU2 * cl
-        sin_s = np.sqrt(t1 * t1 + t2 * t2)
-        cos_s = sU1 * sU2 + cU1 * cU2 * cl
-        sigma = np.arctan2(sin_s, cos_s)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sin_a = np.where(
-                sin_s == 0.0, 0.0, cU1 * cU2 * sl / sin_s
-            )
-        cos2a = 1.0 - sin_a * sin_a
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos2sm = np.where(
-                cos2a == 0.0, 0.0, cos_s - 2.0 * sU1 * sU2 / cos2a
-            )
-        C = _F / 16.0 * cos2a * (4.0 + _F * (4.0 - 3.0 * cos2a))
-        lam = L + (1.0 - C) * _F * sin_a * (
-            sigma + C * sin_s * (
-                cos2sm + C * cos_s * (-1.0 + 2.0 * cos2sm * cos2sm)
-            )
-        )
-    # single precomputed constant (mirrors the SQL oracle's
-    # `cos2a * u2c` association exactly)
-    u2 = cos2a * _U2C
-    big_a = 1.0 + u2 / 16384.0 * (
-        4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2))
-    )
-    big_b = u2 / 1024.0 * (
-        256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2))
-    )
-    dsig = big_b * sin_s * (
-        cos2sm + big_b / 4.0 * (
-            cos_s * (-1.0 + 2.0 * cos2sm * cos2sm)
-            - big_b / 6.0 * cos2sm
-            * (-3.0 + 4.0 * sin_s * sin_s)
-            * (-3.0 + 4.0 * cos2sm * cos2sm)
-        )
-    )
-    s = _B * big_a * (sigma - dsig)
-    return np.where(sin_s == 0.0, 0.0, s)
+    return vincenty_inverse_full(lat1, lon1, lat2, lon2)[0]
 
 
 def _authalic_q(sphi: np.ndarray) -> np.ndarray:
@@ -146,8 +90,8 @@ def vincenty_inverse_full(
     lat1, lon1, lat2, lon2,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Vincenty inverse → (distance metres, forward azimuth α₁ rad),
-    same fixed 8-iteration unroll as :func:`vincenty_distance`.
-    Coincident points → (0, 0)."""
+    fixed ``VINCENTY_ITERS``-iteration unroll. Coincident points →
+    (0, 0)."""
     phi1 = np.radians(np.asarray(lat1, dtype=np.float64))
     phi2 = np.radians(np.asarray(lat2, dtype=np.float64))
     L = np.radians(
@@ -186,6 +130,8 @@ def vincenty_inverse_full(
                 cos2sm + C * cos_s * (-1.0 + 2.0 * cos2sm * cos2sm)
             )
         )
+    # single precomputed constant (mirrors the SQL oracle's
+    # `cos2a * u2c` association exactly)
     u2 = cos2a * _U2C
     big_a = 1.0 + u2 / 16384.0 * (
         4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2))

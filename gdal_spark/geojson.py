@@ -104,7 +104,12 @@ def read_geojson_seq(spark: SparkSession, path: str) -> DataFrame:
     """Newline-delimited features via the native splittable text
     source + one Arrow parse kernel. Leading RS (0x1e, the RFC 8142
     framing the reference also accepts) is stripped."""
-    lines = spark.read.text(path)
+    return _parse_lines(spark.read.text(path))
+
+
+def _parse_lines(lines: DataFrame) -> DataFrame:
+    """The line parse kernel shared by the batch and the streaming
+    GeoJSONSeq scan: text ``value`` rows → _FEATURE_SCHEMA features."""
 
     def gen(batches):
         for pdf in batches:
@@ -214,16 +219,4 @@ def read_geojson_seq_stream(spark: SparkSession, path: str) -> DataFrame:
     watermark or state store; downstream composes with
     ``streaming.stream_spatial_join`` for the geocoded-arrival
     pipeline."""
-    lines = spark.readStream.format("text").load(path)
-
-    def gen(batches):
-        for pdf in batches:
-            objs = []
-            for ln in pdf["value"]:
-                s = ln.strip().lstrip("\x1e")
-                if s:
-                    objs.append(json.loads(s))
-            if objs:
-                yield _parse_features(objs)
-
-    return lines.mapInPandas(gen, _FEATURE_SCHEMA)
+    return _parse_lines(spark.readStream.format("text").load(path))

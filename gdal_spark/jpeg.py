@@ -24,10 +24,12 @@ only the entropy loop is per-block Python, bounded by tile size).
 
 from __future__ import annotations
 
-import os
 import struct
+from functools import partial
 
 import numpy as np
+
+from .png import write_tiles
 
 # ---------------------------------------------------------------------------
 # constant tables (ITU-T T.81 Annex K)
@@ -571,35 +573,6 @@ def write_tiles_jpeg(tiles, out_dir: str, quality: int = 90,
     layout. Returns a DataFrame (z, tx, ty, path, n_bytes) of what
     landed. Same shared-filesystem contract as ``png.write_tiles_png``.
     """
-    import pandas as pd
-
-    if scheme not in ("xyz", "tms"):
-        raise ValueError(scheme)
-
-    def write(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = np.frombuffer(r.data, dtype=np.uint8).reshape(
-                    int(r.h), int(r.w)
-                )
-                ty = (
-                    int(r.ty) if scheme == "xyz"
-                    else (1 << int(r.z)) - 1 - int(r.ty)
-                )
-                d = os.path.join(out_dir, str(int(r.z)), str(int(r.tx)))
-                os.makedirs(d, exist_ok=True)
-                path = os.path.join(d, f"{ty}.jpg")
-                buf = jpeg_encode(a, quality=quality)
-                with open(path, "wb") as f:
-                    f.write(buf)
-                rows.append(
-                    (int(r.z), int(r.tx), int(r.ty), path, len(buf))
-                )
-            yield pd.DataFrame(
-                rows, columns=["z", "tx", "ty", "path", "n_bytes"]
-            )
-
-    return tiles.mapInPandas(
-        write, "z long, tx long, ty long, path string, n_bytes long"
+    return write_tiles(
+        tiles, out_dir, scheme, "jpg", partial(jpeg_encode, quality=quality)
     )

@@ -457,13 +457,12 @@ def write_tiles_mvt(
                 if keep.any():
                     parts, ftype = [pt[keep]], POINT
             elif gt in (_wkb.LINESTRING, _wkb.MULTILINESTRING):
-                lines = [payload] if gt == _wkb.LINESTRING else payload
                 rect = np.array(
                     [[lo, lo], [hi, lo], [hi, hi], [lo, hi]], float
                 )
-                for ls in lines:
+                for ls in _wkb.parts(gt, payload):
                     local = _tile_local(
-                        np.asarray(ls), tx, ty_tms, zoom, extent
+                        ls, tx, ty_tms, zoom, extent
                     ).astype(float)
                     t_lo, t_hi, valid = geom.clip_segments_convex(
                         local[:-1], local[1:], rect

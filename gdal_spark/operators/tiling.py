@@ -31,6 +31,8 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -148,22 +150,27 @@ def burn_points_tiles(
 # ---------------------------------------------------------------------------
 
 
-def overview_level(tiles: DataFrame, method: str = "average") -> DataFrame:
+def _overview(tiles: DataFrame, pad: int, reduce) -> DataFrame:
     """One pyramid level up: groupBy(parent tile) over ≤4 children,
-    2x2 block-reduce each child, place in its parent quadrant
-    (gdal2tiles create_overview_tile semantics, gdal2tiles.py:1471;
-    reduce semantics gcore/overview.cpp). Missing children → 0."""
+    ``reduce`` each child (padded by a ``pad``-pixel halo exchange when
+    ``pad`` > 0) to half size and place it in its parent quadrant
+    (gdal2tiles create_overview_tile semantics, gdal2tiles.py:1471).
+    Missing children → 0."""
+    if pad:
+        tiles = add_halo(tiles, pad=pad)
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
         ts = int(pdf["w"].iloc[0])
         half = ts // 2
         out = np.zeros((ts, ts), dtype=np.uint8)
         for _, row in pdf.iterrows():
-            arr = _tile_array(int(row["w"]), int(row["h"]), row["data"])
-            red = raster.block_reduce_2x2(arr, method)
+            arr = _tile_array(
+                int(row["w"]) + 2 * pad, int(row["h"]) + 2 * pad, row["data"]
+            )
+            red = reduce(arr)
             qx = int(row["tx"]) % 2
             qy = int(row["ty"]) % 2
-            out[qy * half : (qy + 1) * half, qx * half : (qx + 1) * half] = red
+            out[qy * half:(qy + 1) * half, qx * half:(qx + 1) * half] = red
         return pd.DataFrame(
             {
                 "z": [int(pdf["z"].iloc[0]) - 1],
@@ -185,100 +192,54 @@ def overview_level(tiles: DataFrame, method: str = "average") -> DataFrame:
     )
 
 
-def overview_gauss(tiles: DataFrame) -> DataFrame:
-    """GAUSS overview level (gcore/overview.cpp:1842): 3x3 binomial
-    kernel at each even source pixel needs 1 neighbor pixel beyond the
-    tile — one halo exchange, then the same parent-quadrant assembly
-    as overview_level."""
-    padded = add_halo(tiles, pad=1)
+# method → (halo pad, per-child 2x reducer), reducers from
+# gcore/overview.cpp: GAUSS (:1842) needs 1 neighbor pixel beyond the
+# tile, CUBIC's 8-tap Catmull-Rom decimation (:3150) needs 3
+_OVERVIEW = {
+    **{
+        m: (0, partial(raster.block_reduce_2x2, method=m))
+        for m in ("nearest", "average", "mode", "rms")
+    },
+    "gauss": (1, raster.gauss_3x3),
+    "cubic": (3, partial(raster.cubic_decimate_2x, pad=3)),
+}
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = int(pdf["w"].iloc[0])
-        half = ts // 2
-        out = np.zeros((ts, ts), dtype=np.uint8)
-        for _, row in pdf.iterrows():
-            p = int(row["pad"])
-            a = np.frombuffer(row["data"], dtype=np.uint8).reshape(
-                int(row["h"]) + 2 * p, int(row["w"]) + 2 * p
-            )
-            red = raster.gauss_3x3(a)
-            qx = int(row["tx"]) % 2
-            qy = int(row["ty"]) % 2
-            out[qy * half:(qy + 1) * half, qx * half:(qx + 1) * half] = red
-        return pd.DataFrame(
-            {
-                "z": [int(pdf["z"].iloc[0]) - 1],
-                "tx": [int(pdf["tx"].iloc[0]) // 2],
-                "ty": [int(pdf["ty"].iloc[0]) // 2],
-                "w": [ts],
-                "h": [ts],
-                "data": [out.tobytes()],
-            }
+
+def _overview_method(method: str):
+    if method not in _OVERVIEW:
+        raise ValueError(
+            f"unknown overview method {method!r}; one of {sorted(_OVERVIEW)}"
         )
+    return _OVERVIEW[method]
 
-    parent = padded.withColumn(
-        "ptx", (F.col("tx") / 2).cast("long")
-    ).withColumn("pty", (F.col("ty") / 2).cast("long"))
-    return parent.groupBy("z", "ptx", "pty").applyInPandas(
-        reduce_group, TILE_SCHEMA
-    )
+
+def overview_level(tiles: DataFrame, method: str = "average") -> DataFrame:
+    """One pyramid level up; ``method`` is a key of ``_OVERVIEW``."""
+    return _overview(tiles, *_overview_method(method))
+
+
+def overview_gauss(tiles: DataFrame) -> DataFrame:
+    """GAUSS overview level: 3x3 binomial kernel over a 1-px halo."""
+    return overview_level(tiles, "gauss")
 
 
 def overview_cubic(tiles: DataFrame) -> DataFrame:
-    """CUBIC overview level (gcore/overview.cpp:3150 convolution path,
-    absent in r02): 8-tap Catmull-Rom decimation per axis needs 3
-    pixels beyond the tile — one halo exchange, then the same
-    parent-quadrant assembly as overview_level."""
-    padded = add_halo(tiles, pad=3)
-
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = int(pdf["w"].iloc[0])
-        half = ts // 2
-        out = np.zeros((ts, ts), dtype=np.uint8)
-        for _, row in pdf.iterrows():
-            p = int(row["pad"])
-            a = np.frombuffer(row["data"], dtype=np.uint8).reshape(
-                int(row["h"]) + 2 * p, int(row["w"]) + 2 * p
-            )
-            red = raster.cubic_decimate_2x(a, pad=p)
-            qx = int(row["tx"]) % 2
-            qy = int(row["ty"]) % 2
-            out[qy * half:(qy + 1) * half, qx * half:(qx + 1) * half] = red
-        return pd.DataFrame(
-            {
-                "z": [int(pdf["z"].iloc[0]) - 1],
-                "tx": [int(pdf["tx"].iloc[0]) // 2],
-                "ty": [int(pdf["ty"].iloc[0]) // 2],
-                "w": [ts],
-                "h": [ts],
-                "data": [out.tobytes()],
-            }
-        )
-
-    parent = padded.withColumn(
-        "ptx", (F.col("tx") / 2).cast("long")
-    ).withColumn("pty", (F.col("ty") / 2).cast("long"))
-    return parent.groupBy("z", "ptx", "pty").applyInPandas(
-        reduce_group, TILE_SCHEMA
-    )
+    """CUBIC overview level: 8-tap Catmull-Rom over a 3-px halo."""
+    return overview_level(tiles, "cubic")
 
 
 def pyramid(
     base: DataFrame, base_zoom: int, min_zoom: int = 0, method: str = "average"
 ) -> DataFrame:
     """Full overview pyramid base_zoom → min_zoom (inclusive), unioned.
-    Each level is one narrow groupBy shuffle; levels are sequential
-    stages exactly as in the reference tiler. All resamplers dispatch
-    here — the halo-exchange ones (gauss, cubic) included."""
+    Each level is one narrow groupBy shuffle (after a halo exchange for
+    gauss and cubic); levels are sequential stages exactly as in the
+    reference tiler."""
+    pad, reduce = _overview_method(method)
     out = base
     level = base
     for _ in range(base_zoom - min_zoom):
-        if method == "gauss":
-            level = overview_gauss(level)
-        elif method == "cubic":
-            level = overview_cubic(level)
-        else:
-            level = overview_level(level, method)
+        level = _overview(level, pad, reduce)
         out = out.unionByName(level)
     return out
 

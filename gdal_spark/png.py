@@ -138,6 +138,13 @@ def write_tiles_png(tiles, out_dir: str, scheme: str = "xyz"):
     a real cluster; any local path in local mode) — same contract as
     gdal2tiles' output directory.
     """
+    return write_tiles(tiles, out_dir, scheme, "png", png_encode)
+
+
+def write_tiles(tiles, out_dir: str, scheme: str, ext: str, encode):
+    """The tile sink behind :func:`write_tiles_png` and
+    ``jpeg.write_tiles_jpeg``: ``encode(uint8 array) → bytes`` per
+    tile, written as ``out_dir/{z}/{tx}/{ty}.{ext}``."""
     import pandas as pd
 
     if scheme not in ("xyz", "tms"):
@@ -156,8 +163,8 @@ def write_tiles_png(tiles, out_dir: str, scheme: str = "xyz"):
                 )
                 d = os.path.join(out_dir, str(int(r.z)), str(int(r.tx)))
                 os.makedirs(d, exist_ok=True)
-                path = os.path.join(d, f"{ty}.png")
-                buf = png_encode(a)
+                path = os.path.join(d, f"{ty}.{ext}")
+                buf = encode(a)
                 with open(path, "wb") as f:
                     f.write(buf)
                 rows.append(

@@ -208,6 +208,42 @@ def cubic_weights(t: np.ndarray) -> tuple:
     return w0, w1, w2, w3
 
 
+def _warp_4x4_q(
+    src: np.ndarray,
+    sx: np.ndarray,
+    sy: np.ndarray,
+    weights,
+    scale: int,
+    divisor: float,
+    nodata: int,
+) -> np.ndarray:
+    """The 4x4-support gather behind the cubic warp kernels:
+    floor(Σ wy_j wx_i p_ij * scale / divisor + 0.5), with
+    ``weights(t)`` giving the taps at offsets -1, 0, +1, +2. Support
+    outside the window → nodata."""
+    fx = sx - 0.5
+    fy = sy - 0.5
+    x0 = np.floor(fx).astype(np.int64)
+    y0 = np.floor(fy).astype(np.int64)
+    t = fx - x0
+    u = fy - y0
+    h, w = src.shape
+    ok = (x0 - 1 >= 0) & (x0 + 2 <= w - 1) & (y0 - 1 >= 0) & (y0 + 2 <= h - 1)
+    xc = np.clip(x0, 1, max(w - 3, 1))
+    yc = np.clip(y0, 1, max(h - 3, 1))
+    wx = weights(t)
+    wy = weights(u)
+    acc = np.zeros(sx.shape, dtype=np.float64)
+    for j in range(4):
+        rowacc = np.zeros(sx.shape, dtype=np.float64)
+        for i in range(4):
+            rowacc += wx[i] * src[yc + j - 1, xc + i - 1]
+        acc += wy[j] * rowacc
+    out = np.floor(acc * scale / divisor + 0.5).astype(np.int64)
+    out[~ok] = nodata
+    return out
+
+
 def warp_cubic_q(
     src: np.ndarray,
     sx: np.ndarray,
@@ -223,27 +259,7 @@ def warp_cubic_q(
     — bit-reproducible against an ANSI-SQL oracle. Support outside the
     window → nodata (large negative: cubic undershoot makes small
     negatives legitimate values)."""
-    fx = sx - 0.5
-    fy = sy - 0.5
-    x0 = np.floor(fx).astype(np.int64)
-    y0 = np.floor(fy).astype(np.int64)
-    t = fx - x0
-    u = fy - y0
-    h, w = src.shape
-    ok = (x0 - 1 >= 0) & (x0 + 2 <= w - 1) & (y0 - 1 >= 0) & (y0 + 2 <= h - 1)
-    xc = np.clip(x0, 1, max(w - 3, 1))
-    yc = np.clip(y0, 1, max(h - 3, 1))
-    wx = cubic_weights(t)
-    wy = cubic_weights(u)
-    acc = np.zeros(sx.shape, dtype=np.float64)
-    for j in range(4):
-        rowacc = np.zeros(sx.shape, dtype=np.float64)
-        for i in range(4):
-            rowacc += wx[i] * src[yc + j - 1, xc + i - 1]
-        acc += wy[j] * rowacc
-    out = np.floor(acc * scale + 0.5).astype(np.int64)
-    out[~ok] = nodata
-    return out
+    return _warp_4x4_q(src, sx, sy, cubic_weights, scale, 1.0, nodata)
 
 
 def bspline_weights(t: np.ndarray) -> tuple:
@@ -276,27 +292,7 @@ def warp_cubicspline_q(
     exact /36). For dyadic source grids the pre-division accumulator
     is an exact dyadic double, and /36 + rounding is deterministic in
     both engines."""
-    fx = sx - 0.5
-    fy = sy - 0.5
-    x0 = np.floor(fx).astype(np.int64)
-    y0 = np.floor(fy).astype(np.int64)
-    t = fx - x0
-    u = fy - y0
-    h, w = src.shape
-    ok = (x0 - 1 >= 0) & (x0 + 2 <= w - 1) & (y0 - 1 >= 0) & (y0 + 2 <= h - 1)
-    xc = np.clip(x0, 1, max(w - 3, 1))
-    yc = np.clip(y0, 1, max(h - 3, 1))
-    wx = bspline_weights(t)
-    wy = bspline_weights(u)
-    acc = np.zeros(sx.shape, dtype=np.float64)
-    for j in range(4):
-        rowacc = np.zeros(sx.shape, dtype=np.float64)
-        for i in range(4):
-            rowacc += wx[i] * src[yc + j - 1, xc + i - 1]
-        acc += wy[j] * rowacc
-    out = np.floor(acc * scale / 36.0 + 0.5).astype(np.int64)
-    out[~ok] = nodata
-    return out
+    return _warp_4x4_q(src, sx, sy, bspline_weights, scale, 36.0, nodata)
 
 
 def lanczos_weights(t: np.ndarray, a: int = 3) -> list:

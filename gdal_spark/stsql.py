@@ -318,20 +318,11 @@ def register_st_functions(spark) -> list[str]:
     def _geom_points(b):
         """All vertices as (N, 2) + whether the geometry is areal."""
         gtype, payload = wkb.parse(bytes(b))
-        if gtype == wkb.POINT:
-            return np.asarray([payload], dtype=np.float64), False
-        if gtype == wkb.POLYGON:
-            parts = [payload]
-        elif gtype == wkb.MULTIPOLYGON:
-            parts = payload
-        else:
+        if gtype not in (wkb.POINT, wkb.POLYGON, wkb.MULTIPOLYGON):
             raise ValueError(
                 "st_distance supports POINT and (MULTI)POLYGON"
             )
-        pts = np.vstack(
-            [np.asarray(r, dtype=np.float64) for p in parts for r in p]
-        )
-        return pts, True
+        return np.vstack(wkb.parts(gtype, payload)), gtype != wkb.POINT
 
     def _dist_one(a, b) -> float:
         pa, areal_a = _geom_points(a)

@@ -203,11 +203,14 @@ def read_warc(spark, path: str, responses_only: bool = True) -> DataFrame:
     """Distributed WARC scan: ``binaryFile`` rows (one per file) →
     per-file parse in mapInPandas. File-level parallelism is the
     upstream-standard unit for crawls (~1 GB/file); no shuffle."""
-    files = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select("path", "content")
+    return _parse_files(
+        spark.read.format("binaryFile").load(path), responses_only
     )
+
+
+def _parse_files(files: DataFrame, responses_only: bool) -> DataFrame:
+    """The per-file WARC parse kernel shared by the batch and the
+    streaming scan: ``binaryFile`` rows → READ_SCHEMA records."""
 
     def parse(batches):
         for pdf in batches:
@@ -221,7 +224,7 @@ def read_warc(spark, path: str, responses_only: bool = True) -> DataFrame:
                 rows, columns=[f.name for f in READ_SCHEMA.fields]
             )
 
-    return files.mapInPandas(parse, READ_SCHEMA)
+    return files.select("path", "content").mapInPandas(parse, READ_SCHEMA)
 
 
 def write_warc_dir(df: DataFrame, out_dir: str,
@@ -309,19 +312,5 @@ def read_warc_stream(spark, path: str,
             "length long, content binary"
         )
         .load(path)
-        .select("path", "content")
     )
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for p, buf in zip(pdf["path"], pdf["content"]):
-                for rec in parse_warc_bytes(bytes(buf), warc_file=p):
-                    if responses_only and rec["record_type"] != "response":
-                        continue
-                    rows.append(rec)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in READ_SCHEMA.fields]
-            )
-
-    return files.mapInPandas(parse, READ_SCHEMA)
+    return _parse_files(files, responses_only)

@@ -1,6 +1,8 @@
 """Ellipsoidal geodesics: Vincenty fixed-unroll distance, authalic
 Chamberlain-Duquette area."""
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -42,6 +44,30 @@ def test_coincident_zero_and_vs_haversine():
     dh = 2 * R * np.arcsin(np.sqrt(h))
     assert abs(dv - dh) / dh < 0.005
     assert 800_000 < dv < 900_000
+
+
+def test_vincenty_bytes_pinned():
+    """Both Vincenty entry points over 10k seeded pairs, 500 of them
+    coincident and 500 near-antipodal, byte for byte (pinned before
+    vincenty_distance became the first output of
+    vincenty_inverse_full)."""
+    rng = np.random.default_rng(0)
+    n = 10_000
+    lat1, lon1 = rng.uniform(-90, 90, n), rng.uniform(-180, 180, n)
+    lat2, lon2 = rng.uniform(-90, 90, n), rng.uniform(-180, 180, n)
+    lat2[:500], lon2[:500] = lat1[:500], lon1[:500]
+    eps = rng.uniform(-1e-3, 1e-3, (2, 500))
+    lat2[500:1000] = -lat1[500:1000] + eps[0]
+    lon2[500:1000] = lon1[500:1000] + 180.0 + eps[1]
+    d = geodesy.vincenty_distance(lat1, lon1, lat2, lon2)
+    s, a1 = geodesy.vincenty_inverse_full(lat1, lon1, lat2, lon2)
+    dist = "d7e42eae9a242b28a14afbb3628b4683779ad894462cee96fbe38112ea886053"
+    assert hashlib.sha256(d.tobytes()).hexdigest() == dist
+    assert hashlib.sha256(s.tobytes()).hexdigest() == dist
+    assert hashlib.sha256(a1.tobytes()).hexdigest() == (
+        "69142d22d690af23d3d98af93502b89835c3b77a0dd765145dfd050475b0230d"
+    )
+    assert (d[:500] == 0.0).all() and (a1[:500] == 0.0).all()
 
 
 def test_cd_area_latlon_band_closed_form():

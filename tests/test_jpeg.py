@@ -123,7 +123,7 @@ class TestMultimodalDispatch:
 
 
 class TestSink:
-    def test_write_tiles_jpeg(self, spark, tmp_path):
+    def test_write_tiles_jpeg(self, spark, tmp_path, tree_sha256):
         from gdal_spark.operators.tiling import formula_tiles
 
         tiles = formula_tiles(spark, 2, 2, 32)
@@ -131,12 +131,15 @@ class TestSink:
             tiles, str(tmp_path), quality=90
         ).collect()
         assert len(out) == 4
+        assert tree_sha256(str(tmp_path)) == (
+            "b96395c0533814c8186e214b05b8acc52d83b774d0990c83d8da709ef74bb13c"
+        )
         for r in out:
             assert os.path.getsize(r.path) == r.n_bytes
             dec = jpeg.jpeg_decode(open(r.path, "rb").read())
             assert dec.shape == (32, 32)
 
-    def test_tms_flip(self, spark, tmp_path):
+    def test_tms_flip(self, spark, tmp_path, tree_sha256):
         from pyspark.sql import functions as F
 
         from gdal_spark.operators.tiling import formula_tiles
@@ -146,3 +149,6 @@ class TestSink:
             tiles, str(tmp_path), scheme="tms"
         ).collect()
         assert rows[0].path.endswith(os.path.join("2", "0", "3.jpg"))
+        assert tree_sha256(str(tmp_path)) == (
+            "cfe3c16e5084a40a61f26483165fc19d8c9ae3b6eb5880bbc26760c4cde0333c"
+        )

@@ -87,13 +87,16 @@ class TestCodec:
 
 
 class TestTileSink:
-    def test_write_pyramid_tiles(self, spark, tmp_path):
+    def test_write_pyramid_tiles(self, spark, tmp_path, tree_sha256):
         from gdal_spark.operators.tiling import formula_tiles
 
         tiles = formula_tiles(spark, 2, 2, 64)
         out = str(tmp_path / "tiles")
         manifest = png.write_tiles_png(tiles, out).collect()
         assert len(manifest) == 4
+        assert tree_sha256(out) == (
+            "25d87547d9099a8245d288ede27bc9ec40be580a48161933f93f9696cb31d000"
+        )
         for r in manifest:
             assert r.path.endswith(f"{r.z}/{r.tx}/{r.ty}.png")
             assert os.path.getsize(r.path) == r.n_bytes
@@ -108,13 +111,16 @@ class TestTileSink:
         }
         np.testing.assert_array_equal(arr, src[(r0.tx, r0.ty)])
 
-    def test_tms_flips_rows(self, spark, tmp_path):
+    def test_tms_flips_rows(self, spark, tmp_path, tree_sha256):
         from gdal_spark.operators.tiling import formula_tiles
 
         tiles = formula_tiles(spark, 2, 2, 16)
         out = str(tmp_path / "tms")
         rows = png.write_tiles_png(tiles, out, scheme="tms").collect()
         assert rows
+        assert tree_sha256(out) == (
+            "7e688bfcc1ddef3f899c6f44da15dcd75edc217169ab00dde5c3cac1b02551c2"
+        )
         for r in rows:
             flipped = (1 << r.z) - 1 - r.ty
             assert os.path.basename(r.path) == f"{flipped}.png"

@@ -1,5 +1,6 @@
 """Unit tests for raster kernels and mercator tile math (pure numpy)."""
 
+import hashlib
 import math
 
 import numpy as np
@@ -315,6 +316,26 @@ def test_warp_cubicspline_partition_of_unity_and_smoothing():
     lo = src[5:10, 5:10].min() * (1 << 14)
     hi = src[5:10, 5:10].max() * (1 << 14)
     assert lo <= v[0, 0] <= hi
+
+
+def test_warp_cubic_bytes_pinned():
+    """Both 4x4 warp kernels on a seeded grid at non-dyadic sample
+    positions, some outside the support (→ nodata), byte for byte
+    (pinned before they shared one gather)."""
+    rng = np.random.default_rng(1)
+    src = rng.integers(0, 256, (48, 48)).astype(np.uint8)
+    sx = rng.uniform(-2, 50, (64, 64))
+    sy = rng.uniform(-2, 50, (64, 64))
+    pins = {
+        raster.warp_cubic_q:
+        "df97d1d3eca10f4a0a537b28b88079214d98e206a16fe92c613a37cc23e6d481",
+        raster.warp_cubicspline_q:
+        "7f2b0f787eb23bbd7afc315690e58739d6854aae891fb88b16796dbdfe13a588",
+    }
+    for kernel, pin in pins.items():
+        out = kernel(src, sx, sy)
+        assert (out == raster.CUBIC_NODATA).any()
+        assert hashlib.sha256(out.tobytes()).hexdigest() == pin, kernel
 
 
 def test_warp_lanczos_matches_scalar_reference():

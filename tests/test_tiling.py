@@ -2,6 +2,8 @@
 numpy ground truth (the GDAL-oracle pattern of SURVEY.md §5: same
 answer computed two ways)."""
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -81,6 +83,51 @@ def test_pyramid_matches_numpy(spark, points_pdf):
             arr, levels[z][ty * ts : (ty + 1) * ts, tx * ts : (tx + 1) * ts],
             err_msg=f"tile z={z} {tx},{ty}",
         )
+
+
+# tile_checksums of pyramid(formula_tiles(4, 4, 32), 2, 0, method),
+# pinned before the six methods shared one overview body
+PYRAMID_PINS = {
+    "nearest":
+    "f763b64e9df60de6d391b9afa820dfb719c196258e8731d696909a8b02798d47",
+    "average":
+    "3d9c328ac68b29e1b52dc219d46d40d8ca97136d0d59fba09852abbff90a0c37",
+    "mode":
+    "142250a38e128265b198fff8157061264c3f7128a7e664d29f01cd1f0b07c0a2",
+    "rms":
+    "2e635a005f6e0bc39a335186af2955377cb733ba53a7004b214fda43698b4e7b",
+    "gauss":
+    "5f92661cb50343bdc35a5459f37f1d02fa9de0104bc9a5be52a1a46fbf13fdfd",
+    "cubic":
+    "0fff1cc13862bb712cacd1e6845dc87b25ea53b1d8c3578b5b6cb7abe2de36ce",
+}
+
+
+@pytest.fixture(scope="module")
+def formula_4x4(spark):
+    return tiling.formula_tiles(spark, 4, 4, 32).localCheckpoint()
+
+
+@pytest.mark.parametrize("method", sorted(PYRAMID_PINS))
+def test_pyramid_checksums_pinned(formula_4x4, method):
+    rows = tiling.tile_checksums(
+        tiling.pyramid(formula_4x4, 2, 0, method)
+    ).collect()
+    assert len(rows) == 21
+    key = repr(sorted((r.z, r.tx, r.ty, r.cks) for r in rows))
+    assert hashlib.sha256(key.encode()).hexdigest() == PYRAMID_PINS[method]
+
+
+def test_unknown_overview_method_raises_on_the_driver(spark):
+    """A bad method fails at the call, naming the method, before any
+    plan is built, on empty input too (it used to surface only as a
+    Python-worker task failure, or never)."""
+    tiles = tiling.formula_tiles(spark, 2, 2, 16)
+    for t in (tiles, tiles.limit(0)):
+        with pytest.raises(ValueError, match="'bogus'"):
+            tiling.pyramid(t, 2, 0, "bogus")
+        with pytest.raises(ValueError, match="'bogus'"):
+            tiling.overview_level(t, "bogus")
 
 
 def test_tile_checksums_roundtrip(spark):
