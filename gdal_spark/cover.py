@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from . import cells, geometry, wkb
 
@@ -31,6 +32,12 @@ INSIDE, OUTSIDE, BOUNDARY = 1, 0, 2
 # (cell, edge) lanes per numpy pass: bounds driver memory when big
 # frontiers meet rings with many vertices
 _LANES = 1 << 20
+# A point's cell id (cells.cell_sql) can round across the float bounds
+# of cells.cell_bounds, so edges are clipped against the cell widened
+# by this fraction of its size on each side.
+_CLIP_MARGIN = 1e-6
+# ring slots per BIGINT mask word (the sign bit stays clear)
+_WORD_BITS = 63
 
 
 def _spans(starts: np.ndarray, counts: np.ndarray):
@@ -38,6 +45,17 @@ def _spans(starts: np.ndarray, counts: np.ndarray):
     owner = np.repeat(np.arange(counts.size), counts)
     first = np.cumsum(counts) - counts
     return owner, np.repeat(starts - first, counts) + np.arange(owner.size)
+
+
+def _batches(ends: np.ndarray):
+    """[lo, hi) runs of items, ``ends`` their cumulative lane counts:
+    about _LANES lanes per run, at least one item."""
+    lo = 0
+    while lo < ends.size:
+        before = ends[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(ends, before + _LANES, "right")))
+        yield lo, hi
+        lo = hi
 
 
 class _Rings:
@@ -65,9 +83,12 @@ class _Rings:
         self.bbox = np.array(bbox, dtype=np.float64).reshape(-1, 4)
         self.n_edges = np.array(n_edges, dtype=np.int64)
         self.edge0 = np.cumsum(self.n_edges) - self.n_edges
+        self.edge_slot = np.repeat(np.arange(self.n_edges.size), self.n_edges)
         self.pip_ok = np.array(pip_ok, dtype=bool)
         self.hole = np.array(hole, dtype=bool)
-        self.ax, self.ay, self.bx, self.by = np.vstack(ends).T
+        self.ax, self.ay, self.bx, self.by = np.vstack(
+            ends or [np.empty((0, 4))]
+        ).T
 
     def classify(self, part, minx, miny, maxx, maxy) -> np.ndarray:
         """Rectangle i vs the polygon of part[i]: INSIDE / OUTSIDE /
@@ -88,16 +109,11 @@ class _Rings:
         cross = np.zeros(slot.size, dtype=bool)
         centre_in = np.zeros(slot.size, dtype=bool)
         near = np.nonzero(~disjoint)[0]
-        ends = np.cumsum(self.n_edges[slot[near]])
-        lo = 0
-        while lo < near.size:
-            before = ends[lo - 1] if lo else 0
-            hi = max(lo + 1, int(np.searchsorted(ends, before + _LANES, "right")))
+        for lo, hi in _batches(np.cumsum(self.n_edges[slot[near]])):
             cs = near[lo:hi]
             cross[cs], centre_in[cs] = self._edge_tests(
                 slot[cs], rx0[cs], ry0[cs], rx1[cs], ry1[cs]
             )
-            lo = hi
         hole = self.hole[slot]
         decision = np.select(
             [
@@ -161,22 +177,22 @@ def classify_rect(
     )
 
 
-def _cover_parts(parts, res_min: int, res_max: int, max_cells: int):
+def _cover_parts(rings: _Rings, res_min: int, res_max: int, max_cells: int):
     """Quadtree refinement of every part at once: (part, cell_id, full).
 
     Each part starts from the res_min cells over its outer bbox and
     refines BOUNDARY cells until res_max or its cell budget is reached;
     interior cells stay coarse (compact mixed-res cover). Rows come
     per part: full cells in level order, then boundary cells."""
-    rings = _Rings(parts)
+    n_parts = rings.n_slots.size
     start = [
         cells.cover_bbox(*rings.bbox[rings.slot0[p]], res_min)
-        for p in range(len(parts))
+        for p in range(n_parts)
     ]
-    part = np.repeat(np.arange(len(parts)), [c.size for c in start])
+    part = np.repeat(np.arange(n_parts), [c.size for c in start])
     frontier = np.concatenate(start)
-    n_full = [0] * len(parts)
-    n_boundary = [0] * len(parts)
+    n_full = [0] * n_parts
+    n_boundary = [0] * n_parts
     kept: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
     res = res_min
     while frontier.size:
@@ -186,7 +202,7 @@ def _cover_parts(parts, res_min: int, res_max: int, max_cells: int):
             # the budget counts cells in frontier order, so it is an
             # int loop; 4 children enter the next frontier per refined
             # cell and the budget weighs each of those 4 times
-            n_refined = [0] * len(parts)
+            n_refined = [0] * n_parts
             live = np.nonzero(labels != OUTSIDE)[0]
             for i, p, lab in zip(
                 live.tolist(), part[live].tolist(), labels[live].tolist()
@@ -215,7 +231,7 @@ def cover_polygon(
     max_cells: int = 1024,
 ) -> tuple[np.ndarray, np.ndarray]:
     """One polygon (outer + holes) → (cell_ids, full_flags)."""
-    _, cid, full = _cover_parts([rings], res_min, res_max, max_cells)
+    _, cid, full = _cover_parts(_Rings([rings]), res_min, res_max, max_cells)
     return cid, full
 
 
@@ -245,6 +261,35 @@ def _merge_parts(poly, cid, full):
     return poly[~covered], cid[~covered], full[~covered]
 
 
+def _cover_rows(polygons: pd.DataFrame, res_min, res_max, max_cells):
+    """(rings, owner, poly, cell_id, full): the ring table of every
+    non-empty polygon part, the polygon row of each part, and the merged
+    cover rows with ``poly`` a polygon row."""
+    parts, owner = [], []
+    for i, buf in enumerate(polygons["geom_wkb"]):
+        for rings in wkb.polygon_rings(bytes(buf)):
+            if rings:
+                parts.append(rings)
+                owner.append(i)
+    owner = np.asarray(owner, dtype=np.int64)
+    rings = _Rings(parts)
+    if not parts:
+        none = np.empty(0, dtype=np.int64)
+        return rings, owner, none, none, np.empty(0, dtype=bool)
+    part, cid, full = _cover_parts(rings, res_min, res_max, max_cells)
+    return (rings, owner, *_merge_parts(owner[part], cid, full))
+
+
+def _cover_columns(polygons: pd.DataFrame, poly, cid, full) -> dict:
+    pids = polygons["poly_id"].to_numpy().astype(np.int64)
+    return {
+        "poly_id": pids[poly],
+        "cell_id": cid,
+        "res": (cid >> 58).astype(np.int32),
+        "full": full,
+    }
+
+
 def cover_polygons_pdf(
     polygons: pd.DataFrame,
     res_min: int = 3,
@@ -258,26 +303,127 @@ def cover_polygons_pdf(
     parts are covered independently, then merged so one polygon never
     emits overlapping cells (a point must match at most ONE cover row
     per polygon — join-fanout invariant)."""
-    parts, owner = [], []
-    for i, buf in enumerate(polygons["geom_wkb"]):
-        for rings in wkb.polygon_rings(bytes(buf)):
-            if rings:
-                parts.append(rings)
-                owner.append(i)
-    if parts:
-        part, cid, full = _cover_parts(parts, res_min, res_max, max_cells)
-        poly, cid, full = _merge_parts(
-            np.asarray(owner, dtype=np.int64)[part], cid, full
-        )
-    else:
-        poly = cid = np.empty(0, dtype=np.int64)
-        full = np.empty(0, dtype=bool)
-    pids = polygons["poly_id"].to_numpy().astype(np.int64)
-    return pd.DataFrame(
-        {
-            "poly_id": pids[poly],
-            "cell_id": cid,
-            "res": (cid >> 58).astype(np.int32),
-            "full": full,
-        }
+    _, _, poly, cid, full = _cover_rows(polygons, res_min, res_max, max_cells)
+    return pd.DataFrame(_cover_columns(polygons, poly, cid, full))
+
+
+def word_name(name: str, word: int) -> str:
+    """Column or field ``name`` of mask word ``word``: word 0 keeps the
+    bare name, word k > 0 gets the suffix ``_k``."""
+    return f"{name}_{word}" if word else name
+
+
+def refine_cover(
+    polygons: pd.DataFrame,
+    res_min: int = 3,
+    res_max: int = 9,
+    max_cells: int = 1024,
+) -> tuple[pa.Table, int]:
+    """The rows of :func:`cover_polygons_pdf` with what the exact
+    point-in-polygon test of a boundary row needs, and the number W of
+    BIGINT mask words.
+
+    A full row carries nulls. A boundary row numbers the ring slots of
+    its polygon that a rightward ray from inside its cell can cross,
+    bit ``n % 63`` of word ``n // 63`` for slot n, and carries:
+
+    - per word k, the column ``word_name("edges", k)``:
+      array<struct<ax, ay, bx, by, bit>>, every edge of those slots in
+      word k that meets the cell's y-range and does not lie wholly left
+      of it, with its slot's bit. Both tests are widened by the clip
+      margin, and the grid's outer cells stay open outwards, because
+      cell ids clamp there;
+    - ``parts``: array<struct<x0, y0, x1, y1, outer, holes>>, one per
+      polygon part: the outer ring's bbox (points_in_polygon's envelope
+      pretest), and per word k the fields ``word_name("outer", k)``,
+      the outer ring's bit, and ``word_name("holes", k)``, the OR of
+      its holes' bits.
+
+    A slot with no kept edge has no crossing from any point of the
+    cell. It is not numbered, and when it is an outer ring, neither is
+    any slot of its part."""
+    rings, owner, poly, cid, full = _cover_rows(
+        polygons, res_min, res_max, max_cells
     )
+    bnd = np.nonzero(~full)[0]
+    row, edge = _clip_edges(rings, owner, len(polygons), poly[bnd], cid[bnd])
+    n_slots = rings.n_edges.size
+    outer_of_slot = np.repeat(rings.slot0, rings.n_slots)
+    # (row, slot) keys of the numbered slots, sorted
+    lane = row * n_slots + rings.edge_slot[edge]
+    key = np.unique(lane)
+    r, s = np.divmod(key, n_slots)
+    key = key[np.isin(r * n_slots + outer_of_slot[s], key)]
+    r, s = np.divmod(key, n_slots)
+    word, bit = np.divmod(np.arange(key.size) - np.searchsorted(r, r), _WORD_BITS)
+    bit = np.left_shift(np.int64(1), bit)
+    n_words = 1 + int(word.max()) if word.size else 1
+
+    numbered = np.isin(lane, key)
+    row, edge = row[numbered], edge[numbered]
+    at = np.searchsorted(key, lane[numbered])
+    nulls = pa.array(full)
+    table = pa.table(_cover_columns(polygons, poly, cid, full))
+    for k in range(n_words):
+        e = word[at] == k
+        table = table.append_column(word_name("edges", k), _row_lists(
+            nulls, bnd, row[e],
+            ax=rings.ax[edge[e]], ay=rings.ay[edge[e]],
+            bx=rings.bx[edge[e]], by=rings.by[edge[e]], bit=bit[at[e]],
+        ))
+    outer = np.nonzero(~rings.hole[s])[0]
+    hole = np.nonzero(rings.hole[s])[0]
+    part = np.searchsorted(key[outer], r[hole] * n_slots + outer_of_slot[s[hole]])
+    fields = dict(zip(("x0", "y0", "x1", "y1"), rings.bbox[s[outer]].T))
+    for k in range(n_words):
+        fields[word_name("outer", k)] = np.where(word[outer] == k, bit[outer], 0)
+        holes = np.zeros(outer.size, dtype=np.int64)
+        h = word[hole] == k
+        np.bitwise_or.at(holes, part[h], bit[hole[h]])
+        fields[word_name("holes", k)] = holes
+    table = table.append_column("parts", _row_lists(nulls, bnd, r[outer], **fields))
+    return table, n_words
+
+
+def _clip_edges(rings: _Rings, owner, n_poly: int, poly, cid):
+    """(row, edge) of every edge of polygon row ``poly[row]`` that a
+    rightward ray from inside cell ``cid[row]`` can cross, in row then
+    edge order. Rings of fewer than 3 vertices have no crossings."""
+    poly_of_edge = owner[np.repeat(np.arange(owner.size), rings.n_slots)][
+        rings.edge_slot
+    ]
+    edge0 = np.searchsorted(poly_of_edge, np.arange(n_poly))
+    n_edges = np.bincount(poly_of_edge, minlength=n_poly)[poly]
+    res, ix, iy = cells.decode(cid)
+    x0, y0, _, y1 = cells.cell_bounds(cid)
+    n = np.left_shift(np.int64(1), res)
+    x0 = np.where(ix == 0, -np.inf, x0 - 360.0 * _CLIP_MARGIN / n)
+    y0 = np.where(iy == 0, -np.inf, y0 - 180.0 * _CLIP_MARGIN / n)
+    y1 = np.where(iy == n - 1, np.inf, y1 + 180.0 * _CLIP_MARGIN / n)
+    rows, edges = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+    for lo, hi in _batches(np.cumsum(n_edges)):
+        row, e = _spans(edge0[poly[lo:hi]], n_edges[lo:hi])
+        row += lo
+        ay, by = rings.ay[e], rings.by[e]
+        keep = (
+            rings.pip_ok[rings.edge_slot[e]]
+            & (np.maximum(ay, by) >= y0[row])
+            & (np.minimum(ay, by) <= y1[row])
+            & (np.maximum(rings.ax[e], rings.bx[e]) >= x0[row])
+        )
+        rows.append(row[keep])
+        edges.append(e[keep])
+    return np.concatenate(rows), np.concatenate(edges)
+
+
+def _row_lists(null: pa.Array, bnd, row, **fields) -> pa.ListArray:
+    """One list of structs per cover row, null where ``null`` is set:
+    boundary row ``bnd[i]`` holds the items with ``row == i`` (``row``
+    is sorted)."""
+    counts = np.zeros(len(null), dtype=np.int32)
+    counts[bnd] = np.bincount(row, minlength=bnd.size)
+    offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
+    values = pa.StructArray.from_arrays(
+        [pa.array(v) for v in fields.values()], names=list(fields)
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets), values, mask=null)

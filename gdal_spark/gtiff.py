@@ -886,6 +886,7 @@ def tile_index(
     path_or_glob,
     transform=None,
     densify: int = 21,
+    opener=None,
 ) -> DataFrame:
     """gdaltindex analog (apps/gdaltindex_lib.cpp): one footprint row
     per raster file — location, dims, EPSG, bbox columns, and the
@@ -899,7 +900,9 @@ def tile_index(
     cut to their chords (GDALTranslate-style edge sampling).
 
     Header-only: each task walks the IFD of its files (a few KiB per
-    file however large the raster); no pixel byte is read. The result
+    file however large the raster) through ``opener`` (picklable
+    path→file-like; default shared-FS open — gdal_spark.io); no pixel
+    byte is read. The result
     is the driver table a mosaic/buildvrt step prunes against — at
     100 TB, the index pass touches ~0.0001% of the bytes.
     """
@@ -910,6 +913,9 @@ def tile_index(
     )
     if not paths:
         raise FileNotFoundError(f"no files match {path_or_glob!r}")
+    from .io import local_opener
+
+    opener = opener or local_opener
     src = spark.createDataFrame(pd.DataFrame({"path": paths}))
     d = max(int(densify), 2)
 
@@ -919,7 +925,7 @@ def tile_index(
         for b in batches:
             rows = []
             for path_ in b["path"]:
-                with open(path_, "rb") as f:
+                with opener(path_) as f:
                     m = tiff_meta(f)
                 w, h = m["width"], m["height"]
                 gt = m["gt"] or (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)

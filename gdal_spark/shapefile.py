@@ -323,18 +323,34 @@ def _granule_pdf(shp: bytes, dbf: bytes | None) -> pd.DataFrame:
     return pdf
 
 
+def _read_granule(opener, shp_path: str) -> tuple[bytes, bytes | None]:
+    """(.shp bytes, .dbf bytes or None when there is no .dbf), both
+    through ``opener``."""
+    with opener(shp_path) as f:
+        shp = f.read()
+    try:
+        with opener(os.path.splitext(shp_path)[0] + ".dbf") as f:
+            return shp, f.read()
+    except FileNotFoundError:
+        return shp, None
+
+
 def read_shapefile(
-    spark: SparkSession, paths: list[str], schema: str | None = None
+    spark: SparkSession,
+    paths: list[str],
+    schema: str | None = None,
+    opener=None,
 ) -> DataFrame:
     """File-parallel shapefile scan: one .shp(+.dbf) granule per
     task. ``schema`` (Spark DDL for the attribute columns) comes from
-    the first granule when omitted."""
+    the first granule when omitted. ``opener`` (picklable path→file-like;
+    default shared-FS open — gdal_spark.io) reads every byte, driver
+    and executors."""
+    from .io import local_opener
+
+    opener = opener or local_opener
     if schema is None:
-        with open(paths[0], "rb") as f:
-            shp0 = f.read()
-        dbf_p = os.path.splitext(paths[0])[0] + ".dbf"
-        dbf0 = open(dbf_p, "rb").read() if os.path.exists(dbf_p) else None
-        pdf0 = _granule_pdf(shp0, dbf0)
+        pdf0 = _granule_pdf(*_read_granule(opener, paths[0]))
         parts = ["fid long"]
         for c in pdf0.columns:
             if c in ("fid", "geometry"):
@@ -351,14 +367,7 @@ def read_shapefile(
     def gen(batches):
         for b in batches:
             for p in b["path"]:
-                with open(p, "rb") as f:
-                    shp = f.read()
-                dbf_p = os.path.splitext(p)[0] + ".dbf"
-                dbf = (
-                    open(dbf_p, "rb").read()
-                    if os.path.exists(dbf_p) else None
-                )
-                yield _granule_pdf(shp, dbf)
+                yield _granule_pdf(*_read_granule(opener, p))
 
     return pdf.repartition(len(paths)).mapInPandas(gen, schema)
 
@@ -385,14 +394,17 @@ def read_shapefile_ranged(
         shx = f.read()
     n_rec = (len(shx) - 100) // 8
     idx = np.frombuffer(shx, ">i4", 2 * n_rec, 100).reshape(n_rec, 2)
-    has_dbf = os.path.exists(dbf_p)
-    if has_dbf:
+    try:
         with opener(dbf_p) as f:
             dbf_head = f.read(32 + 32 * 128)
+        has_dbf = True
+    except FileNotFoundError:
+        has_dbf = False
+    if has_dbf:
         hdr_size, rec_size = struct.unpack_from("<HH", dbf_head, 8)
         fields_blob = dbf_head[: hdr_size]
     if schema is None:
-        probe = read_shapefile(spark, [path]).limit(0)
+        probe = read_shapefile(spark, [path], opener=opener).limit(0)
         schema = ", ".join(
             f"`{n}` {t}" for n, t in probe.dtypes
         )

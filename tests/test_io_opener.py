@@ -101,6 +101,50 @@ def test_read_shapefile_ranged_all_bytes_via_opener(spark, tmp_path):
     assert bytes(out.sort_values("fid")["geometry"].iloc[7]) == geoms[7]
 
 
+def test_read_shapefile_all_bytes_via_opener(spark, tmp_path):
+    """The whole-file scan reads the .shp and the .dbf through the
+    opener, for the schema probe on the driver and in the tasks; the
+    ranged scan finds the .dbf through it too."""
+    from gdal_spark.shapefile import (
+        read_shapefile, read_shapefile_ranged, write_dbf, write_shp,
+    )
+
+    geoms = [wkb.point(float(i), float(2 * i)) for i in range(30)]
+    shp, shx = write_shp(geoms)
+    dbf = write_dbf(pd.DataFrame({"name": [f"n{i}" for i in range(30)]}))
+    base = str(tmp_path / "pts")
+    for ext, blob in ((".shp", shp), (".shx", shx), (".dbf", dbf)):
+        _shadow(tmp_path, "pts" + ext, blob)
+    for out in (
+        read_shapefile(spark, [base + ".shp"], opener=PrefixOpener()),
+        read_shapefile_ranged(
+            spark, base + ".shp", records_per_task=7, opener=PrefixOpener()
+        ),
+    ):
+        got = out.orderBy("fid").toPandas()
+        assert list(got["name"]) == [f"n{i}" for i in range(30)]
+        assert [bytes(g) for g in got["geometry"]] == geoms
+    with pytest.raises(FileNotFoundError):
+        read_shapefile(spark, [base + ".shp"]).toPandas()
+
+
+def test_tile_index_reads_headers_via_opener(spark, tmp_path):
+    from gdal_spark.gtiff import tile_index, tiff_encode
+
+    a = np.zeros((20, 30), dtype=np.uint8)
+    blob = tiff_encode(
+        a, geotransform=(5.0, 1.0, 0.0, 40.0, 0.0, -1.0), epsg=4326
+    )
+    p = _shadow(tmp_path, "r.tif", blob)
+    rows = tile_index(spark, [p], opener=PrefixOpener()).collect()
+    assert [(r.location, r.width, r.height, r.epsg) for r in rows] == [
+        (p, 30, 20, 4326)
+    ]
+    assert (rows[0].minx, rows[0].maxy) == (5.0, 40.0)
+    with pytest.raises(Exception, match="FileNotFoundError"):
+        tile_index(spark, [p]).collect()
+
+
 def test_read_osm_pbf_all_bytes_via_opener(spark, tmp_path):
     from gdal_spark.osmpbf import read_osm_pbf, write_osm_pbf
 

@@ -75,6 +75,22 @@ def test_extract_features_runs_in_the_jvm(spark):
         assert node not in plan
 
 
+def test_spatial_join_runs_in_the_jvm(spark):
+    """The exact refine is a Catalyst expression: neither the join nor
+    its per-polygon count plans a Python worker."""
+    from gdal_spark.operators.spatial_join import spatial_join, spatial_join_count
+    from gdal_spark.testdata import polygons_pdf
+
+    pts = spark.range(0, 1000).select(
+        (F.col("id") % 360 - 180.0).alias("lon"),
+        (F.col("id") % 180 - 90.0).alias("lat"),
+    )
+    for join in (spatial_join, spatial_join_count):
+        plan = _plan(join(pts, polygons_pdf(20), res_min=2, res_max=6))
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan
+
+
 def test_spatial_join_count_has_partial_aggregation(spark):
     from gdal_spark.operators.spatial_join import spatial_join_count
     from gdal_spark.testdata import polygons_pdf

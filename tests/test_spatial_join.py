@@ -182,38 +182,125 @@ def test_spatial_join_plan_is_broadcast(spark, pages_pdf, polygons):
     assert "SortMergeJoin" not in plan
 
 
-def test_full_cover_rows_skip_raycast_kernel():
-    """The full-cover shortcut works INSIDE the UDF kernel (Catalyst
-    evaluates extracted Python UDFs on every row, so a CASE WHEN
-    around the UDF saves nothing — r02 finding). Proof: full rows
-    never touch the rings dict — a poison poly_id that would KeyError
-    on lookup sails through as True."""
-    import numpy as np
+def test_full_cover_rows_join_with_null_edges(spark):
+    """A full cover row carries null edges and parts. The filter's
+    first operand accepts it, so its points join without the exact
+    test; a boundary row's points still get the test. Point columns
+    named like the cover's pass through."""
+    from gdal_spark import cover
 
-    from gdal_spark.operators.spatial_join import _pip_kernel
+    giant = testdata.polygons_pdf(1)  # [-60, 60] x [-40, 40]
+    cov, _ = cover.refine_cover(giant, 2, 6)
+    rows = cov.to_pylist()
+    assert any(r["full"] for r in rows) and not all(r["full"] for r in rows)
+    for r in rows:
+        assert (r["edges"] is None and r["parts"] is None) == r["full"]
+    own = ["cell_id", "res", "full", "edges", "parts"]
+    pts = spark.createDataFrame(
+        pd.DataFrame({"id": [0, 1, 2], "lon": [0.5, 59.9, 60.1], "lat": [0.5, 0.0, 0.0]})
+        .assign(**{c: [10, 11, 12] for c in own})
+    )
+    out = spatial_join(pts, giant, res_min=2, res_max=6)
+    assert out.columns == pts.columns + ["poly_id"]
+    got = sorted((r.id, r.poly_id, *(r[c] for c in own)) for r in out.collect())
+    assert got == [(0, 0, *[10] * 5), (1, 0, *[11] * 5)]
 
-    lon = np.array([0.5, 99.0, 0.2])
-    lat = np.array([0.5, 99.0, 0.7])
-    ring = np.array([[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], dtype=float)
-    rings = {7: [[ring]]}
-    # row 1 is full-cover with poly_id=999 (absent): must NOT raise
-    out = _pip_kernel(
-        lon, lat,
-        np.array([7, 999, 7]),
-        np.array([False, True, False]),
-        rings,
-        boundary_is_inside=False,
+
+def _polygon_with_holes(n_holes: int = 72) -> list[np.ndarray]:
+    """A rectangle with a row of small square holes along one band: a
+    ray from the band's left end crosses every ring."""
+    outer = np.array([[-1, 0], [12, 0], [12, 1.4], [-1, 1.4], [-1, 0]], float)
+    holes = [
+        np.array([[x, 0.5], [x, 0.6], [x + 0.05, 0.6], [x + 0.05, 0.5], [x, 0.5]])
+        for x in 1.0 + 0.1 * np.arange(n_holes)
+    ]
+    return [outer] + holes
+
+
+# A point at lon -1e-14 rounds into the cell whose float lower bound
+# is 0.0, so the vertical edge at x = -1e-15 lies left of that cell
+# but right of the point: only a widened clip keeps it.
+_CLIP_PROBE = np.array(
+    [[-3, -5], [10, -5], [1, 0.7], [-1e-15, 2], [-1e-15, -1], [-3, -1], [-3, -5]]
+)
+
+
+def _probe_points(polygons: pd.DataFrame, n_random: int, seed: int):
+    """Every vertex, every edge midpoint, every vertex moved by 1e-12
+    along each axis, and uniform points over each polygon's bbox."""
+    rng = np.random.default_rng(seed)
+    xs, ys = [np.array([-1e-14])], [np.array([0.1])]
+    for buf in polygons["geom_wkb"]:
+        for rings in wkb.polygon_rings(bytes(buf)):
+            for ring in rings:
+                ring = np.asarray(ring)
+                mid = (ring[:-1] + ring[1:]) / 2
+                xs += [ring[:, 0], mid[:, 0]]
+                ys += [ring[:, 1], mid[:, 1]]
+                for dx, dy in ((1e-12, 0), (-1e-12, 0), (0, 1e-12), (0, -1e-12)):
+                    xs.append(ring[:, 0] + dx)
+                    ys.append(ring[:, 1] + dy)
+            x0, y0, x1, y1 = geometry.ring_bbox(np.asarray(rings[0]))
+            xs.append(rng.uniform(x0, x1, n_random))
+            ys.append(rng.uniform(y0, y1, n_random))
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+@pytest.mark.parametrize("boundary_is_inside", [False, True])
+def test_spatial_join_exact_on_edge_cases(spark, boundary_is_inside):
+    """spatial_join equals points_in_polygon over every part, pair for
+    pair, on overlapping holed multipolygons, the sliver and the
+    shared-edge pair, a polygon whose 73 rings all reach one cell (two
+    mask words), and a point that rounds into a cell right of an edge
+    it must cross."""
+    from test_strtree_cover import _holed_multipolygons
+
+    polygons = pd.concat(
+        [
+            _holed_multipolygons(),
+            testdata.polygons_pdf(7).assign(poly_id=lambda d: d.poly_id + 100),
+            pd.DataFrame({
+                "poly_id": [200, 300],
+                "geom_wkb": [
+                    wkb.polygon(_polygon_with_holes()),
+                    wkb.polygon([_CLIP_PROBE]),
+                ],
+            }),
+        ],
+        ignore_index=True,
+    )[["poly_id", "geom_wkb"]]
+    lon, lat = _probe_points(polygons, 200, seed=4)
+    want = set()
+    for pid, buf in zip(polygons["poly_id"], polygons["geom_wkb"]):
+        inside = np.zeros(lon.size, dtype=bool)
+        for rings in wkb.polygon_rings(bytes(buf)):
+            inside |= geometry.points_in_polygon(
+                lon, lat, rings, boundary_is_inside=boundary_is_inside
+            )
+        want |= {(int(i), int(pid)) for i in np.nonzero(inside)[0]}
+    pts = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(lon.size), "lon": lon, "lat": lat})
     )
-    assert out.tolist() == [True, True, True]
-    # and all-full short-circuits entirely
-    out = _pip_kernel(
-        lon, lat,
-        np.array([999, 999, 999]),
-        np.array([True, True, True]),
-        rings,
-        boundary_is_inside=False,
+    joined = spatial_join(
+        pts, polygons, res_min=2, res_max=7,
+        boundary_is_inside=boundary_is_inside,
     )
-    assert out.tolist() == [True, True, True]
+    got = {(int(r.id), int(r.poly_id)) for r in joined.collect()}
+    assert got == want
+    assert (0, 300) not in want and (0, 200) in want
+
+
+def test_refine_cover_needs_two_words_for_73_rings():
+    from gdal_spark import cover
+
+    polygons = pd.DataFrame(
+        {"poly_id": [0], "geom_wkb": [wkb.polygon(_polygon_with_holes())]}
+    )
+    cov, n_words = cover.refine_cover(polygons, 2, 7)
+    assert n_words == 2
+    assert cov.column_names == [
+        "poly_id", "cell_id", "res", "full", "edges", "edges_1", "parts"
+    ]
 
 
 # ---------------------------------------------------------------------------

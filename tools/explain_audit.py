@@ -22,16 +22,18 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 NOTES = {
-    "spatial_join": """Intended shape: the point side NEVER shuffles — cell ids are
-one codegen'd Generate (explode of the per-level cell expressions, the
-levels read from the driver's pandas cover: planning runs no Spark
-job), the cover table broadcasts (BroadcastHashJoin),
-the PIP pandas UDF (ArrowEvalPython) sits after the join. Catalyst
-extracts Python UDFs and evaluates them on every candidate row, so the
-full-cover shortcut lives INSIDE the kernel: the `full` column is the
-UDF's 4th argument and full-cell rows resolve to a vectorized mask
-copy (zero ray-cast work) — Arrow transfer is the only per-row cost
-for interior hits. One narrow pipeline source→result.""",
+    "spatial_join": """Intended shape: no Python node anywhere, and the point side
+NEVER shuffles — cell ids are one codegen'd Generate (explode of the
+per-level cell expressions, the levels read from the driver's cover:
+planning runs no Spark job), and the cover table, whose boundary rows
+carry their clipped edges and parts, broadcasts (BroadcastHashJoin)
+with its columns under `__` names. Catalyst pushes the refine filter
+into that join as its condition:
+`__full OR aggregate(__edges, …, _m0 -> exists(__parts, …))`. The OR accepts
+full-cover pairs before the exact test; a boundary pair runs one
+ray-cast aggregate over its edges, whose finish lambda binds the
+parity mask once for the exists over the parts. One narrow pipeline
+source→result.""",
     "spatial_join_count": """Same join core + a partial HashAggregate before the single
 exchange on poly_id (map-side combine; ~100 groups).""",
     "burn_points_tiles": """Shuffles carry DEDUPED PIXELS, not points: partial_count

@@ -14,12 +14,11 @@ Method: the pages table is materialized to parquet ONCE (setup,
 untimed — the in-sandbox stand-in for the north rule's Iceberg pages
 table), then each pinned child runs the real job — column-pruned
 (url, text) parquet scan → extract (JVM regex) → cell-cover
-broadcast spatial join + PIP — `count()` ITERS times; per-iteration
-throughput is reported and the best iteration is used for the
-efficiency ratio (the host is shared/noisy; best-of-N approximates
-uncontended steady state; iteration 0 additionally pays one-time
-Python worker spawn + JIT, which a long-running cluster job
-amortizes). `--rounds K` switches to PAIRED mode: K low/high
+broadcast spatial join + exact PIP, all in the JVM — `count()` ITERS
+times; per-iteration throughput is reported and the best iteration is
+used for the efficiency ratio (the host is shared/noisy; best-of-N
+approximates uncontended steady state; iteration 0 additionally pays
+one-time JIT warm-up, which a long-running cluster job amortizes). `--rounds K` switches to PAIRED mode: K low/high
 back-to-back rounds so both levels sample the same time-correlated
 host-noise regime, reporting per-round efficiencies and the median.
 
