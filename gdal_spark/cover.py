@@ -33,8 +33,8 @@ INSIDE, OUTSIDE, BOUNDARY = 1, 0, 2
 # frontiers meet rings with many vertices
 _LANES = 1 << 20
 # A point's cell id (cells.cell_sql) can round across the float bounds
-# of cells.cell_bounds, so edges are clipped against the cell widened
-# by this fraction of its size on each side.
+# of cells.cell_bounds, so cells are classified, and edges clipped,
+# against the cell widened by this fraction of its size on each side.
 _CLIP_MARGIN = 1e-6
 # ring slots per BIGINT mask word (the sign bit stays clear)
 _WORD_BITS = 63
@@ -177,13 +177,31 @@ def classify_rect(
     )
 
 
+def _reach(cid):
+    """Where the points whose cell id is ``cid`` can lie: the cell's
+    bounds widened by _CLIP_MARGIN of its size on each side, and masks
+    of the sides (low x, low y, high x, high y) on the grid's outer
+    ring, past which cell ids clamp out-of-range points into the
+    cell."""
+    res, ix, iy = cells.decode(cid)
+    n = np.left_shift(np.int64(1), res)
+    dx, dy = 360.0 * _CLIP_MARGIN / n, 180.0 * _CLIP_MARGIN / n
+    x0, y0, x1, y1 = cells.cell_bounds(cid)
+    return (
+        (x0 - dx, y0 - dy, x1 + dx, y1 + dy),
+        (ix == 0, iy == 0, ix == n - 1, iy == n - 1),
+    )
+
+
 def _cover_parts(rings: _Rings, res_min: int, res_max: int, max_cells: int):
     """Quadtree refinement of every part at once: (part, cell_id, full).
 
     Each part starts from the res_min cells over its outer bbox and
     refines BOUNDARY cells until res_max or its cell budget is reached;
     interior cells stay coarse (compact mixed-res cover). Rows come
-    per part: full cells in level order, then boundary cells."""
+    per part: full cells in level order, then boundary cells. A full
+    cell holds every point that rounds into it; a cell on the grid's
+    outer ring is never full, as out-of-range points clamp into it."""
     n_parts = rings.n_slots.size
     start = [
         cells.cover_bbox(*rings.bbox[rings.slot0[p]], res_min)
@@ -196,7 +214,9 @@ def _cover_parts(rings: _Rings, res_min: int, res_max: int, max_cells: int):
     kept: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
     res = res_min
     while frontier.size:
-        labels = rings.classify(part, *cells.cell_bounds(frontier))
+        bounds, clamped = _reach(frontier)
+        labels = rings.classify(part, *bounds)
+        labels[(labels == INSIDE) & np.logical_or.reduce(clamped)] = BOUNDARY
         refine = np.zeros(frontier.size, dtype=bool)
         if res < res_max:
             # the budget counts cells in frontier order, so it is an
@@ -394,12 +414,10 @@ def _clip_edges(rings: _Rings, owner, n_poly: int, poly, cid):
     ]
     edge0 = np.searchsorted(poly_of_edge, np.arange(n_poly))
     n_edges = np.bincount(poly_of_edge, minlength=n_poly)[poly]
-    res, ix, iy = cells.decode(cid)
-    x0, y0, _, y1 = cells.cell_bounds(cid)
-    n = np.left_shift(np.int64(1), res)
-    x0 = np.where(ix == 0, -np.inf, x0 - 360.0 * _CLIP_MARGIN / n)
-    y0 = np.where(iy == 0, -np.inf, y0 - 180.0 * _CLIP_MARGIN / n)
-    y1 = np.where(iy == n - 1, np.inf, y1 + 180.0 * _CLIP_MARGIN / n)
+    (x0, y0, _, y1), (low_x, low_y, _, high_y) = _reach(cid)
+    x0 = np.where(low_x, -np.inf, x0)
+    y0 = np.where(low_y, -np.inf, y0)
+    y1 = np.where(high_y, np.inf, y1)
     rows, edges = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
     for lo, hi in _batches(np.cumsum(n_edges)):
         row, e = _spans(edge0[poly[lo:hi]], n_edges[lo:hi])

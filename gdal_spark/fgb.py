@@ -693,7 +693,7 @@ def read_fgb(
     index-absent file applies the same envelope filter post-decode in
     the tasks, so bbox semantics do not depend on index presence.
     Without bbox, the leaf level supplies every feature offset (index
-    absent → one framing walk with seeks, the osmpbf pattern). Offsets chunk
+    absent → one framing walk with seeks). Offsets chunk
     into ``records_per_task`` ranges; executors seek-read their byte
     slice and decode. ``opener`` (picklable path→file-like; default
     shared-FS open — see gdal_spark.io) is the object-store seam:
@@ -849,8 +849,8 @@ def read_fgb_stream(spark: SparkSession, path: str) -> DataFrame:
     landing directory — each new ``.fgb`` a producer drops becomes
     one micro-batch task decoded by the SAME whole-blob kernel as
     :func:`fgb_decode` (parity by construction). Stateless (pure
-    projection), composes with the streaming layer downstream
-    (``read_fgb_stream → linearize/reproject → stream_spatial_join``).
+    projection), so downstream streaming stages compose with it
+    (``read_fgb_stream → linearize/reproject → spatial join``).
     Whole-file decode per batch is the streaming trade: arrival
     latency per granule, not ranged parallelism within one."""
     files = (

@@ -216,7 +216,6 @@ def read_geojson_seq_stream(spark: SparkSession, path: str) -> DataFrame:
     file-arrival stream over a landing directory, each new
     .geojsonl micro-batched through the SAME parse kernel as the
     batch scan (parity by construction). Stateless projection: no
-    watermark or state store; downstream composes with
-    ``streaming.stream_spatial_join`` for the geocoded-arrival
-    pipeline."""
+    watermark or state store; downstream streaming stages compose
+    with it."""
     return _parse_lines(spark.readStream.format("text").load(path))

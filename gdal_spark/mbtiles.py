@@ -92,9 +92,9 @@ def write_mbtiles(
     """Distributed MBTiles sink. Input rows use the engine's XYZ
     convention — ``(z, tx, ty, w, h, data)`` raw uint8 rasters for
     ``format in ("png", "jpg")``, ``(z, tx, ty, data)`` encoded MVT
-    payloads for ``format="pbf"`` (the :mod:`gdal_spark.mvt` encoder's
-    bytes; gzip applied here per spec). ``tile_row`` is stored TMS:
-    ``2**z - 1 - ty`` (mbtilesdataset.cpp does the same flip).
+    payloads for ``format="pbf"`` (gzip applied here per spec).
+    ``tile_row`` is stored TMS: ``2**z - 1 - ty`` (mbtilesdataset.cpp
+    does the same flip).
 
     ``group_col=None`` → ONE file at path ``out``. Otherwise ``out``
     is a directory and each distinct value of the integral

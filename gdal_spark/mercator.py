@@ -156,10 +156,3 @@ def pixel_sql(lon_sql: str, lat_sql: str, zoom: int, tile_size: int = 256):
     px = f"(({mx}) + {ORIGIN!r}) / {res!r}"
     py = f"(({my}) + {ORIGIN!r}) / {res!r}"
     return px, py
-
-
-def tile_sql(lon_sql: str, lat_sql: str, zoom: int, tile_size: int = 256):
-    px, py = pixel_sql(lon_sql, lat_sql, zoom, tile_size)
-    tx = f"CAST(CEIL(({px}) / {float(tile_size)!r}) - 1 AS BIGINT)"
-    ty = f"CAST(CEIL(({py}) / {float(tile_size)!r}) - 1 AS BIGINT)"
-    return tx, ty

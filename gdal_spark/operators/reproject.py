@@ -6,8 +6,8 @@ densification per ``OGRGeometryFactory::transformWithOptions``).
 One Arrow-batched kernel: parse WKB, stack EVERY coordinate of the
 batch into one (N, 2) array, apply the picklable transform ONCE
 (vectorized — the same callable protocol every transform family in
-this package exports: proj/UTM/LCC, datum Helmert, GCP poly, TPS,
-RPC, homography, geoloc, approx, compose), then re-encode. Per-batch
+this package exports: proj/UTM/LCC, datum Helmert, GCP poly,
+compose), then re-encode. Per-batch
 cost is one transform call regardless of geometry count — the
 row loop only slices offsets.
 

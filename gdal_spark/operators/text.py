@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-STOPWORDS = ("the", "a", "of", "and")
 
 # deterministic marker words per language for the n-gram-style
 # heuristic language id (real systems use char n-gram profiles; the
@@ -35,25 +34,6 @@ def occurrence_count(text: Column, needle: str) -> Column:
         (F.length(text) - F.length(F.replace(text, F.lit(needle), F.lit(""))))
         / len(needle)
     ).cast("long")
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / token / stopword / punctuation quality signals."""
-    t = F.col(text_col)
-    n_tokens = token_count(t)
-    stop_hits = sum(
-        (occurrence_count(t, " " + w + " ") for w in STOPWORDS),
-        F.lit(0).cast("long"),
-    )
-    return df.withColumns(
-        {
-            "q_chars": F.length(t).cast("long"),
-            "q_tokens": n_tokens.cast("long"),
-            "q_stop_hits": stop_hits,
-            "q_punct": occurrence_count(t, "."),
-            "q_stop_ratio": stop_hits.cast("double") / n_tokens.cast("double"),
-        }
-    )
 
 
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -10,8 +10,8 @@ locate any tile by byte range.
 
 This module implements the spec directly with the stdlib + the
 engine's existing pieces: the Hilbert curve from `fgb.hilbert_d` (+
-the inverse here), gzip for internal compression, and the PNG/JPEG/
-MVT payload codecs already in-tree.
+the inverse here), gzip for internal compression, and the PNG/JPEG
+payload codecs already in-tree.
 
 Scale shape (the gtiff/fgb pattern): `read_pmtiles`'s DRIVER reads
 the header + directories only — never a tile byte; executors

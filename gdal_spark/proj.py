@@ -718,18 +718,6 @@ def albers_forward_transform(*params, **kw):
     return _FwdTransform(AlbersEqualArea, *params, **kw)
 
 
-def albers_inverse_transform(*params, **kw):
-    return _InvTransform(AlbersEqualArea, *params, **kw)
-
-
-def stereo_forward_transform(*params, **kw):
-    return _FwdTransform(PolarStereographic, *params, **kw)
-
-
-def stereo_inverse_transform(*params, **kw):
-    return _InvTransform(PolarStereographic, *params, **kw)
-
-
 class Sinusoidal:
     """Sinusoidal (Sanson-Flamsteed), ellipsoidal — the MODIS grid
     projection. From-spec Snyder PP 1395 pp. 243-248 eq. 30-1..30-11
@@ -849,17 +837,9 @@ class AzimuthalEquidistant:
         )
 
 
-def sinusoidal_forward_transform(*params, **kw):
-    return _FwdTransform(Sinusoidal, *params, **kw)
-
-
 def sinusoidal_inverse_transform(*params, **kw):
     return _InvTransform(Sinusoidal, *params, **kw)
 
 
 def aeqd_forward_transform(*params, **kw):
     return _FwdTransform(AzimuthalEquidistant, *params, **kw)
-
-
-def aeqd_inverse_transform(*params, **kw):
-    return _InvTransform(AzimuthalEquidistant, *params, **kw)

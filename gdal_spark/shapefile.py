@@ -2,7 +2,7 @@
 (``ogr/ogrsf_frmts/shape``, shapelib), from the PUBLIC ESRI Shapefile
 Technical Description (1998) and the dBase III .dbf layout.
 
-From-spec like WARC/GeoTIFF/PNG/JPEG/MVT:
+From-spec like WARC/GeoTIFF/PNG/JPEG:
 * ``.shp`` — 100-byte header (file code 9994 BE, length in 16-bit
   words BE, version 1000 LE, shape type LE, bbox doubles), records
   of (record#, content length) BE headers + LE shape payloads; shape

@@ -227,16 +227,3 @@ def grid_points_pdf(n: int = 10_000) -> pd.DataFrame:
     return pd.DataFrame(
         {"pid": i, "lon": lon, "lat": lat, "z": np.sin(lon) * np.cos(lat)}
     )
-
-
-# ---------------------------------------------------------------------------
-# raster fixture (FIXTURES.md F4): value = (x*7 + y*13) % 251
-# ---------------------------------------------------------------------------
-
-RASTER_GT = (440720.0, 60.0, 0.0, 3751320.0, 0.0, -60.0)
-
-
-def raster_array(width: int = 100, height: int = 100) -> np.ndarray:
-    x = np.arange(width, dtype=np.int64)[None, :]
-    y = np.arange(height, dtype=np.int64)[:, None]
-    return ((x * 7 + y * 13) % 251).astype(np.uint8)

@@ -299,9 +299,8 @@ def read_warc_stream(spark, path: str,
     arrival stream over a landing directory — each new ``.warc.gz``
     that a crawler drops becomes one micro-batch task, parsed by the
     SAME per-file kernel as the batch scan (parity by construction).
-    Downstream composes with the rest of the streaming layer:
-    ``read_warc_stream → extract_text → streaming.stream_spatial_join``
-    is the full Common-Crawl arrival pipeline. Stateless (pure
+    Downstream streaming stages compose with it
+    (``read_warc_stream → extract_text → spatial join``). Stateless (pure
     projection), so no watermark or state store is involved here."""
     files = (
         spark.readStream.format("binaryFile")

@@ -1,93 +1,7 @@
-"""Homography (alg/gdal_homography.cpp) and distributed
-GDALChecksumImage (alg/gdalchecksum.cpp) tests."""
+"""Distributed GDALChecksumImage (alg/gdalchecksum.cpp) tests."""
 
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from gdal_spark import homography as hg
 from gdal_spark import raster
 from gdal_spark.operators import stats, tiling
-
-rng = np.random.default_rng(11)
-
-
-# ------------------------------------------------------- homography
-
-
-def _true_h():
-    # a well-conditioned projective map (GDAL layout)
-    return np.array(
-        [100.0, 2.0, 0.3, 50.0, -0.2, 1.5, 1.0, 0.0003, -0.0002]
-    )
-
-
-def test_fit_recovers_exact_homography():
-    h = _true_h()
-    px = rng.uniform(0, 400, 12)
-    py = rng.uniform(0, 300, 12)
-    gx, gy = hg.apply_h(h, px, py)
-    fit = hg.fit_homography(np.column_stack([px, py, gx, gy]))
-    qx = rng.uniform(0, 400, 100)
-    qy = rng.uniform(0, 300, 100)
-    wx, wy = hg.apply_h(h, qx, qy)
-    fx, fy = hg.apply_h(fit, qx, qy)
-    np.testing.assert_allclose(fx, wx, rtol=1e-9)
-    np.testing.assert_allclose(fy, wy, rtol=1e-9)
-
-
-def test_fit_affine_subcase():
-    px = rng.uniform(0, 100, 8)
-    py = rng.uniform(0, 100, 8)
-    gx = 10.0 + 2.0 * px - 0.5 * py
-    gy = -5.0 + 0.3 * px + 1.7 * py
-    fit = hg.fit_homography(np.column_stack([px, py, gx, gy]))
-    fx, fy = hg.apply_h(fit, px, py)
-    np.testing.assert_allclose(fx, gx, rtol=1e-10)
-    np.testing.assert_allclose(fy, gy, rtol=1e-10)
-    # projective part ~ 0 relative to w0
-    assert abs(fit[7] / fit[6]) < 1e-12
-    assert abs(fit[8] / fit[6]) < 1e-12
-
-
-def test_inverse_and_compose_roundtrip():
-    h = _true_h()
-    hi = hg.inv_h(h)
-    x = rng.uniform(0, 300, 50)
-    y = rng.uniform(0, 300, 50)
-    X, Y = hg.apply_h(h, x, y)
-    bx, by = hg.apply_h(hi, X, Y)
-    np.testing.assert_allclose(bx, x, atol=1e-9)
-    np.testing.assert_allclose(by, y, atol=1e-9)
-    ident = hg.compose_h(h, hi)
-    ix, iy = hg.apply_h(ident, x, y)
-    np.testing.assert_allclose(ix, x, atol=1e-9)
-    np.testing.assert_allclose(iy, y, atol=1e-9)
-
-
-def test_degenerate_gcps_refused():
-    with pytest.raises(ValueError):
-        hg.fit_homography(
-            [[0, 0, 5, 5], [1, 0, 6, 5], [2, 0, 7, 5], [3, 0, 8, 5]]
-        )
-
-
-def test_transform_columns_match_numpy(spark):
-    h = _true_h()
-    x = rng.uniform(0, 200, 200)
-    y = rng.uniform(0, 200, 200)
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(x, y)], "x double, y double"
-    )
-    cx, cy = hg.transform_columns(h, F.col("x"), F.col("y"))
-    got = df.select(cx.alias("gx"), cy.alias("gy"), "x").orderBy("x").toPandas()
-    order = np.argsort(x)
-    wx, wy = hg.apply_h(h, x[order], y[order])
-    np.testing.assert_allclose(got["gx"].to_numpy(), wx, rtol=1e-12)
-    np.testing.assert_allclose(got["gy"].to_numpy(), wy, rtol=1e-12)
-
-
-# -------------------------------------------------------- checksum
 
 
 def _checksum_oracle(arr, x_off, y_off, xs, ys):

@@ -145,21 +145,6 @@ def test_tile_index_reads_headers_via_opener(spark, tmp_path):
         tile_index(spark, [p]).collect()
 
 
-def test_read_osm_pbf_all_bytes_via_opener(spark, tmp_path):
-    from gdal_spark.osmpbf import read_osm_pbf, write_osm_pbf
-
-    nodes = [
-        (1, 1.0, 4.0, {"a": "b"}),
-        (2, 2.0, 5.0, {}),
-        (3, 3.0, 6.0, {}),
-    ]
-    real = str(tmp_path / "x.osm.pbf.shadow")
-    write_osm_pbf(real, nodes=nodes)
-    p = real[: -len(".shadow")]
-    out = read_osm_pbf(spark, p, opener=PrefixOpener()).toPandas()
-    assert sorted(out["id"]) == [1, 2, 3]
-
-
 def test_local_opener_is_plain_open(tmp_path):
     p = str(tmp_path / "f.bin")
     with open(p, "wb") as f:

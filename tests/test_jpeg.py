@@ -91,37 +91,6 @@ class TestCodec:
         assert np.abs(out.astype(int) - 255).max() <= 4
 
 
-class TestMultimodalDispatch:
-    def test_decode_image_bytes_jpeg_and_png(self):
-        from gdal_spark.operators import multimodal
-        from gdal_spark import png
-
-        a = _gradient(24, 32)
-        via_png = multimodal.decode_image_bytes(png.png_encode(a))
-        np.testing.assert_array_equal(via_png, a)
-        via_jpg = multimodal.decode_image_bytes(
-            jpeg.jpeg_encode(a, quality=100)
-        )
-        assert via_jpg.shape == a.shape
-        assert np.abs(via_jpg.astype(int) - a.astype(int)).max() <= 4
-
-    def test_decode_rgb_png_reduces_to_luma(self):
-        from gdal_spark.operators import multimodal
-        from gdal_spark import png
-
-        rgb = np.zeros((4, 5, 3), dtype=np.uint8)
-        rgb[..., 0] = 200
-        out = multimodal.decode_image_bytes(png.png_encode(rgb))
-        assert out.shape == (4, 5)
-        assert int(out[0, 0]) == int(np.floor(0.299 * 200 + 0.5))
-
-    def test_unknown_format_still_stubbed(self):
-        from gdal_spark.operators import multimodal
-
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image_bytes(b"RIFFxxxxWEBP")
-
-
 class TestSink:
     def test_write_tiles_jpeg(self, spark, tmp_path, tree_sha256):
         from gdal_spark.operators.tiling import formula_tiles

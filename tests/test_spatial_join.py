@@ -225,6 +225,20 @@ _CLIP_PROBE = np.array(
 )
 
 
+def _rect(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+
+
+# polygons with a cell that would be full although points outside them
+# round (x = -1e-14 at the left edge x = -1e-15) or clamp (past 180°
+# lon or 90° lat) into it, and one such point for each
+_FULL_CELL_PROBES = {
+    400: (_rect(-1e-15, -5, 10, 10), (-1e-14, 0.1)),
+    500: (_rect(170, -5, 200, 5), (210, 0.1)),
+    600: (_rect(-5, 80, 10, 95), (1, 96)),
+}
+
+
 def _probe_points(polygons: pd.DataFrame, n_random: int, seed: int):
     """Every vertex, every edge midpoint, every vertex moved by 1e-12
     along each axis, and uniform points over each polygon's bbox."""
@@ -251,8 +265,9 @@ def test_spatial_join_exact_on_edge_cases(spark, boundary_is_inside):
     """spatial_join equals points_in_polygon over every part, pair for
     pair, on overlapping holed multipolygons, the sliver and the
     shared-edge pair, a polygon whose 73 rings all reach one cell (two
-    mask words), and a point that rounds into a cell right of an edge
-    it must cross."""
+    mask words), a point that rounds into a cell right of an edge it
+    must cross, and points outside a polygon that round or clamp into
+    a cell it covers fully."""
     from test_strtree_cover import _holed_multipolygons
 
     polygons = pd.concat(
@@ -260,16 +275,20 @@ def test_spatial_join_exact_on_edge_cases(spark, boundary_is_inside):
             _holed_multipolygons(),
             testdata.polygons_pdf(7).assign(poly_id=lambda d: d.poly_id + 100),
             pd.DataFrame({
-                "poly_id": [200, 300],
+                "poly_id": [200, 300, *_FULL_CELL_PROBES],
                 "geom_wkb": [
                     wkb.polygon(_polygon_with_holes()),
                     wkb.polygon([_CLIP_PROBE]),
+                    *(wkb.polygon([r]) for r, _ in _FULL_CELL_PROBES.values()),
                 ],
             }),
         ],
         ignore_index=True,
     )[["poly_id", "geom_wkb"]]
     lon, lat = _probe_points(polygons, 200, seed=4)
+    probes = np.array([p for _, p in _FULL_CELL_PROBES.values()])
+    probe_ids = lon.size + np.arange(len(probes))
+    lon, lat = np.append(lon, probes[:, 0]), np.append(lat, probes[:, 1])
     want = set()
     for pid, buf in zip(polygons["poly_id"], polygons["geom_wkb"]):
         inside = np.zeros(lon.size, dtype=bool)
@@ -288,6 +307,8 @@ def test_spatial_join_exact_on_edge_cases(spark, boundary_is_inside):
     got = {(int(r.id), int(r.poly_id)) for r in joined.collect()}
     assert got == want
     assert (0, 300) not in want and (0, 200) in want
+    for i, pid in zip(probe_ids.tolist(), _FULL_CELL_PROBES):
+        assert (i, pid) not in want
 
 
 def test_refine_cover_needs_two_words_for_73_rings():
