@@ -1867,7 +1867,7 @@ def _q_rs_overview_resamplers(spark: SparkSession, sf_dir: str) -> DataFrame:
     GAUSS (3x3 binomial via halo exchange) — gcore/overview.cpp:1842,
     2163-2429, RMS path — checksummed per output tile."""
     from gdal_spark.operators.tiling import (
-        formula_tiles, overview_gauss, overview_level, tile_checksums,
+        formula_tiles, overview_level, tile_checksums,
     )
 
     tiles = formula_tiles(spark, 4, 4, 64)
@@ -1875,13 +1875,8 @@ def _q_rs_overview_resamplers(spark: SparkSession, sf_dir: str) -> DataFrame:
         tile_checksums(overview_level(tiles, m)).withColumn(
             "method", F.lit(m)
         )
-        for m in ("mode", "rms")
+        for m in ("mode", "rms", "gauss")
     ]
-    parts.append(
-        tile_checksums(overview_gauss(tiles)).withColumn(
-            "method", F.lit("gauss")
-        )
-    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

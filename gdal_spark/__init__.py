@@ -13,7 +13,7 @@ Layout:
   geometry   — numpy PIP (ray-cast + winding), bbox, distances
                (semantics of ogr/ogrlinearring.cpp:462-532)
   wkb        — WKB encode/decode (ISO/EWKB, Z/M, curve types); curves
-               holds the curve types' WKB/WKT codec and linearize
+               holds the curve types' WKB codec and linearize
   strtree    — broadcastable STR-packed bbox tree (GPKG RTree analog)
   operators  — spatial join, kNN, tiling, gridding, layer algebra, dedup,
                similarity, text analysis, vector reprojection, OGR-SQL
@@ -28,8 +28,7 @@ Layout:
   stsql, ogrsql, pixfn — ST_* SQL functions, the OGR SQL dialect and
                the VRT pixel-function expression compiler
   lineage    — per-partition checkpoint manifests + resume
-  metrics    — partition/key skew probes and stage timers; cache
-               tracks operator-internal persists
+  metrics    — key skew probe and stage timers
   session, testdata — SparkSession factory and synthetic fixtures
 """
 

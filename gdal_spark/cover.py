@@ -178,18 +178,20 @@ def classify_rect(
 
 
 def _reach(cid):
-    """Where the points whose cell id is ``cid`` can lie: the cell's
-    bounds widened by _CLIP_MARGIN of its size on each side, and masks
-    of the sides (low x, low y, high x, high y) on the grid's outer
-    ring, past which cell ids clamp out-of-range points into the
-    cell."""
+    """Where the points whose cell id is ``cid`` can lie, as
+    (minx, miny, maxx, maxy): the cell's bounds widened by _CLIP_MARGIN
+    of its size on each side, and open to infinity on each side on the
+    grid's outer ring, past which cell ids clamp out-of-range points
+    into the cell."""
     res, ix, iy = cells.decode(cid)
     n = np.left_shift(np.int64(1), res)
     dx, dy = 360.0 * _CLIP_MARGIN / n, 180.0 * _CLIP_MARGIN / n
     x0, y0, x1, y1 = cells.cell_bounds(cid)
     return (
-        (x0 - dx, y0 - dy, x1 + dx, y1 + dy),
-        (ix == 0, iy == 0, ix == n - 1, iy == n - 1),
+        np.where(ix == 0, -np.inf, x0 - dx),
+        np.where(iy == 0, -np.inf, y0 - dy),
+        np.where(ix == n - 1, np.inf, x1 + dx),
+        np.where(iy == n - 1, np.inf, y1 + dy),
     )
 
 
@@ -201,7 +203,8 @@ def _cover_parts(rings: _Rings, res_min: int, res_max: int, max_cells: int):
     interior cells stay coarse (compact mixed-res cover). Rows come
     per part: full cells in level order, then boundary cells. A full
     cell holds every point that rounds into it; a cell on the grid's
-    outer ring is never full, as out-of-range points clamp into it."""
+    outer ring reaches to infinity (``_reach``), so it is never full,
+    and it meets a polygon that lies past the grid's edge."""
     n_parts = rings.n_slots.size
     start = [
         cells.cover_bbox(*rings.bbox[rings.slot0[p]], res_min)
@@ -214,9 +217,7 @@ def _cover_parts(rings: _Rings, res_min: int, res_max: int, max_cells: int):
     kept: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
     res = res_min
     while frontier.size:
-        bounds, clamped = _reach(frontier)
-        labels = rings.classify(part, *bounds)
-        labels[(labels == INSIDE) & np.logical_or.reduce(clamped)] = BOUNDARY
+        labels = rings.classify(part, *_reach(frontier))
         refine = np.zeros(frontier.size, dtype=bool)
         if res < res_max:
             # the budget counts cells in frontier order, so it is an
@@ -414,10 +415,7 @@ def _clip_edges(rings: _Rings, owner, n_poly: int, poly, cid):
     ]
     edge0 = np.searchsorted(poly_of_edge, np.arange(n_poly))
     n_edges = np.bincount(poly_of_edge, minlength=n_poly)[poly]
-    (x0, y0, _, y1), (low_x, low_y, _, high_y) = _reach(cid)
-    x0 = np.where(low_x, -np.inf, x0)
-    y0 = np.where(low_y, -np.inf, y0)
-    y1 = np.where(high_y, np.inf, y1)
+    x0, y0, _, y1 = _reach(cid)
     rows, edges = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
     for lo, hi in _batches(np.cumsum(n_edges)):
         row, e = _spans(edge0[poly[lo:hi]], n_edges[lo:hi])

@@ -16,9 +16,7 @@ serialize here and parse in ``wkb.parse`` (every operator kernel
 consumes LINEAR geometry only, exactly like the reference's
 linear-geometry pipelines), and
 :func:`linearize` densifies arcs by a maximum angular step so curved
-inputs become ordinary LINESTRING/POLYGON/MULTI* WKB. The batch form
-:func:`linearize_udf` is an Arrow pandas_udf usable in any select —
-the GetLinearGeometry analog at DataFrame width.
+inputs become ordinary LINESTRING/POLYGON/MULTI* WKB.
 
 Arc semantics: each CircularString triplet (p0, p1, p2) is the unique
 circle arc from p0 through p1 to p2; exactly-collinear triplets
@@ -32,7 +30,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 
 from . import wkb
 from .wkb import (
@@ -228,150 +225,3 @@ def linearize(
         else [_linearize_curve_pts(rt, rpl, step) for rt, rpl in pl]
         for t, pl in payload
     ])
-
-
-def linearize_udf(max_step_deg: float = DEFAULT_MAX_STEP_DEG):
-    """Arrow-batched pandas_udf binary→binary: getLinearGeometry at
-    DataFrame width — put curved columns through it once, then every
-    linear operator applies."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def u(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: None if b is None
-            else linearize(bytes(b), max_step_deg)
-        )
-
-    return u
-
-
-# ---------------------------------------------------------------------------
-# curve WKT (ST_AsText / ST_GeomFromText for the curve types — OGR's
-# exportToWkt/importFromWkt curve grammar, ogr/ogrcircularstring.cpp etc.)
-# ---------------------------------------------------------------------------
-
-
-def _coords_wkt(pts) -> str:
-    return ", ".join(
-        f"{wkb._fmt(x)} {wkb._fmt(y)}" for x, y in np.asarray(pts)
-    )
-
-
-def _member_wkt(t: int, payload) -> str:
-    """WKT for a curve-container member, bare-parenthesized when it is
-    a plain linestring/ring (the OGR grammar)."""
-    if t == wkb.LINESTRING:
-        return f"({_coords_wkt(payload)})"
-    if t == CIRCULARSTRING:
-        return f"CIRCULARSTRING ({_coords_wkt(payload)})"
-    if t == COMPOUNDCURVE:
-        inner = ", ".join(_member_wkt(ct, cp) for ct, cp in payload)
-        return f"COMPOUNDCURVE ({inner})"
-    if t == wkb.POLYGON:
-        inner = ", ".join(f"({_coords_wkt(r)})" for r in payload)
-        return f"({inner})"
-    if t == CURVEPOLYGON:
-        inner = ", ".join(_member_wkt(rt, rp) for rt, rp in payload)
-        return f"CURVEPOLYGON ({inner})"
-    raise ValueError(f"unsupported member type {t}")
-
-
-def wkt(buf: bytes) -> str:
-    """Curve-aware ST_AsText: falls through to the linear writer for
-    the six simple types."""
-    t, payload = wkb.parse(buf)
-    if t == CIRCULARSTRING:
-        return f"CIRCULARSTRING ({_coords_wkt(payload)})"
-    if t == COMPOUNDCURVE:
-        inner = ", ".join(_member_wkt(ct, cp) for ct, cp in payload)
-        return f"COMPOUNDCURVE ({inner})"
-    if t == CURVEPOLYGON:
-        inner = ", ".join(_member_wkt(rt, rp) for rt, rp in payload)
-        return f"CURVEPOLYGON ({inner})"
-    if t == MULTICURVE:
-        inner = ", ".join(_member_wkt(ct, cp) for ct, cp in payload)
-        return f"MULTICURVE ({inner})"
-    if t == MULTISURFACE:
-        inner = ", ".join(
-            _member_wkt(st, sp) if st == CURVEPOLYGON
-            else "(" + ", ".join(
-                f"({_coords_wkt(r)})" for r in sp
-            ) + ")"
-            for st, sp in payload
-        )
-        return f"MULTISURFACE ({inner})"
-    return wkb.wkt(buf)
-
-
-def _split_members(s: str) -> list[str]:
-    """Split 'A (…), B (…)' at top-level commas, keeping any leading
-    keyword with its group."""
-    out, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(s[start:i].strip())
-            start = i + 1
-    tail = s[start:].strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
-def _member_from_wkt(s: str) -> bytes:
-    s = s.strip()
-    u = s.upper()
-    if u.startswith("CIRCULARSTRING"):
-        body = s[s.index("(") + 1: s.rindex(")")]
-        return circularstring(wkb._parse_coord_seq(body))
-    if u.startswith("COMPOUNDCURVE"):
-        body = s[s.index("(") + 1: s.rindex(")")]
-        return compoundcurve(
-            [_member_from_wkt(m) for m in _split_members(body)]
-        )
-    if u.startswith("CURVEPOLYGON"):
-        body = s[s.index("(") + 1: s.rindex(")")]
-        return curvepolygon(
-            [_member_from_wkt(m) for m in _split_members(body)]
-        )
-    if s.startswith("("):
-        # bare group: a linestring/ring (possibly a polygon ring list
-        # inside MULTISURFACE — the caller disambiguates)
-        inner = s[1:-1].strip()
-        if inner.startswith("("):
-            rings = [
-                wkb._parse_coord_seq(g)
-                for g in wkb._split_groups(inner)
-            ]
-            return wkb.polygon(rings)
-        return wkb.linestring(wkb._parse_coord_seq(inner))
-    raise ValueError(f"cannot parse curve member {s[:40]!r}")
-
-
-def from_wkt(text: str) -> bytes:
-    """Curve-aware ST_GeomFromText: CIRCULARSTRING / COMPOUNDCURVE /
-    CURVEPOLYGON / MULTICURVE / MULTISURFACE, else delegates to the
-    linear parser."""
-    s = text.strip()
-    u = s.upper()
-    for kw, ctor in (
-        ("CIRCULARSTRING", None), ("COMPOUNDCURVE", None),
-        ("CURVEPOLYGON", None),
-    ):
-        if u.startswith(kw):
-            return _member_from_wkt(s)
-    if u.startswith("MULTICURVE"):
-        body = s[s.index("(") + 1: s.rindex(")")]
-        return multicurve(
-            [_member_from_wkt(m) for m in _split_members(body)]
-        )
-    if u.startswith("MULTISURFACE"):
-        body = s[s.index("(") + 1: s.rindex(")")]
-        return multisurface(
-            [_member_from_wkt(m) for m in _split_members(body)]
-        )
-    return wkb.from_wkt(text)

@@ -841,62 +841,3 @@ def write_fgb_dir(
     return src.repartition(n_gran, "__pid").mapInPandas(
         sink, "path string, n_rows long"
     )
-
-
-def read_fgb_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming twin of :func:`read_fgb` (the warc/geojsonseq
-    arrival pattern): a ``binaryFile`` file-arrival stream over a
-    landing directory — each new ``.fgb`` a producer drops becomes
-    one micro-batch task decoded by the SAME whole-blob kernel as
-    :func:`fgb_decode` (parity by construction). Stateless (pure
-    projection), so downstream streaming stages compose with it
-    (``read_fgb_stream → linearize/reproject → spatial join``).
-    Whole-file decode per batch is the streaming trade: arrival
-    latency per granule, not ranged parallelism within one."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.fgb")
-        .load(path)
-        .select("path", "content")
-    )
-    # schema discovery is not possible before the first file arrives;
-    # emit the universal frame: (path, fid, attrs as canonical JSON,
-    # geometry) so any producer schema flows
-    import json
-
-    def parse(batches):
-        for b in batches:
-            for p, buf in zip(b["path"], b["content"]):
-                pdf = fgb_decode(bytes(buf))
-                attrs = [
-                    c for c in pdf.columns
-                    if c not in ("fid", "geometry")
-                ]
-                yield pd.DataFrame({
-                    "path": p,
-                    "fid": pdf["fid"],
-                    "attrs": [
-                        json.dumps(
-                            {
-                                k: (None if v is None
-                                    or (isinstance(v, float)
-                                        and np.isnan(v))
-                                    else (v.hex() if isinstance(
-                                        v, (bytes, bytearray)
-                                    ) else v))
-                                for k, v in rec.items()
-                            },
-                            sort_keys=True,
-                        )
-                        for rec in pdf[attrs].to_dict("records")
-                    ],
-                    "geometry": pdf["geometry"],
-                })
-
-    return files.mapInPandas(
-        parse, "path string, fid long, attrs string, geometry binary"
-    )

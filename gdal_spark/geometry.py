@@ -217,30 +217,6 @@ def points_to_ring_distance(
     return np.sqrt(best)
 
 
-def segments_intersect_bbox(
-    ring: np.ndarray, minx: float, miny: float, maxx: float, maxy: float
-) -> bool:
-    """Conservative ring-vs-rectangle intersection: any vertex inside,
-    any rectangle corner inside the ring, or any edge crossing the
-    rectangle boundary (used for polygon cell covers)."""
-    ring = np.asarray(ring, dtype=np.float64)
-    x, y = ring[:, 0], ring[:, 1]
-    if ((x >= minx) & (x <= maxx) & (y >= miny) & (y <= maxy)).any():
-        return True
-    cx = np.array([minx, minx, maxx, maxx])
-    cy = np.array([miny, maxy, miny, maxy])
-    if points_in_ring(cx, cy, ring).any():
-        return True
-    if not (ring[0] == ring[-1]).all():
-        ring = np.vstack([ring, ring[:1]])
-    return bool(
-        segs_intersect_rects(
-            ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1],
-            minx, miny, maxx, maxy,
-        ).any()
-    )
-
-
 def _outcode(x, y, minx, miny, maxx, maxy) -> np.ndarray:
     return np.where(x < minx, 1, np.where(x > maxx, 2, 0)) | np.where(
         y < miny, 4, np.where(y > maxy, 8, 0)
@@ -321,41 +297,6 @@ def convex_hull(points: np.ndarray) -> np.ndarray:
         upper.append(p)
     hull = np.array(lower[:-1] + upper[:-1], dtype=np.float64)
     return np.vstack([hull, hull[:1]])
-
-
-def simplify_dp(ring: np.ndarray, tolerance: float) -> np.ndarray:
-    """Douglas-Peucker polyline simplification (Simplify analog,
-    ogr/ogrgeometry.cpp:6360): keeps every vertex whose perpendicular
-    distance from the chord exceeds ``tolerance``. Deterministic,
-    endpoint-preserving; closed rings keep their closure."""
-    pts = np.asarray(ring, dtype=np.float64)
-    n = len(pts)
-    if n <= 2:
-        return pts.copy()
-    keep = np.zeros(n, dtype=bool)
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i0, i1 = stack.pop()
-        if i1 <= i0 + 1:
-            continue
-        a, b = pts[i0], pts[i1]
-        ab = b - a
-        seg_len2 = float(ab @ ab)
-        mids = pts[i0 + 1 : i1]
-        if seg_len2 == 0.0:
-            d = np.hypot(*(mids - a).T)
-        else:
-            # perpendicular distance to the infinite chord line
-            d = np.abs(ab[0] * (mids[:, 1] - a[1]) - ab[1] * (mids[:, 0] - a[0]))
-            d = d / np.sqrt(seg_len2)
-        j = int(np.argmax(d))
-        if d[j] > tolerance:
-            k = i0 + 1 + j
-            keep[k] = True
-            stack.append((i0, k))
-            stack.append((k, i1))
-    return pts[keep]
 
 
 def _open_ring(ring: np.ndarray) -> np.ndarray:
@@ -847,56 +788,3 @@ def make_valid(ring: np.ndarray) -> list[np.ndarray]:
         if len(r) >= 3:
             out.extend(make_valid(r))
     return out
-
-
-def clip_ring_to_rect(
-    ring: np.ndarray, minx: float, miny: float, maxx: float, maxy: float
-) -> np.ndarray:
-    """Sutherland-Hodgman clip of a (convex or concave) ring against an
-    axis-aligned rectangle — the per-cell clipping used to split giant
-    polygons across coarse cover cells (SURVEY.md §7.3; the Clip layer
-    op of ogr/ogrlayer.cpp:5497 restricted to rect windows). Returns a
-    closed ring (possibly empty: shape (0, 2))."""
-    pts = np.asarray(ring, dtype=np.float64)
-    if len(pts) and (pts[0] == pts[-1]).all():
-        pts = pts[:-1]
-    edges = [
-        ("x>=", minx), ("x<=", maxx), ("y>=", miny), ("y<=", maxy),
-    ]
-
-    def inside(p, kind, v):
-        if kind == "x>=":
-            return p[0] >= v
-        if kind == "x<=":
-            return p[0] <= v
-        if kind == "y>=":
-            return p[1] >= v
-        return p[1] <= v
-
-    def intersect(a, b, kind, v):
-        if kind in ("x>=", "x<="):
-            t = (v - a[0]) / (b[0] - a[0])
-            return np.array([v, a[1] + t * (b[1] - a[1])])
-        t = (v - a[1]) / (b[1] - a[1])
-        return np.array([a[0] + t * (b[0] - a[0]), v])
-
-    poly = [p for p in pts]
-    for kind, v in edges:
-        if not poly:
-            break
-        out = []
-        for i, cur in enumerate(poly):
-            prev = poly[i - 1]
-            cur_in = inside(cur, kind, v)
-            prev_in = inside(prev, kind, v)
-            if cur_in:
-                if not prev_in:
-                    out.append(intersect(prev, cur, kind, v))
-                out.append(cur)
-            elif prev_in:
-                out.append(intersect(prev, cur, kind, v))
-        poly = out
-    if not poly:
-        return np.zeros((0, 2), dtype=np.float64)
-    arr = np.array(poly, dtype=np.float64)
-    return np.vstack([arr, arr[:1]])

@@ -866,98 +866,6 @@ def gtiff_block_index(
     return src.mapInPandas(run, _INDEX_SCHEMA)
 
 
-TINDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("location", T.StringType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("epsg", T.IntegerType()),
-        T.StructField("minx", T.DoubleType()),
-        T.StructField("miny", T.DoubleType()),
-        T.StructField("maxx", T.DoubleType()),
-        T.StructField("maxy", T.DoubleType()),
-        T.StructField("wkb", T.BinaryType()),
-    ]
-)
-
-
-def tile_index(
-    spark: SparkSession,
-    path_or_glob,
-    transform=None,
-    densify: int = 21,
-    opener=None,
-) -> DataFrame:
-    """gdaltindex analog (apps/gdaltindex_lib.cpp): one footprint row
-    per raster file — location, dims, EPSG, bbox columns, and the
-    exact footprint polygon as WKB (outer-edge ring through the
-    geotransform, so rotated rasters index correctly).
-
-    ``transform`` (optional picklable ``(x, y) -> (X, Y)`` numpy
-    callable, e.g. from :mod:`gdal_spark.proj`) reprojects the
-    footprint — the -t_srs option; the ring is densified to
-    ``densify`` points per edge first so curved projections don't get
-    cut to their chords (GDALTranslate-style edge sampling).
-
-    Header-only: each task walks the IFD of its files (a few KiB per
-    file however large the raster) through ``opener`` (picklable
-    path→file-like; default shared-FS open — gdal_spark.io); no pixel
-    byte is read. The result
-    is the driver table a mosaic/buildvrt step prunes against — at
-    100 TB, the index pass touches ~0.0001% of the bytes.
-    """
-    paths = (
-        sorted(_glob.glob(path_or_glob))
-        if isinstance(path_or_glob, str)
-        else [str(p) for p in path_or_glob]
-    )
-    if not paths:
-        raise FileNotFoundError(f"no files match {path_or_glob!r}")
-    from .io import local_opener
-
-    opener = opener or local_opener
-    src = spark.createDataFrame(pd.DataFrame({"path": paths}))
-    d = max(int(densify), 2)
-
-    def run(batches):
-        from . import wkb as _wkb
-
-        for b in batches:
-            rows = []
-            for path_ in b["path"]:
-                with opener(path_) as f:
-                    m = tiff_meta(f)
-                w, h = m["width"], m["height"]
-                gt = m["gt"] or (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)
-                t = np.linspace(0.0, 1.0, d)
-                # ring around the outer pixel edge, px/py in [0,w]x[0,h]
-                px = np.concatenate(
-                    [t * w, np.full(d, float(w)), (1 - t) * w, np.zeros(d)]
-                )
-                py = np.concatenate(
-                    [np.zeros(d), t * h, np.full(d, float(h)), (1 - t) * h]
-                )
-                gx = gt[0] + px * gt[1] + py * gt[2]
-                gy = gt[3] + px * gt[4] + py * gt[5]
-                if transform is not None:
-                    gx, gy = transform(gx, gy)
-                ring = np.column_stack([gx, gy])
-                ring = np.vstack([ring, ring[:1]])
-                rows.append(
-                    (
-                        path_, w, h, m["epsg"],
-                        float(gx.min()), float(gy.min()),
-                        float(gx.max()), float(gy.max()),
-                        _wkb.polygon([ring]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TINDEX_SCHEMA]
-            )
-
-    return src.mapInPandas(run, TINDEX_SCHEMA)
-
-
 def _block_bbox_filter(idx: DataFrame, bbox: tuple) -> DataFrame:
     """Keep only index rows whose block footprint intersects the
     georef ``bbox = (minx, miny, maxx, maxy)`` — the gdal_translate
@@ -1070,17 +978,6 @@ def read_gtiff_ranged(
     return idx.mapInPandas(run, GTIFF_TILE_SCHEMA)
 
 
-def to_engine_tiles(df: DataFrame, z: int = 0) -> DataFrame:
-    """Adapt a single-band uint8 GeoTIFF tile frame to the engine's
-    ``TILE_SCHEMA`` (z, tx, ty, w, h, data) so every operator in
-    :mod:`gdal_spark.operators.tiling` composes directly."""
-    return df.select(
-        F.lit(int(z)).alias("z"),
-        F.col("tx"), F.col("ty"),
-        F.col("w"), F.col("h"), F.col("data"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # distributed sink: tile DataFrame → GeoTIFF granule files
 # ---------------------------------------------------------------------------
@@ -1137,7 +1034,7 @@ def write_gtiff_dir(
     )
     gt = tuple(float(v) for v in geotransform) if geotransform else None
 
-    def sink(kt, pdf: pd.DataFrame) -> pd.DataFrame:
+    def sink(kt, pdf):
         k = int(kt[0])
         ts_w = int(pdf["w"].max())
         ts_h = int(pdf["h"].max())

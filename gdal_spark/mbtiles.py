@@ -132,7 +132,7 @@ def write_mbtiles(
         )
     user_meta = dict(metadata or {})
 
-    def sink(kt, pdf: pd.DataFrame) -> pd.DataFrame:
+    def sink(kt, pdf):
         k = int(kt[0])
         pdf = pdf.sort_values(["z", "ty", "tx"]).reset_index(drop=True)
         payloads = _tile_payloads(pdf, format, quality, png_level)

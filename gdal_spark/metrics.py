@@ -1,14 +1,10 @@
 """Shuffle/skew metrics emission (north-rule: "emit per-stage
 shuffle/skew metrics").
 
-Two complementary probes, both cheap and emitted as JSON:
-
-* ``partition_histogram`` — actual rows per physical partition of a
-  DataFrame (max/median/p95): detects skew AFTER a shuffle, i.e. what
-  the executors really saw. One extra narrow aggregation.
-* ``key_skew`` — rows per key quantiles BEFORE a join/groupBy on that
-  key: predicts hot keys (the planet-sized polygon / dense city cell
-  of SURVEY.md §7.3) so covers can be refined or salts applied.
+``key_skew`` gives rows-per-key quantiles BEFORE a join/groupBy on
+that key, emitted as JSON: it predicts hot keys (the planet-sized
+polygon / dense city cell of SURVEY.md §7.3) so covers can be refined
+or salts applied.
 
 GDAL has no analog (uniform grid partitioning by construction); Spark
 makes skew a first-class failure mode, so the engine measures it
@@ -22,31 +18,6 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def partition_histogram(df: DataFrame) -> dict:
-    """Rows per physical partition → skew summary."""
-    rows = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    counts = sorted(int(r["n"]) for r in rows)
-    if not counts:
-        return {"partitions": 0, "rows": 0}
-    total = sum(counts)
-    mid = counts[len(counts) // 2]
-    p95 = counts[min(len(counts) - 1, int(0.95 * len(counts)))]
-    return {
-        "partitions": len(counts),
-        "rows": total,
-        "min": counts[0],
-        "median": mid,
-        "p95": p95,
-        "max": counts[-1],
-        "skew_ratio": round(counts[-1] / mid, 2) if mid else None,
-    }
 
 
 def key_skew(df: DataFrame, key_cols: list[str], top_n: int = 5) -> dict:

@@ -9,9 +9,6 @@ provides the behaviors that differ from ANSI/Spark SQL:
   generic/ogr_gensql.cpp:1497-1526). First = lowest secondary FID.
 * LIKE that is case-insensitive by default (ILIKE semantics on UTF-8
   layers, ogr/swq_op_general.cpp:41 swq_test_like).
-* whole-table summary aggregates (OGR SQL has no GROUP BY; SUMMARY
-  mode accumulates MIN/MAX/COUNT/SUM/AVG/STDDEV over the full table,
-  ogr/ogr_gensql.cpp:849 PrepareSummary).
 """
 
 from __future__ import annotations
@@ -46,32 +43,6 @@ def ogr_like(col: Column, pattern: str, escape: str | None = None) -> Column:
     if escape:
         return F.ilike(col, F.lit(pattern), F.lit(escape))
     return F.ilike(col, F.lit(pattern))
-
-
-def summary_select(df: DataFrame, specs: list[tuple[str, str, str]]) -> DataFrame:
-    """OGR SUMMARY mode: one row of whole-table aggregates.
-
-    specs: (op, column, alias) with op in
-    {min, max, count, count_distinct, sum, avg, stddev_pop, stddev_samp}.
-    """
-    aggs = []
-    for op, col, alias in specs:
-        if op == "count" and col == "*":
-            aggs.append(F.count(F.lit(1)).alias(alias))
-        elif op == "count_distinct":
-            aggs.append(F.countDistinct(col).alias(alias))
-        else:
-            fn = {
-                "min": F.min,
-                "max": F.max,
-                "count": F.count,
-                "sum": F.sum,
-                "avg": F.avg,
-                "stddev_pop": F.stddev_pop,
-                "stddev_samp": F.stddev_samp,
-            }[op]
-            aggs.append(fn(col).alias(alias))
-    return df.agg(*aggs)
 
 
 def geom_area(geom_wkb: Column) -> Column:

@@ -255,11 +255,9 @@ def minhash_lsh_pairs(
     # pair restriction): persist so the banding computes once (the
     # shared InMemoryRelation is reused inside the single job). The
     # returned plan still references the cache lazily, so there is no
-    # safe in-operator release point — it is TRACKED so long-lived
-    # sessions can release it via gdal_spark.cache.unpersist_all().
-    from .. import cache as _cache
-
-    cand = _cache.track(cand)
+    # safe in-operator release point: it lives until the session ends
+    # or the caller runs spark.catalog.clearCache().
+    cand = cand.persist()
     return ngram_jaccard_pairs(
         df, id_col, text_col, n, threshold_num, threshold_den,
         candidates=cand,
@@ -288,21 +286,6 @@ def simhash(
             F.lit(0).cast("long")
         )
     return sums.select(F.col("__id").alias(id_col), sh.alias("simhash"))
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-) -> DataFrame:
-    """SimHash near-dup pairs by block-permuted exact match: split the
-    hash into n_blocks; pairs within hamming ≤ max_hamming must share
-    ≥1 exact block (pigeonhole when max_hamming < n_blocks) → equi-join
-    per block, then exact popcount filter."""
-    sh = simhash(df, id_col, text_col)
-    return simhash_pairs_from_fps(sh, id_col, max_hamming, n_blocks)
 
 
 def simhash_pairs_from_fps(
@@ -497,73 +480,6 @@ def duplicated_spans(
         .drop("__sid")
     )
     return spans
-
-
-def strip_duplicated_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "text_dedup",
-) -> DataFrame:
-    """Rewrite documents with every duplicated span deleted (the
-    paper's ExactSubstr cut: remove ALL copies; what survives is text
-    no window of which repeats). Token-level surgery stays JVM-side:
-    explode tokens with positions, anti-range-join against the doc's
-    spans, reassemble with sort_array + array_join — one extra shuffle
-    on doc id, no Python."""
-    w = word_array(F.col(text_col))
-    toks = (
-        df.select(F.col(id_col).alias("__id"), w.alias("__toks"))
-        .select("__id", F.posexplode("__toks").alias("__p0", "tok"))
-        .select("__id", (F.col("__p0") + 1).alias("pos"), "tok")
-    )
-    sp = spans.select(
-        F.col(id_col).alias("__id"), "span_start", "span_end"
-    )
-    kept = toks.join(
-        sp,
-        (toks["__id"] == sp["__id"])
-        & (F.col("pos") >= F.col("span_start"))
-        & (F.col("pos") <= F.col("span_end")),
-        "left_anti",
-    )
-    rebuilt = (
-        kept.groupBy("__id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("pos", "tok"))
-                    ),
-                    lambda s: s["tok"],
-                ),
-                " ",
-            ).alias(out_col)
-        )
-    )
-    span_docs = sp.select(
-        F.col("__id").alias(id_col), F.lit(True).alias("__cut")
-    ).distinct()
-    return (
-        df.join(
-            rebuilt.withColumnRenamed("__id", id_col), id_col, "left"
-        )
-        .join(span_docs, id_col, "left")
-        # a doc whose every token sat in a span rebuilds to NOTHING —
-        # empty string, not its original text; untouched docs pass
-        # through unchanged
-        .withColumn(
-            out_col,
-            F.coalesce(
-                out_col,
-                F.when(F.col("__cut"), F.lit("")).otherwise(
-                    F.col(text_col)
-                ),
-            ),
-        )
-        .drop("__cut")
-    )
 
 
 def contamination_pairs(

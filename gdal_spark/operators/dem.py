@@ -1,20 +1,10 @@
-"""DEM derivatives: hillshade / slope / aspect / TPI / TRI /
-roughness / color-relief (the gdaldem family, apps/gdaldem_lib.cpp;
-Horn's formula — GDAL's default gradient estimator; focal metrics
-apps/gdaldem_lib.cpp:2347-2420; color relief :1611-1776).
+"""DEM focal terrain metrics: TPI / TRI / roughness (the gdaldem
+family, apps/gdaldem_lib.cpp:2347-2420).
 
-All three are 3x3 focal operators: one halo exchange
-(tiling.add_halo), then per-tile numpy. Output tiles keep the input
-grid; border pixels beyond the global raster use edge-replication via
-the halo fill only where a neighbor tile exists (grid-edge pixels use
-the zero fill, matching a nodata-less GDAL run on the interior — the
-tests compare interior pixels).
-
-Horn gradients over the 3x3 window (a..i, row-major, c row = north):
-    dz/dx = ((c + 2f + i) - (a + 2d + g)) / (8 * xres)
-    dz/dy = ((g + 2h + i) - (a + 2b + c)) / (8 * yres)
-hillshade (alt/az in degrees, GDAL's 0-255 scaling):
-    shade = 255 * (sin(alt)·cos(s) + cos(alt)·sin(s)·cos(az - 90 - aspect))
+A 3x3 focal operator: one halo exchange (tiling.add_halo), then
+per-tile numpy. Output tiles keep the input grid; grid-edge pixels see
+the halo zero fill, matching a nodata-less GDAL run on the interior
+(the tests compare interior pixels).
 """
 
 from __future__ import annotations
@@ -22,91 +12,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .. import raster
 from .tiling import TILE_SCHEMA, add_halo
 
-
-def _gradients(a: np.ndarray, xres: float, yres: float):
-    """Horn dz/dx, dz/dy for the core of a 1-px padded array."""
-    z = a.astype(np.float64)
-    dzdx = (
-        (z[:-2, 2:] + 2.0 * z[1:-1, 2:] + z[2:, 2:])
-        - (z[:-2, :-2] + 2.0 * z[1:-1, :-2] + z[2:, :-2])
-    ) / (8.0 * xres)
-    dzdy = (
-        (z[2:, :-2] + 2.0 * z[2:, 1:-1] + z[2:, 2:])
-        - (z[:-2, :-2] + 2.0 * z[:-2, 1:-1] + z[:-2, 2:])
-    ) / (8.0 * yres)
-    return dzdx, dzdy
-
-
-def dem_derive(
-    tiles: DataFrame,
-    mode: str = "hillshade",
-    xres: float = 1.0,
-    yres: float = 1.0,
-    z_factor: float = 1.0,
-    altitude: float = 45.0,
-    azimuth: float = 315.0,
-) -> DataFrame:
-    """gdaldem analog over a tile DataFrame → uint8 tiles.
-
-    mode: 'hillshade' (Horn + GDAL 0-255 scaling), 'slope' (degrees,
-    rounded), 'aspect' (degrees from north clockwise, /2 to fit
-    uint8; flat → 0)."""
-    if mode not in ("hillshade", "slope", "aspect"):
-        raise ValueError(f"unknown dem mode {mode!r}")
-    padded = add_halo(tiles, pad=1)
-    alt = np.deg2rad(altitude)
-    az = np.deg2rad(azimuth)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                ts_w, ts_h, p = int(r["w"]), int(r["h"]), int(r["pad"])
-                a = np.frombuffer(r["data"], dtype=np.uint8).reshape(
-                    ts_h + 2 * p, ts_w + 2 * p
-                )
-                dzdx, dzdy = _gradients(a, xres, yres)
-                dzdx = dzdx * z_factor
-                dzdy = dzdy * z_factor
-                if mode == "slope":
-                    out = np.degrees(
-                        np.arctan(np.sqrt(dzdx * dzdx + dzdy * dzdy))
-                    )
-                    out = np.floor(out + 0.5)
-                elif mode == "aspect":
-                    flat = (dzdx == 0) & (dzdy == 0)
-                    ang = np.degrees(np.arctan2(dzdy, -dzdx))
-                    # → compass degrees clockwise from north
-                    asp = np.mod(450.0 - ang, 360.0)
-                    out = np.floor(asp / 2.0 + 0.5)
-                    out[flat] = 0.0
-                else:  # hillshade (Horn + GDAL scaling)
-                    slope = np.arctan(np.sqrt(dzdx * dzdx + dzdy * dzdy))
-                    aspect = np.arctan2(dzdy, -dzdx)
-                    shade = np.sin(alt) * np.cos(slope) + np.cos(
-                        alt
-                    ) * np.sin(slope) * np.cos(az - np.pi / 2.0 - aspect)
-                    out = np.floor(np.clip(shade, 0.0, 1.0) * 255.0 + 0.5)
-                rows.append(
-                    (int(r["z"]), int(r["tx"]), int(r["ty"]),
-                     ts_w, ts_h,
-                     np.clip(out, 0, 255).astype(np.uint8).tobytes())
-                )
-            yield pd.DataFrame(
-                rows, columns=["z", "tx", "ty", "w", "h", "data"]
-            )
-
-    return padded.mapInPandas(run, TILE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# focal terrain metrics: TPI / TRI (Wilson, Riley) / roughness
-# ---------------------------------------------------------------------------
 
 # 3x3 neighbor offsets (dy, dx) excluding the center — afWin[0..8]
 # minus afWin[4] in the reference kernels (apps/gdaldem_lib.cpp:2352).
@@ -150,8 +58,8 @@ def dem_focal(tiles: DataFrame, mode: str) -> DataFrame:
 
     Output rows keep TILE_SCHEMA; ``data`` is int32 for the integer
     metrics and float32 for ``tri_riley`` (documented dtype — tiles
-    carry raw bytes). Like the hillshade family this is a 3x3 focal
-    op: one halo exchange then per-tile numpy; grid-edge pixels see
+    carry raw bytes). A 3x3 focal op: one halo exchange then
+    per-tile numpy; grid-edge pixels see
     the halo zero fill (the reference leaves edges to the
     -compute_edges option; compare interiors)."""
     if mode not in ("tpi8", "tri_wilson8", "tri_riley", "roughness"):
@@ -177,136 +85,3 @@ def dem_focal(tiles: DataFrame, mode: str) -> DataFrame:
             )
 
     return padded.mapInPandas(run, TILE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# color relief
-# ---------------------------------------------------------------------------
-
-
-def _relief_lut(ramp: list[tuple], mode: str) -> np.ndarray:
-    """Precompute the 256-entry RGBA LUT for uint8 pixels from a
-    sorted (value, r, g, b[, a]) ramp — GDALColorReliefGetRGBA
-    (apps/gdaldem_lib.cpp:1611) evaluated for every possible input:
-
-    * v ≤ first entry → first color; v > last → last color
-    * exact entry value → that color
-    * between entries: linear interpolation per channel with GDAL's
-      rounding clamp(int(0.5 + before + ratio*(after-before)))
-      (:1760-1764); 'nearest' snaps to the closer entry, ties to the
-      upper (:1733-1744); 'exact' → (0,0,0,0) unless an exact hit.
-    """
-    ent = sorted(
-        (float(e[0]),) + tuple(int(x) for x in e[1:4])
-        + ((int(e[4]),) if len(e) > 4 else (255,))
-        for e in ramp
-    )
-    vals = np.array([e[0] for e in ent])
-    rgba = np.array([e[1:] for e in ent], dtype=np.float64)
-    lut = np.zeros((256, 4), dtype=np.uint8)
-    for v in range(256):
-        i = int(np.searchsorted(vals, v, side="left"))
-        if i < len(vals) and vals[i] == v:
-            lut[v] = rgba[i]
-        elif mode == "exact":
-            lut[v] = 0
-        elif i == 0:
-            lut[v] = rgba[0]
-        elif i == len(vals):
-            lut[v] = rgba[-1]
-        else:
-            ratio = (v - vals[i - 1]) / (vals[i] - vals[i - 1])
-            if mode == "nearest":
-                lut[v] = rgba[i - 1] if ratio < 0.5 else rgba[i]
-            else:
-                mix = 0.5 + rgba[i - 1] + ratio * (rgba[i] - rgba[i - 1])
-                lut[v] = np.clip(np.floor(mix), 0, 255)
-    return lut
-
-
-def color_relief(
-    tiles: DataFrame, ramp: list[tuple], mode: str = "interpolate"
-) -> DataFrame:
-    """gdaldem color-relief analog: uint8 tiles → RGBA tiles
-    (``data`` = h x w x 4 uint8, interleaved). Pure per-pixel LUT —
-    no halo, no shuffle; the 1 KiB LUT rides the closure."""
-    if mode not in ("interpolate", "nearest", "exact"):
-        raise ValueError(f"unknown color-relief mode {mode!r}")
-    lut = _relief_lut(ramp, mode)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                ts_w, ts_h = int(r["w"]), int(r["h"])
-                a = np.frombuffer(r["data"], dtype=np.uint8).reshape(
-                    ts_h, ts_w
-                )
-                rows.append(
-                    (int(r["z"]), int(r["tx"]), int(r["ty"]),
-                     ts_w, ts_h, lut[a].tobytes())
-                )
-            yield pd.DataFrame(
-                rows, columns=["z", "tx", "ty", "w", "h", "data"]
-            )
-
-    return tiles.mapInPandas(run, TILE_SCHEMA)
-
-
-def apply_vertical_shift(
-    dem_tiles: DataFrame,
-    dem_gt: tuple,
-    dem_w: int,
-    dem_h: int,
-    grid_tiles: DataFrame,
-    grid_gt: tuple,
-    grid_w: int,
-    grid_h: int,
-    grid_tile_size: int = 64,
-    inverse: bool = False,
-    src_unit_to_meter: float = 1.0,
-    dst_unit_to_meter: float = 1.0,
-    shift_scale: int = 65536,
-) -> DataFrame:
-    """GDALApplyVerticalShiftGrid analog
-    (alg/gdalapplyverticalshiftgrid.cpp:274-330): resample the shift
-    grid onto the DEM's grid with BILINEAR (the reference's default)
-    and emit ``(src * src_unit_to_meter ± shift) / dst_unit_to_meter``
-    per pixel (``+`` forward geoid→ellipsoid, ``-`` inverse,
-    :250-261). DEM pixels whose grid sample falls outside the shift
-    grid keep nodata semantics (the reference errors there; we emit
-    NULL shift so callers choose).
-
-    Spark-first composition — zero new machinery: the grid resample
-    IS :func:`tiling.warp_affine` (grid georef → DEM georef, bilinear,
-    ``bilinear_scale=shift_scale`` for 2^-16 quantization), the DEM
-    side is :func:`tiling.pixels_df`, and the apply is one
-    co-partitioned equi-join on the pixel key plus a codegen
-    projection. At scale both sides are pixel tables partitioned by
-    the same (gx, gy) key, so the join is a single co-located
-    shuffle; the alternative per-tile gather would save the DEM-side
-    exchange but duplicate the whole warp path — the composition is
-    the design the module keeps.
-
-    Returns (gx, gy, elevation double, shift double)."""
-    from . import tiling as _tiling
-
-    warped = _tiling.warp_affine(
-        grid_tiles, grid_gt, grid_w, grid_h, dem_gt, dem_w, dem_h,
-        method="bilinear", src_tile_size=grid_tile_size,
-        bilinear_scale=shift_scale,
-    ).select(
-        F.col("di").alias("gx"),
-        F.col("dj").alias("gy"),
-        F.when(F.col("val") != raster.NODATA,
-               F.col("val") / float(shift_scale)).alias("shift"),
-    )
-    dem_px = _tiling.pixels_df(dem_tiles, nonzero_only=False)
-    sgn = -1.0 if inverse else 1.0
-    return dem_px.join(warped, ["gx", "gy"], "left").select(
-        "gx", "gy",
-        ((F.col("val") * F.lit(float(src_unit_to_meter))
-          + F.lit(sgn) * F.col("shift"))
-         / F.lit(float(dst_unit_to_meter))).alias("elevation"),
-        "shift",
-    )

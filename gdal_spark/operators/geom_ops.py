@@ -1,177 +1,15 @@
-"""Constructive geometry operators (numpy kernels, no GEOS).
-
-Spark wrappers over geometry.py's constructive kernels — the engine's
-renderings of the reference's GEOS-backed methods (ConvexHull
-ogr/ogrgeometry.cpp:4186, Simplify :6360, Clip ogr/ogrlayer.cpp:5497
-restricted to rectangular windows).
+"""Constructive full-polygon operators (numpy kernels, no GEOS):
+union fold, buffer and make-valid — the engine's renderings of the
+reference's GEOS-backed ST_Buffer (ogr/ogrgeometry.cpp:4526) and
+ST_MakeValid (:3922), reached through the ST_ SQL functions of
+stsql.py.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .. import cells, geometry, wkb
-
-
-def _r6(v: float) -> int:  # SQL-style half away from zero, x1e6
-    s = v * 1e6
-    return int(math.floor(s + 0.5)) if s >= 0 else int(math.ceil(s - 0.5))
-
-
-def convex_hull_per_key(
-    df: DataFrame,
-    key_cols: list[str],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Convex hull of the points in each group → one row per group
-    with vertex count, quantized area and the hull as WKB. applyInPandas
-    per key (groups are independent; partial state is the point set)."""
-
-    def hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        pts = pdf[[lon_col, lat_col]].to_numpy(dtype=np.float64)
-        ring = geometry.convex_hull(pts)
-        area = abs(geometry.ring_area(ring)) if len(ring) > 3 else 0.0
-        row = {k: pdf[k].iloc[0] for k in key_cols}
-        row.update(
-            {
-                "n_vertices": len(ring) - 1,
-                "area_q6": _r6(area),
-                "hull_wkb": wkb.polygon([ring]) if len(ring) > 3 else b"",
-            }
-        )
-        return pd.DataFrame([row])
-
-    key_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in key_cols
-    )
-    return df.groupBy(*key_cols).applyInPandas(
-        hull, f"{key_schema}, n_vertices int, area_q6 long, hull_wkb binary"
-    )
-
-
-def clip_polygons_to_cells(
-    spark,
-    polygons_pdf: pd.DataFrame,
-    res: int,
-) -> DataFrame:
-    """Split every polygon into per-cell pieces at resolution ``res``
-    (Sutherland-Hodgman against each covered cell's rectangle) — the
-    giant-polygon partitioning lever of SURVEY.md §7.3: after this, no
-    single broadcast entry or join key carries a planet-sized
-    geometry. Output: (poly_id, cell_id, piece_wkb, area_q6), area
-    exactly partitioned across pieces."""
-    rows = []
-    for pid, buf in zip(polygons_pdf["poly_id"], polygons_pdf["geom_wkb"]):
-        for part in wkb.polygon_rings(bytes(buf)):
-            outer = part[0]
-            minx, miny, maxx, maxy = geometry.ring_bbox(outer)
-            for cid in cells.cover_bbox(minx, miny, maxx, maxy, res):
-                clo, cla, chi, cha = cells.cell_bounds(np.int64(cid))
-                piece = geometry.clip_ring_to_rect(
-                    outer, float(clo), float(cla), float(chi), float(cha)
-                )
-                if len(piece) < 4:
-                    continue
-                area = abs(geometry.ring_area(piece))
-                # subtract hole overlaps within this cell
-                for hole in part[1:]:
-                    hp = geometry.clip_ring_to_rect(
-                        hole, float(clo), float(cla), float(chi), float(cha)
-                    )
-                    if len(hp) >= 4:
-                        area -= abs(geometry.ring_area(hp))
-                rows.append(
-                    (
-                        int(pid), int(cid), wkb.polygon([piece]),
-                        _r6(area),
-                    )
-                )
-    return spark.createDataFrame(
-        pd.DataFrame(
-            rows, columns=["poly_id", "cell_id", "piece_wkb", "area_q6"]
-        )
-    )
-
-
-def concave_hull(points: np.ndarray, ratio: float = 0.3) -> np.ndarray:
-    """Concave hull of a point set (OGRGeometry::ConcaveHull,
-    ogr/ogrgeometry.cpp:4305; GEOS ConcaveHullOfPoints role) as an
-    alpha shape over the engine's own Delaunay triangulation: keep
-    triangles whose longest edge ≤ minLen + ratio·(maxLen − minLen)
-    (GEOS's maximum-edge-length-ratio parameterization), then trace
-    the boundary — edges used by exactly one kept triangle — into the
-    outer ring. ratio=1 reproduces the convex hull. Returns a CLOSED
-    ring; falls back to the convex hull if the kept set collapses or
-    the boundary is disconnected."""
-    from .grid import delaunay_triangulate
-
-    pts = np.asarray(points, dtype=np.float64).reshape(-1, 2)
-    if len(pts) < 4:
-        return geometry.convex_hull(pts)
-    tris = delaunay_triangulate(pts)
-    if not tris:
-        return geometry.convex_hull(pts)
-
-    def elen(i, j):
-        d = pts[i] - pts[j]
-        return float(np.hypot(d[0], d[1]))
-
-    lens = [
-        elen(a, b)
-        for t in tris
-        for a, b in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0]))
-    ]
-    lo, hi = min(lens), max(lens)
-    thr = lo + ratio * (hi - lo)
-    kept = [
-        t
-        for t in tris
-        if max(
-            elen(t[0], t[1]), elen(t[1], t[2]), elen(t[2], t[0])
-        ) <= thr
-    ]
-    if not kept:
-        return geometry.convex_hull(pts)
-    # boundary edges appear in exactly one kept triangle
-    count: dict[tuple, int] = {}
-    directed: dict[tuple, tuple] = {}
-    for t in kept:
-        for a, b in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
-            k = (min(a, b), max(a, b))
-            count[k] = count.get(k, 0) + 1
-            directed[k] = (a, b)  # CCW triangle orientation
-    nxt: dict[int, int] = {}
-    for k, c in count.items():
-        if c == 1:
-            a, b = directed[k]
-            nxt[a] = b
-    if not nxt:
-        return geometry.convex_hull(pts)
-    start = min(nxt)
-    ring_idx = [start]
-    cur = nxt[start]
-    guard = 0
-    while cur != start and guard <= len(nxt):
-        ring_idx.append(cur)
-        cur = nxt.get(cur, start)
-        guard += 1
-    if guard > len(nxt) or len(ring_idx) != len(nxt):
-        # boundary split into several loops / pinched — refuse rather
-        # than emit a non-simple ring
-        return geometry.convex_hull(pts)
-    ring = pts[ring_idx]
-    return np.vstack([ring, ring[:1]])
-
-
-# ---------------------------------------------------------------------------
-# full-polygon constructive ops: union fold, buffer, make-valid
-# ---------------------------------------------------------------------------
+from .. import geometry
 
 
 def union_rings(rings: list) -> tuple[list, float]:

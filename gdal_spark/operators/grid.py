@@ -1,8 +1,8 @@
 """Grid interpolation: scattered points → per-cell values.
 
 The Spark rendering of GDAL's gridding engine (alg/gdalgrid.cpp): IDW
-(inverse distance weighting, :109), moving average (:629), and the
-data metrics family (:1033+, covered by the sp_grid_metrics query).
+(inverse distance weighting, :109), the data metrics family (:1033+,
+covered by the sp_grid_metrics query) and linear (TIN) interpolation.
 GDAL answers each output pixel with a quadtree radius search; the
 engine inverts the data flow — each point SCATTERS its contribution to
 the target cells within the search radius (a JVM-side neighbor-offset
@@ -15,8 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..cells import _IX_SHIFT, _RES_SHIFT
 
 
 def _cell_parts(lon_col, lat_col, res: int):
@@ -32,63 +30,6 @@ def _cell_parts(lon_col, lat_col, res: int):
     return ix, iy
 
 
-def idw_grid(
-    points: DataFrame,
-    res: int,
-    z_col: str = "z",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    radius_cells: int = 1,
-    power: int = 2,
-    smoothing: float = 1e-9,
-) -> DataFrame:
-    """IDW value per touched cell from points within ``radius_cells``
-    Chebyshev rings (GDALGridInverseDistanceToAPower semantics,
-    radius-bounded; alg/gdalgrid.cpp:109).
-
-    Output: (cell_ix, cell_iy, n_points, idw) — idw = Σz/dᵖ / Σ1/dᵖ
-    with d = distance from the point to the TARGET cell's center
-    (+smoothing to keep a point exactly on a center finite).
-
-    Plan: point → explode (2r+1)² neighbor offsets (JVM) → weight
-    arithmetic (codegen) → groupBy(cell).agg(sum, sum, count) with
-    map-side combine. Cells with no point in range simply don't
-    appear (GDAL writes nodata there).
-    """
-    n = 1 << res
-    r = radius_cells
-    ix, iy = _cell_parts(F.col(lon_col), F.col(lat_col), res)
-    offs = F.expr(
-        f"flatten(transform(sequence({-r}, {r}), dx -> "
-        f"transform(sequence({-r}, {r}), dy -> struct(dx, dy))))"
-    )
-    pts = (
-        points.withColumn("__ix", ix)
-        .withColumn("__iy", iy)
-        .withColumn("__o", F.explode(offs))
-        .withColumn("cell_ix", F.col("__ix") + F.col("__o.dx"))
-        .withColumn("cell_iy", F.col("__iy") + F.col("__o.dy"))
-        .filter(
-            (F.col("cell_ix") >= 0) & (F.col("cell_ix") < n)
-            & (F.col("cell_iy") >= 0) & (F.col("cell_iy") < n)
-        )
-    )
-    cx = (F.col("cell_ix") + 0.5) / n * 360.0 - 180.0
-    cy = (F.col("cell_iy") + 0.5) / n * 180.0 - 90.0
-    dx = F.col(lon_col) - cx
-    dy = F.col(lat_col) - cy
-    d2 = dx * dx + dy * dy + F.lit(smoothing)
-    w = F.lit(1.0) / F.pow(d2, F.lit(power / 2.0))
-    return (
-        pts.withColumn("__w", w)
-        .groupBy("cell_ix", "cell_iy")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            (F.sum(F.col(z_col) * F.col("__w")) / F.sum("__w")).alias("idw"),
-        )
-    )
-
-
 def idw_grid_quantized(
     points: DataFrame,
     res: int,
@@ -97,15 +38,14 @@ def idw_grid_quantized(
     lat_col: str = "lat",
     radius_cells: int = 1,
 ) -> DataFrame:
-    """IDW with INTEGER-quantized weights — the oracle-exact gate
-    variant of idw_grid (same scatter plan; alg/gdalgrid.cpp:109).
+    """IDW with INTEGER-quantized weights (alg/gdalgrid.cpp:109):
+    bit-exact, so a SQL oracle can gate it.
 
-    Float Σw / Σzw are aggregation-order-dependent, so this variant
+    Float Σw / Σzw are aggregation-order-dependent, so this kernel
     quantizes per-point: d2q = floor(d2·1e6)+1, w = 1e12 DIV d2q, and
     reduces in pure integers; the output millis come from the exact
     long-division split q·1000 + (rem·1000) DIV Σw. Bit-reproducible
-    under ANY aggregation order/partitioning — the float variant is
-    the throughput path, this one the verification path.
+    under ANY aggregation order/partitioning.
 
     Output: (cell_ix, cell_iy, n_points, idw_m3)."""
     n = 1 << res
@@ -148,41 +88,6 @@ def idw_grid_quantized(
         F.expr(
             "(__szw DIV __sw) * 1000 + ((__szw % __sw) * 1000) DIV __sw"
         ).alias("idw_m3"),
-    )
-
-
-def moving_average_grid(
-    points: DataFrame,
-    res: int,
-    z_col: str = "z",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    radius_cells: int = 1,
-) -> DataFrame:
-    """Moving-average gridding (alg/gdalgrid.cpp:629): plain mean of
-    all points within the ring window of each cell. Same scatter plan
-    as IDW with unit weights."""
-    n = 1 << res
-    r = radius_cells
-    ix, iy = _cell_parts(F.col(lon_col), F.col(lat_col), res)
-    offs = F.expr(
-        f"flatten(transform(sequence({-r}, {r}), dx -> "
-        f"transform(sequence({-r}, {r}), dy -> struct(dx, dy))))"
-    )
-    pts = (
-        points.withColumn("__ix", ix)
-        .withColumn("__iy", iy)
-        .withColumn("__o", F.explode(offs))
-        .withColumn("cell_ix", F.col("__ix") + F.col("__o.dx"))
-        .withColumn("cell_iy", F.col("__iy") + F.col("__o.dy"))
-        .filter(
-            (F.col("cell_ix") >= 0) & (F.col("cell_ix") < n)
-            & (F.col("cell_iy") >= 0) & (F.col("cell_iy") < n)
-        )
-    )
-    return pts.groupBy("cell_ix", "cell_iy").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.avg(F.col(z_col)).alias("avg_z"),
     )
 
 
@@ -533,12 +438,10 @@ def _global_hull_neighbors_df(spark, pts_df: DataFrame):
     (coordinate extremes are always partition-hull-boundary points),
     so the SOURCE table is scanned exactly once here. The driver
     never holds a point row — candidates flow candidate-DF →
-    candidate-DF (the tiny filtered set is cache-tracked for the two
+    candidate-DF (the tiny filtered set is persisted for the two
     consumers); worst-case degenerate inputs (every point on one
     circle) bound the terminal task by the true hull size, which for
     such inputs is the OUTPUT size, not an artifact of the plan."""
-    from .. import cache
-
     cand = pts_df.select("id", "x", "y").mapInPandas(
         _part_boundary, "id long, x double, y double"
     )
@@ -551,7 +454,7 @@ def _global_hull_neighbors_df(spark, pts_df: DataFrame):
         cand = cand.repartition(n).mapInPandas(
             _part_boundary, "id long, x double, y double"
         )
-    cand = cache.track(cand)
+    cand = cand.persist()
     bx0, bx1, by0, by1 = cand.agg(
         F.min("x"), F.max("x"), F.min("y"), F.max("y")
     ).first()
@@ -632,7 +535,7 @@ def delaunay_distributed(
     )
 
     def make_kernel(k: int):
-        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(key, pdf):
             tcx, tcy = int(key[0]), int(key[1])
             gx0, gy0, gx1, gy1, cs = bcast.value
             hn1 = pdf["nbr1"].to_numpy(dtype=np.float64)
@@ -863,7 +766,7 @@ def tin_grid_distributed(
         .drop("gx_lo", "gx_hi", "gy_lo", "gy_hi")
     )
 
-    def fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fill(key, pdf):
         bxi, byi = int(key[0]), int(key[1])
         gx0p, gy0p = bxi * bucket, byi * bucket
         bw = min(bucket, width - gx0p)

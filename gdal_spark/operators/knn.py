@@ -5,12 +5,12 @@ search (GDALGridInverseDistanceToAPowerNearestNeighbor,
 alg/gdalgrid.cpp:241-341: quadtree candidate gather, distance sort,
 take ≤ nMaxPoints).
 
-Algorithm (query side is small and broadcastable; point side is huge):
+Algorithm (both sides are DataFrames; the point side is huge):
   1. points get a cell id at res r (JVM expression, zero Python);
-  2. each query expands Chebyshev rings k = r0, r0+1, ... around its
-     cell; the (query, candidate-cell) table is built driver-side from
-     the broadcast query list and equi-joined (broadcast hash) against
-     the bucketed points;
+  2. each query expands Chebyshev rings k = r0, 2 r0, 4 r0, ... around
+     its cell; the (query, candidate-cell) table is a JVM offset
+     explode, equi-joined (broadcast hash by default) against the
+     bucketed points;
   3. exact squared distance + row_number() over (qid ORDER BY d2, pid)
      keeps the top K;
   4. termination bound: a result is final when its Kth distance is
@@ -23,8 +23,6 @@ Exactness: ties broken by pid (FIXTURES.md F6 invariant 6).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -47,9 +45,9 @@ def knn_join_df(
     broadcast_queries: bool = True,
     initial_ring: int | None = None,
 ) -> DataFrame:
-    """Fully distributed exact kNN: BOTH sides are DataFrames — the
-    scale path when the query set itself is large (the pandas-input
-    ``knn_join`` broadcasts a small probe set instead).
+    """Fully distributed exact kNN → (qid, rank, pid), the K nearest
+    points per query. BOTH sides are DataFrames, so the query set may
+    be as large as the point set (``broadcast_queries=False``).
 
     Each iteration expands every pending query's Chebyshev ring as a
     JVM offset explode ((2r+1)^2 literal offsets — no Python), joins on
@@ -68,20 +66,14 @@ def knn_join_df(
     regardless of k.  The termination bound is unchanged and exact, so
     this is latency tuning only, never a correctness trade.
     """
-    spark = points.sparkSession
     n_grid = 1 << res
     min_dim = min(360.0 / n_grid, 180.0 / n_grid)
     if max_rings is None:
         max_rings = max(n_grid, 2)
 
-    from .. import cache as _cache
-
-    pts = _cache.track(
-        points.withColumn(
-            "cell_id",
-            cells.cell_expr(F.col(lon_col), F.col(lat_col), res),
-        )
-    )
+    pts = points.withColumn(
+        "cell_id", cells.cell_expr(F.col(lon_col), F.col(lat_col), res)
+    ).persist()
 
     n = 1 << res
     ix = F.least(
@@ -148,10 +140,9 @@ def knn_join_df(
             .filter(F.col("rank") <= k)
             .select(qid_col, "rank", id_col, "__d2")
         )
-        # best is persisted via the registry: the returned plan reads
-        # these caches (one per ring), so release happens at
-        # cache.unpersist_all(), not here
-        best = _cache.track(best)
+        # the returned plan reads these caches (one per ring), so they
+        # live until the session ends, not released here
+        best = best.persist()
         last_best = best
         guarantee = (ring * min_dim) ** 2
         stats = best.groupBy(qid_col).agg(
@@ -200,105 +191,4 @@ def knn_join_df(
         out = out.unionByName(p)
     return out.select(qid_col, "rank", id_col).dropDuplicates(
         [qid_col, "rank"]
-    )
-
-
-def knn_join(
-    points: DataFrame,
-    queries_pdf: pd.DataFrame,
-    k: int = 4,
-    res: int = 6,
-    id_col: str = "pid",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    qid_col: str = "qid",
-    qlon_col: str = "qlon",
-    qlat_col: str = "qlat",
-    max_rings: int | None = None,
-) -> DataFrame:
-    """→ (qid, rank, pid) exact K nearest points per query.
-
-    ``queries_pdf`` is a pandas DataFrame (driver-side, SMALL — this
-    twin iterates rings on the driver; the distributed-both-sides
-    scale path is :func:`knn_join_df`). Guarded: a query set past
-    100k rows raises instead of silently looping driver-side."""
-    if len(queries_pdf) > 100_000:
-        raise ValueError(
-            f"knn_join is the driver-resident small-query twin "
-            f"({len(queries_pdf)} query rows > 100000); use "
-            "knn_join_df for large query sets"
-        )
-    spark = points.sparkSession
-    n_grid = 1 << res
-    cell_w, cell_h = 360.0 / n_grid, 180.0 / n_grid
-    min_dim = min(cell_w, cell_h)
-    if max_rings is None:
-        max_rings = max(n_grid, 2)
-
-    pts = points.withColumn(
-        "cell_id", cells.cell_expr(F.col(lon_col), F.col(lat_col), res)
-    )
-    # cache the bucketed points: reused across ring iterations
-    pts = pts.persist()
-
-    pending = queries_pdf[[qid_col, qlon_col, qlat_col]].copy()
-    pending["__cell"] = cells.encode(
-        pending[qlon_col].to_numpy(), pending[qlat_col].to_numpy(), res
-    )
-    results: list[pd.DataFrame] = []
-    ring = 1  # start with the 3x3 neighborhood
-    prev_best: pd.DataFrame | None = None
-
-    while len(pending) and ring <= max_rings:
-        probe_rows = []
-        for qid, qlon, qlat, qcell in pending.itertuples(index=False):
-            for c in cells.k_ring(int(qcell), ring).tolist():
-                probe_rows.append((int(qid), float(qlon), float(qlat), c))
-        probe = spark.createDataFrame(
-            pd.DataFrame(
-                probe_rows, columns=[qid_col, qlon_col, qlat_col, "cell_id"]
-            )
-        )
-        d2 = (F.col(lon_col) - F.col(qlon_col)) ** 2 + (
-            F.col(lat_col) - F.col(qlat_col)
-        ) ** 2
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("__d2").asc(), F.col(id_col).asc()
-        )
-        best = (
-            pts.join(F.broadcast(probe), "cell_id")
-            .withColumn("__d2", d2)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(qid_col, "rank", id_col, "__d2")
-            .toPandas()
-        )
-        prev_best = best
-        # termination: Kth distance within the ring guarantee
-        guarantee = (ring * min_dim) ** 2
-        kth = best.groupby(qid_col).agg(
-            n=("rank", "size"), worst=("__d2", "max")
-        )
-        done_ids = set(
-            kth[(kth["n"] >= k) & (kth["worst"] <= guarantee)].index.tolist()
-        )
-        # queries whose ring already spans the whole grid are done too
-        if ring >= max_rings:
-            done_ids |= set(pending[qid_col].tolist())
-        if done_ids:
-            results.append(best[best[qid_col].isin(done_ids)])
-            pending = pending[~pending[qid_col].isin(done_ids)]
-        ring = ring * 2  # geometric expansion keeps iterations O(log n)
-
-    if len(pending) and prev_best is not None:
-        results.append(prev_best[prev_best[qid_col].isin(set(pending[qid_col]))])
-    pts.unpersist()
-    out = (
-        pd.concat(results, ignore_index=True)
-        if results
-        else pd.DataFrame(columns=[qid_col, "rank", id_col, "__d2"])
-    )
-    out = out[[qid_col, "rank", id_col]]
-    return spark.createDataFrame(
-        out.astype({qid_col: "int64", "rank": "int32", id_col: "int64"})
     )

@@ -1,31 +1,24 @@
 """Layer algebra with geometric output (polygon × polygon).
 
-Spark re-expression of the reference's layer-algebra family —
-OGRLayer::Intersection (ogr/ogrlayer.cpp:3345), Union (:3763),
-SymDifference (:4300), Identity (:4730), Update (:5148), Clip (:5497),
-Erase (:5806); semantics corpus autotest/ogr/ogr_layer_algebra.py.
+Spark re-expression of the reference's OGRLayer::Intersection
+(ogr/ogrlayer.cpp:3345) and Clip (:5497), plus the ST predicate
+matrix, the line × polygon clip and the ST_Union dissolve; semantics
+corpus autotest/ogr/ogr_layer_algebra.py.
 
 The reference runs a nested loop with per-feature spatial-index
 pushdown and hands each surviving pair to GEOS. Here the big side (A)
 is a DataFrame, the method side (B) a small broadcast polygon set
-(the STRtree-broadcast pattern of the spatial join); the geometric
-residues come from two numpy kernels:
-
-* ``geometry.clip_poly_convex``   — A ∩ B (Sutherland-Hodgman),
-* ``geometry.split_poly_convex``  — exact disjoint decomposition of
-  A \\ B (per-half-plane residue pieces),
-
-so every mode emits REAL result geometries (WKB), not just row
-semantics. Concave method polygons are handled by ear-clipping them
-into disjoint triangles at broadcast build (geometry.ear_triangulate):
-piece areas then sum exactly for every mode; convex rings keep the
-single-clip fast path.
+(the STRtree-broadcast pattern of the spatial join), and the pieces
+come from ``geometry.clip_poly_convex`` (Sutherland-Hodgman), so each
+row carries a REAL result geometry (WKB), not just row semantics.
+Concave method polygons are handled by ear-clipping them into
+disjoint triangles at broadcast build (geometry.ear_triangulate):
+piece areas then sum exactly; convex rings keep the single-clip fast
+path. ``intersection_join`` lifts the B-fits-on-driver limit with a
+grid-cell equi-join.
 
 Scale: A never collects; per-pair work is bbox-prefiltered against the
-broadcast B set (envelope pretest, ogrlayer.cpp:3427). The flipped
-residue (B \\ all A) groups candidate A rings per b_id — the only
-stage whose per-task memory is O(candidate A's per B), the same
-locality assumption as the reference's per-feature filter pushdown.
+broadcast B set (envelope pretest, ogrlayer.cpp:3427).
 """
 
 from __future__ import annotations
@@ -204,182 +197,6 @@ def intersection_pieces(
             )
 
     return a_df.select(id_col, "geom_wkb").mapInPandas(run, PIECE_SCHEMA)
-
-
-def erase_pieces(
-    a_df: DataFrame,
-    b_pdf: pd.DataFrame,
-    id_col: str = "a_id",
-    b_id_col: str = "poly_id",
-) -> DataFrame:
-    """A \\ union(B) as disjoint pieces → (a_id, b_id = -1, piece_wkb,
-    area). Correct for overlapping, concave, HOLED and multi-part B's:
-    every B decomposes to disjoint convex pieces of (outer − holes),
-    so a donut B's hole interiors are NOT erased from A; sequential
-    piece subtraction keeps the result disjoint. OGRLayer::Erase
-    geometry path."""
-    spark = a_df.sparkSession
-    brc = spark.sparkContext.broadcast(_BSet(b_pdf, b_id_col))
-
-    def run(batches):
-        bset = brc.value
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf[id_col], pdf["geom_wkb"]):
-                for outer, holes in _subject_parts(buf):
-                    bb = geometry.ring_bbox(outer)
-                    clips = [
-                        bp
-                        for bi in bset.candidates(bb)
-                        for bp in bset.convex[bi]
-                    ]
-                    # subject holes subtract exactly like clips
-                    pieces = geometry.erase_poly_simple(
-                        outer, holes + clips
-                    ) if holes else geometry.erase_poly_convex(
-                        outer, clips
-                    )
-                    rows.extend(_piece_rows(int(aid), -1, pieces))
-            yield pd.DataFrame(
-                rows, columns=["a_id", "b_id", "piece_wkb", "area"]
-            )
-
-    return a_df.select(id_col, "geom_wkb").mapInPandas(run, PIECE_SCHEMA)
-
-
-def erase_b_pieces(
-    a_df: DataFrame,
-    b_pdf: pd.DataFrame,
-    id_col: str = "a_id",
-    b_id_col: str = "poly_id",
-) -> DataFrame:
-    """B \\ union(A) as disjoint pieces → (a_id = -1, b_id, piece_wkb,
-    area) — the flipped residue needed by Union/SymDifference.
-
-    Distribution: each A row emits (b_id, its ring) for every B whose
-    bbox it meets (STRtree lookup); a groupBy(b_id) task subtracts
-    that B's candidate A's sequentially from each of B's disjoint
-    simple pieces — so holed/multi-part B subjects subtract exactly
-    (hole area never counted, every part processed). A's ring ships
-    only to the B's it can affect."""
-    spark = a_df.sparkSession
-    bset = _BSet(b_pdf, b_id_col)
-    brc = spark.sparkContext.broadcast(bset)
-
-    def emit(batches):
-        bs = brc.value
-        for pdf in batches:
-            rows = []
-            for buf in pdf["geom_wkb"]:
-                for outer, holes in _subject_parts(buf):
-                    # holed part → disjoint SIMPLE pieces, so the
-                    # flipped subtraction never erases hole interiors
-                    pieces = (
-                        geometry.erase_poly_simple(outer, holes)
-                        if holes else [outer]
-                    )
-                    for ring in pieces:
-                        bb = geometry.ring_bbox(ring)
-                        for bi in bs.candidates(bb):
-                            rows.append(
-                                (bs.ids[bi],
-                                 np.ascontiguousarray(ring).tobytes())
-                            )
-            yield pd.DataFrame(rows, columns=["b_id", "a_ring"])
-
-    # the candidate set feeds TWO jobs (the touched-ids collect below
-    # runs now; the groupBy subtraction runs when the caller acts):
-    # persist so a nondeterministic A source cannot make the whole-B
-    # passthrough set inconsistent with the subtracted set. The
-    # returned plan still reads it, so there is no safe in-operator
-    # unpersist point — TRACKED for gdal_spark.cache.unpersist_all().
-    from .. import cache as _cache
-
-    cands = _cache.track(
-        a_df.select("geom_wkb").mapInPandas(
-            emit, "b_id long, a_ring binary"
-        )
-    )
-    subject_by_bid = {
-        bid: pieces for bid, pieces in zip(bset.ids, bset.simple)
-    }
-
-    def subtract(pdf: pd.DataFrame) -> pd.DataFrame:
-        bid = int(pdf["b_id"].iloc[0])
-        clips = [
-            np.frombuffer(rb, dtype=np.float64).reshape(-1, 2)
-            for rb in pdf["a_ring"]
-        ]
-        # subtract from every disjoint simple piece of B (full
-        # geometry); erase_poly_simple triangulates concave A rings
-        pieces = [
-            out
-            for subj in subject_by_bid[bid]
-            for out in geometry.erase_poly_simple(subj, clips)
-        ]
-        return pd.DataFrame(
-            _piece_rows(-1, bid, pieces),
-            columns=["a_id", "b_id", "piece_wkb", "area"],
-        )
-
-    touched = cands.groupBy("b_id").applyInPandas(subtract, PIECE_SCHEMA)
-    # B's untouched by any A pass through whole — ORIGINAL geometry
-    # (holes and all parts intact), exact (outer − holes) area
-    touched_ids = {
-        int(r.b_id) for r in cands.select("b_id").distinct().collect()
-    }
-    whole = [
-        (-1, bid, bw, area)
-        for bid, bw, area in zip(bset.ids, bset.wkbs, bset.areas)
-        if bid not in touched_ids
-    ]
-    if whole:
-        whole_df = spark.createDataFrame(
-            pd.DataFrame(
-                whole, columns=["a_id", "b_id", "piece_wkb", "area"]
-            )
-        )
-        touched = touched.unionByName(whole_df)
-    return touched
-
-
-def identity_pieces(a_df, b_pdf, **kw) -> DataFrame:
-    """Identity(A, B): A split by B — A∩B pieces plus A\\B pieces
-    (ogr/ogrlayer.cpp:4730)."""
-    return intersection_pieces(a_df, b_pdf, **kw).unionByName(
-        erase_pieces(a_df, b_pdf, **kw)
-    )
-
-
-def union_pieces(a_df, b_pdf, **kw) -> DataFrame:
-    """Union(A, B): A∩B + A\\B + B\\A pieces (ogr/ogrlayer.cpp:3763)."""
-    return identity_pieces(a_df, b_pdf, **kw).unionByName(
-        erase_b_pieces(a_df, b_pdf, **kw)
-    )
-
-
-def sym_difference_pieces(a_df, b_pdf, **kw) -> DataFrame:
-    """SymDifference(A, B): A\\B + B\\A pieces (ogr/ogrlayer.cpp:4300)."""
-    return erase_pieces(a_df, b_pdf, **kw).unionByName(
-        erase_b_pieces(a_df, b_pdf, **kw)
-    )
-
-
-def update_pieces(a_df, b_pdf, **kw) -> DataFrame:
-    """Update(A, B): A\\B pieces plus B originals — full geometry
-    (holes/multiparts intact), exact (outer − holes) area
-    (ogr/ogrlayer.cpp:5148)."""
-    spark = a_df.sparkSession
-    b_id_col = kw.get("b_id_col", "poly_id")
-    bset = _BSet(b_pdf, b_id_col)
-    rows = [
-        (-1, bid, bw, area)
-        for bid, bw, area in zip(bset.ids, bset.wkbs, bset.areas)
-    ]
-    b_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["a_id", "b_id", "piece_wkb", "area"])
-    )
-    return erase_pieces(a_df, b_pdf, **kw).unionByName(b_df)
 
 
 def predicate_pairs(
@@ -593,197 +410,6 @@ def clip_line_pieces(
     return lines_df.select(id_col, "geom_wkb").mapInPandas(
         run, LINE_PIECE_SCHEMA
     )
-
-
-def erase_line_pieces(
-    lines_df: DataFrame,
-    b_pdf: pd.DataFrame,
-    id_col: str = "line_id",
-    b_id_col: str = "poly_id",
-) -> DataFrame:
-    """Line-layer \\ union(polygon-layer) (Erase row semantics at
-    line dimension): the complement intervals per segment →
-    (line_id, b_id = -1, piece_wkb, length)."""
-    spark = lines_df.sparkSession
-    brc = spark.sparkContext.broadcast(_BSet(b_pdf, b_id_col))
-
-    def run(batches):
-        bset = brc.value
-        for pdf in batches:
-            rows = []
-            for lid, buf in zip(pdf[id_col], pdf["geom_wkb"]):
-                p1s, p2s = _seg_arrays(_line_parts(buf))
-                if not len(p1s):
-                    continue
-                bb = (
-                    min(p1s[:, 0].min(), p2s[:, 0].min()),
-                    min(p1s[:, 1].min(), p2s[:, 1].min()),
-                    max(p1s[:, 0].max(), p2s[:, 0].max()),
-                    max(p1s[:, 1].max(), p2s[:, 1].max()),
-                )
-                d = p2s - p1s
-                seg_len = np.sqrt((d * d).sum(axis=1))
-                covered: list[list[tuple]] = [[] for _ in range(len(p1s))]
-                for bi in bset.candidates(bb):
-                    for k, ivs in enumerate(
-                        _pair_intervals(p1s, p2s, bset.convex[bi])
-                    ):
-                        covered[k].extend(ivs)
-                for k, ivs in enumerate(covered):
-                    # complement of the merged intervals in [0, 1]
-                    t = 0.0
-                    for t0, t1 in sorted(ivs):
-                        if t0 > t:
-                            a = p1s[k] + t * d[k]
-                            b = p1s[k] + t0 * d[k]
-                            rows.append((
-                                int(lid), -1, wkb.linestring([a, b]),
-                                (t0 - t) * float(seg_len[k]),
-                            ))
-                        t = max(t, t1)
-                    if t < 1.0:
-                        a = p1s[k] + t * d[k]
-                        rows.append((
-                            int(lid), -1, wkb.linestring([a, p2s[k]]),
-                            (1.0 - t) * float(seg_len[k]),
-                        ))
-            yield pd.DataFrame(
-                rows,
-                columns=["line_id", "b_id", "piece_wkb", "length"],
-            )
-
-    return lines_df.select(id_col, "geom_wkb").mapInPandas(
-        run, LINE_PIECE_SCHEMA
-    )
-
-
-def _collinear_boundary_intervals(
-    p1: np.ndarray, d: np.ndarray, rings: list[np.ndarray]
-) -> list[tuple]:
-    """[t0, t1] sub-intervals of segment p1+t·d (t ∈ [0,1]) that run
-    collinearly ALONG a boundary ring edge."""
-    out: list[tuple] = []
-    dd = float(d[0] * d[0] + d[1] * d[1])
-    if dd == 0.0:
-        return out
-    for ring in rings:
-        e1 = ring
-        e2 = np.roll(ring, -1, axis=0)
-        ed = e2 - e1
-        cr = d[0] * ed[:, 1] - d[1] * ed[:, 0]          # parallel?
-        off = (e1[:, 0] - p1[0]) * d[1] - (e1[:, 1] - p1[1]) * d[0]
-        col = (cr == 0.0) & (off == 0.0)
-        for i in np.nonzero(col)[0]:
-            ta = ((e1[i, 0] - p1[0]) * d[0]
-                  + (e1[i, 1] - p1[1]) * d[1]) / dd
-            tb = ((e2[i, 0] - p1[0]) * d[0]
-                  + (e2[i, 1] - p1[1]) * d[1]) / dd
-            lo, hi = (ta, tb) if ta <= tb else (tb, ta)
-            lo, hi = max(lo, 0.0), min(hi, 1.0)
-            if hi > lo:
-                out.append((lo, hi))
-    return out
-
-
-def _overlap_measure(a: list[tuple], b: list[tuple]) -> float:
-    """Measure of union(a) ∩ union(b) for small interval lists."""
-
-    def merged(ivs):
-        out = []
-        for lo, hi in sorted(ivs):
-            if out and lo <= out[-1][1]:
-                out[-1] = (out[-1][0], max(out[-1][1], hi))
-            else:
-                out.append((lo, hi))
-        return out
-
-    tot = 0.0
-    for a0, a1 in merged(a):
-        for b0, b1 in merged(b):
-            tot += max(0.0, min(a1, b1) - max(a0, b0))
-    return tot
-
-
-def line_polygon_predicates(
-    lines_df: DataFrame,
-    b_pdf: pd.DataFrame,
-    id_col: str = "line_id",
-    b_id_col: str = "poly_id",
-    eps: float = 1e-12,
-) -> DataFrame:
-    """DE-9IM predicates for line × polygon pairs (the mixed-dimension
-    half the r02 engine lacked; reference: OGRGeometry::Crosses
-    ogr/ogrgeometry.cpp:5734 — line/area crosses iff the line has
-    points both inside and outside): (line_id, b_id, st_intersects,
-    st_disjoint, st_within, st_crosses, st_touches) as 0/1 longs,
-    full matrix."""
-    spark = lines_df.sparkSession
-    brc = spark.sparkContext.broadcast(_BSet(b_pdf, b_id_col))
-    schema = (
-        "line_id long, b_id long, st_intersects long, st_disjoint long,"
-        " st_within long, st_crosses long, st_touches long"
-    )
-
-    def run(batches):
-        bset = brc.value
-        for pdf in batches:
-            rows = []
-            for lid, buf in zip(pdf[id_col], pdf["geom_wkb"]):
-                p1s, p2s = _seg_arrays(_line_parts(buf))
-                d = p2s - p1s
-                seg_len = np.sqrt((d * d).sum(axis=1))
-                total = float(seg_len.sum())
-                for bi in range(len(bset.ids)):
-                    inside = 0.0
-                    pair_ivs = _pair_intervals(
-                        p1s, p2s, bset.convex[bi]
-                    )
-                    for k, ivs in enumerate(pair_ivs):
-                        # DE-9IM: a run collinear WITH a boundary edge
-                        # is boundary contact, not interior — subtract
-                        # it from the interior measure
-                        bnd = _collinear_boundary_intervals(
-                            p1s[k], d[k], bset.rings[bi]
-                        )
-                        inter = sum(t1 - t0 for t0, t1 in ivs)
-                        if bnd:
-                            inter -= _overlap_measure(ivs, bnd)
-                        inside += inter * float(seg_len[k])
-                    # boundary contact: any line segment meets any
-                    # TRUE boundary ring edge (outer or hole)
-                    btouch = False
-                    for ring in bset.rings[bi]:
-                        e1 = ring
-                        e2 = np.roll(ring, -1, axis=0)
-                        hit = geometry.segments_intersect(
-                            p1s[:, 0][:, None], p1s[:, 1][:, None],
-                            p2s[:, 0][:, None], p2s[:, 1][:, None],
-                            e1[:, 0][None, :], e1[:, 1][None, :],
-                            e2[:, 0][None, :], e2[:, 1][None, :],
-                        )
-                        if bool(hit.any()):
-                            btouch = True
-                            break
-                    interior = inside > eps * max(total, 1.0)
-                    intersects = interior or btouch
-                    within = interior and inside >= total - eps * max(
-                        total, 1.0
-                    )
-                    crosses = interior and not within
-                    touches = btouch and not interior
-                    rows.append((
-                        int(lid), bset.ids[bi], int(intersects),
-                        int(not intersects), int(within), int(crosses),
-                        int(touches),
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=["line_id", "b_id", "st_intersects",
-                         "st_disjoint", "st_within", "st_crosses",
-                         "st_touches"],
-            )
-
-    return lines_df.select(id_col, "geom_wkb").mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------

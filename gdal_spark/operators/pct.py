@@ -1,5 +1,5 @@
-"""Color quantization — GDALComputeMedianCutPCT + GDALDitherRGB2PCT
-analogs (the ``rgb2pct`` utility pair).
+"""Color quantization — GDALComputeMedianCutPCT + the non-dithered
+GDALDitherRGB2PCT path (the ``rgb2pct`` utility pair).
 
 Reference semantics:
 * ``alg/gdalmediancut.cpp`` — Heckbert median cut (SIGGRAPH '82) over
@@ -10,12 +10,8 @@ Reference semantics:
   shrink both halves to their occupied bounds, stop at ``n_colors``
   boxes; color entry i = ``((min + max) << (8 - nBits)) / 2`` per
   channel (STEP 4).
-* ``alg/gdaldither.cpp`` — Floyd-Steinberg-style error diffusion with
-  GDAL's exact integer kernel: per pixel, ``nSixth = error / 6`` (C
-  truncating division), same-row right carry ``2*nSixth``, next row
-  left ``+= nSixth``, center ``+= error - 5*nSixth``, right ``=
-  nSixth`` (gdaldither.cpp:516-551); nearest color = MANHATTAN
-  distance, first index wins ties, strict ``<`` (FindNearestColor,
+* ``alg/gdaldither.cpp`` — nearest color = MANHATTAN distance, first
+  index wins ties, strict ``<`` (FindNearestColor,
   gdaldither.cpp:667-682); the non-dither path maps through the
   ``nCLevels``-cube colormap with ``i = v * nCLevels / 256``
   indexing (gdaldither.cpp:484-490).
@@ -33,11 +29,6 @@ Spark shape:
 * the NEAREST-COLOR APPLY is distributed and stateless: the 256-entry
   table ships in the task closure, each tile maps through the
   precomputed cube in one vectorized gather.
-* DITHERING is sequential BY CONSTRUCTION (the error recurrence runs
-  left-to-right within a row and row-to-row down the image — the
-  reference runs it single-threaded scanline by scanline too), so it
-  is exposed as a per-granule kernel like the codec modules: one
-  image per task, file-parallel across a corpus of images.
 """
 
 from __future__ import annotations
@@ -226,7 +217,7 @@ def median_cut_pct(
 
 
 # --------------------------------------------------------------------------
-# nearest-color apply (distributed) + dither (per-granule)
+# nearest-color apply (distributed)
 # --------------------------------------------------------------------------
 
 
@@ -295,51 +286,3 @@ def pct_map_tiles(
             )
 
     return tiles.mapInPandas(gen, schema)
-
-
-def dither_rgb2pct(
-    r: np.ndarray, g: np.ndarray, b: np.ndarray, pct: np.ndarray
-) -> np.ndarray:
-    """GDAL's exact integer error-diffusion kernel over ONE image
-    (gdaldither.cpp:328-560). Sequential by construction (left-to-
-    right carry within a row, one-row error buffer between rows —
-    the reference is single-threaded here too); distribute ACROSS
-    images per granule, not within one.
-
-    Returns the uint8 index image."""
-    h, w = r.shape
-    r = r.astype(np.int64)
-    g = g.astype(np.int64)
-    b = b.astype(np.int64)
-    pct_i = pct.astype(np.int64)
-    out = np.zeros((h, w), dtype=np.uint8)
-    # error buffer: slot i+1 feeds pixel i of the next row
-    err = np.zeros((w + 2, 3), dtype=np.int64)
-
-    def c_div6(x: int) -> int:
-        # C integer division truncates toward zero
-        return -((-x) // 6) if x < 0 else x // 6
-
-    for y in range(h):
-        # apply previous row's error, clamp to byte, reset buffer
-        rr = np.clip(r[y] + err[1 : w + 1, 0], 0, 255)
-        gg = np.clip(g[y] + err[1 : w + 1, 1], 0, 255)
-        bb = np.clip(b[y] + err[1 : w + 1, 2], 0, 255)
-        err[:] = 0
-        last = [0, 0, 0]
-        for x in range(w):
-            vals = (
-                min(255, max(0, int(rr[x]) + last[0])),
-                min(255, max(0, int(gg[x]) + last[1])),
-                min(255, max(0, int(bb[x]) + last[2])),
-            )
-            idx = int(_nearest_color(pct_i, *vals).item())
-            out[y, x] = idx
-            for c in range(3):
-                e = vals[c] - int(pct_i[idx, c])
-                sixth = c_div6(e)
-                err[x, c] += sixth          # next row, left
-                err[x + 2, c] = sixth       # next row, right (assign)
-                err[x + 1, c] += e - 5 * sixth  # next row, center
-                last[c] = 2 * sixth         # same row, right carry
-    return out

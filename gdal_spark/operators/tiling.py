@@ -218,16 +218,6 @@ def overview_level(tiles: DataFrame, method: str = "average") -> DataFrame:
     return _overview(tiles, *_overview_method(method))
 
 
-def overview_gauss(tiles: DataFrame) -> DataFrame:
-    """GAUSS overview level: 3x3 binomial kernel over a 1-px halo."""
-    return overview_level(tiles, "gauss")
-
-
-def overview_cubic(tiles: DataFrame) -> DataFrame:
-    """CUBIC overview level: 8-tap Catmull-Rom over a 3-px halo."""
-    return overview_level(tiles, "cubic")
-
-
 def pyramid(
     base: DataFrame, base_zoom: int, min_zoom: int = 0, method: str = "average"
 ) -> DataFrame:
@@ -918,86 +908,8 @@ def add_halo(
     )
 
 
-def focal_mean(tiles: DataFrame) -> DataFrame:
-    """3x3 focal mean (half-up integer rounding), one halo exchange +
-    per-tile numpy — the neighborhood-kernel exemplar."""
-    padded = add_halo(tiles, pad=1)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                ts_w, ts_h, p = int(r["w"]), int(r["h"]), int(r["pad"])
-                a = np.frombuffer(r["data"], dtype=np.uint8).reshape(
-                    ts_h + 2 * p, ts_w + 2 * p
-                ).astype(np.int64)
-                s = sum(
-                    a[1 + dy : 1 + dy + ts_h, 1 + dx : 1 + dx + ts_w]
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                )
-                out = ((s + 4) // 9).astype(np.uint8)
-                rows.append(
-                    (int(r["z"]), int(r["tx"]), int(r["ty"]),
-                     ts_w, ts_h, out.tobytes())
-                )
-            yield pd.DataFrame(
-                rows, columns=["z", "tx", "ty", "w", "h", "data"]
-            )
-
-    return padded.mapInPandas(run, TILE_SCHEMA)
-
-
-def contour_case_census(
-    tiles: DataFrame, grid_w: int, grid_h: int, threshold: int
-) -> DataFrame:
-    """Marching-squares case census (alg/contour.cpp:383 /
-    alg/marching_squares/): for every interior 2x2 pixel square,
-    case = b(x,y) + 2*b(x+1,y) + 4*b(x+1,y+1) + 8*b(x,y+1) with
-    b = (val >= threshold); returns counts per case 0..15. Squares
-    whose (x+1, y+1) corner falls outside the global grid are excluded
-    (mirrors the per-tile halo mask). One halo exchange, per-tile
-    numpy, tiny groupBy(case)."""
-    padded = add_halo(tiles, pad=1)
-
-    def run(batches):
-        for pdf in batches:
-            counts = np.zeros(16, dtype=np.int64)
-            for _, r in pdf.iterrows():
-                ts_w, ts_h, p = int(r["w"]), int(r["h"]), int(r["pad"])
-                tx, ty = int(r["tx"]), int(r["ty"])
-                a = np.frombuffer(r["data"], dtype=np.uint8).reshape(
-                    ts_h + 2 * p, ts_w + 2 * p
-                )
-                b = (a >= threshold).astype(np.int64)
-                # squares anchored at my core pixels (x, y)
-                case = (
-                    b[1 : 1 + ts_h, 1 : 1 + ts_w]
-                    + 2 * b[1 : 1 + ts_h, 2 : 2 + ts_w]
-                    + 4 * b[2 : 2 + ts_h, 2 : 2 + ts_w]
-                    + 8 * b[2 : 2 + ts_h, 1 : 1 + ts_w]
-                )
-                # mask: (x+1, y+1) must exist globally
-                gx = tx * ts_w + np.arange(ts_w)
-                gy = ty * ts_h + np.arange(ts_h)
-                valid = (gx[None, :] + 1 <= grid_w - 1) & (
-                    gy[:, None] + 1 <= grid_h - 1
-                )
-                counts += np.bincount(case[valid].ravel(), minlength=16)
-            yield pd.DataFrame(
-                {"case_code": np.arange(16, dtype=np.int64), "n": counts}
-            )
-
-    partials = padded.mapInPandas(run, "case_code long, n long")
-    return (
-        partials.groupBy("case_code")
-        .agg(F.sum("n").alias("n"))
-        .filter(F.col("n") > 0)
-    )
-
-
 # ---------------------------------------------------------------------------
-# contour polyline extraction (marching squares segments + stitching)
+# contours (marching squares segments and band areas)
 # ---------------------------------------------------------------------------
 
 CONTOUR_SEG_SCHEMA = (
@@ -1006,9 +918,9 @@ CONTOUR_SEG_SCHEMA = (
 
 # case → [(edge, edge)] segment table; edges B(ottom) R(ight) T(op)
 # L(eft); case bits b0=v00 + 2*b1(v10) + 4*b2(v11) + 8*b3(v01), inside
-# = (v >= level) — same convention as contour_case_census. Saddles
-# (5, 10) resolve on the 4-corner sum vs 4*level (GDAL's
-# marching_squares center-mean disambiguation, alg/marching_squares/).
+# = (v >= level). Saddles (5, 10) resolve on the 4-corner sum vs
+# 4*level (GDAL's marching_squares center-mean disambiguation,
+# alg/marching_squares/).
 _SEG_TABLE: dict[int, list[tuple[str, str]]] = {
     1: [("B", "L")], 2: [("B", "R")], 3: [("L", "R")],
     4: [("R", "T")], 6: [("B", "T")], 7: [("T", "L")],
@@ -1112,62 +1024,6 @@ def contour_level_stats(segs: DataFrame) -> DataFrame:
     return segs.groupBy("level").agg(
         F.count(F.lit(1)).alias("n_segments"),
         F.sum(q).alias("len_q6"),
-    )
-
-
-def contour_polylines(segs: DataFrame, quant: int = 1 << 20) -> DataFrame:
-    """Stitch segments into polylines by shared endpoints (the
-    cross-tile merge of alg/contour.cpp's polyline ringing): endpoints
-    quantize to a shared key, segments become union edges, components
-    resolve via the DISTRIBUTED contraction (cc_roots_df) — the former
-    driver-side union-find over the collected edge list is gone.
-    ``line_id`` is the component's canonical (minimum) endpoint key —
-    stable and order-free. Output: (level, line_id, n_segments,
-    len_q6)."""
-    kx1 = F.floor(F.col("x1") * quant + 0.5).cast("long")
-    ky1 = F.floor(F.col("y1") * quant + 0.5).cast("long")
-    kx2 = F.floor(F.col("x2") * quant + 0.5).cast("long")
-    ky2 = F.floor(F.col("y2") * quant + 0.5).cast("long")
-    # node identity = 128-bit double hash of the exact (level, kx, ky)
-    # triple. A fixed-stride packing (the old kx·2^28 + ky) collides
-    # as soon as the grid exceeds 256 quantized pixels; two
-    # independent 64-bit hashes keep collision odds ≈ n²/2^129 —
-    # negligible at any raster size — while staying deterministic
-    # (value-hash, not an id assignment) and shuffle-free.
-    lv = F.col("level")
-    keyed = segs.select(
-        "level", "x1", "y1", "x2", "y2",
-        F.xxhash64(lv, kx1, ky1).alias("k1a"),
-        F.xxhash64(kx1, ky1, lv, F.lit(1)).alias("k1b"),
-        F.xxhash64(lv, kx2, ky2).alias("k2a"),
-        F.xxhash64(kx2, ky2, lv, F.lit(1)).alias("k2b"),
-    )
-    roots = cc_roots_df(
-        keyed.select(
-            F.col("k1a").alias("a1"), F.col("k1b").alias("a2"),
-            F.col("k2a").alias("b1"), F.col("k2b").alias("b2"),
-        )
-    ).select(
-        F.col("n1").alias("k1a"), F.col("n2").alias("k1b"),
-        F.col("r1").alias("rk1"), F.col("r2").alias("rk2"),
-    )
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    q = F.floor(F.sqrt(dx * dx + dy * dy) * 1000000.0 + 0.5).cast("long")
-    return (
-        keyed.join(roots, ["k1a", "k1b"], "left")
-        .withColumn("rid1", F.coalesce("rk1", "k1a"))
-        .withColumn("rid2", F.coalesce("rk2", "k1b"))
-        .groupBy("level", "rid1", "rid2")
-        .agg(
-            F.count(F.lit(1)).alias("n_segments"),
-            F.sum(q).alias("len_q6"),
-        )
-        .select(
-            "level",
-            F.xxhash64("rid1", "rid2").alias("line_id"),
-            "n_segments", "len_q6",
-        )
     )
 
 
@@ -1304,159 +1160,6 @@ def contour_polygon_areas(
     )
 
 
-def contour_polygons(
-    tiles: DataFrame,
-    grid_w: int,
-    grid_h: int,
-    level: int,
-    quant: int = 1 << 20,
-) -> DataFrame:
-    """Contour POLYGON mode with REAL ring geometry: the connected
-    {surface >= level} regions as polygons (outer ring + holes, WKB in
-    pixel units × quant⁻¹... rings carry RAW pixel coords). Per-cell
-    marching-squares polygons (_BAND_CASES) emit their boundary edges
-    with endpoints quantized to a shared grid; edges interior to the
-    region (shared by two cell polygons in opposite directions) cancel
-    in a groupBy, leaving exactly the region outlines; components
-    resolve via the distributed contraction (cc_roots_df) and each
-    region's ring set traces in one task (_trace_rings — work =
-    region perimeter). Output: (region_id, n_holes, area, geom_wkb).
-    """
-    padded = add_halo(tiles, pad=1)
-
-    def emit(batches):
-        for pdf in batches:
-            frames = []
-            for _, r in pdf.iterrows():
-                ts_w, ts_h, p = int(r["w"]), int(r["h"]), int(r["pad"])
-                tx, ty = int(r["tx"]), int(r["ty"])
-                a = np.frombuffer(r["data"], dtype=np.uint8).reshape(
-                    ts_h + 2 * p, ts_w + 2 * p
-                ).astype(np.int64)
-                case, coords, valid, s4 = _band_cell_geometry(
-                    a, ts_w, ts_h, p, tx, ty, grid_w, grid_h, level
-                )
-                gxl = (tx * ts_w + np.arange(ts_w, dtype=np.int64))[None, :]
-                gyl = (ty * ts_h + np.arange(ts_h, dtype=np.int64))[:, None]
-                gx2 = np.broadcast_to(gxl, case.shape)
-                gy2 = np.broadcast_to(gyl, case.shape)
-                for m, ring, slot in _band_case_jobs(
-                    case, valid, s4, level
-                ):
-                    if not m.any():
-                        continue
-                    # owner id of this cell-polygon: (gx, gy*2 + slot)
-                    # — saddle-below cells hold TWO distinct polygons
-                    o1 = gx2[m]
-                    o2 = gy2[m] * 2 + slot
-                    n = len(ring)
-                    for i in range(n):
-                        xi, yi = coords[ring[i]]
-                        xj, yj = coords[ring[(i + 1) % n]]
-                        x1q = np.floor(xi[m] * quant + 0.5).astype(np.int64)
-                        y1q = np.floor(yi[m] * quant + 0.5).astype(np.int64)
-                        x2q = np.floor(xj[m] * quant + 0.5).astype(np.int64)
-                        y2q = np.floor(yj[m] * quant + 0.5).astype(np.int64)
-                        keep = (x1q != x2q) | (y1q != y2q)
-                        frames.append(pd.DataFrame({
-                            "x1": x1q[keep], "y1": y1q[keep],
-                            "x2": x2q[keep], "y2": y2q[keep],
-                            "o1": o1[keep], "o2": o2[keep],
-                        }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    segs = padded.mapInPandas(
-        emit, "x1 long, y1 long, x2 long, y2 long, o1 long, o2 long"
-    )
-    # Region identity = connectivity of CELL-POLYGONS through their
-    # CANCELLED (interior) edges — this keeps a hole's boundary in the
-    # same region as its enclosing outer (both are traced by the same
-    # connected run of above-cells), while saddle-below twin polygons
-    # stay separate unless connected elsewhere. Undirected-edge count:
-    # 2 → interior (a region-graph edge between the two owners),
-    # 1 → real boundary edge, owned by its emitting cell-polygon.
-    # canonical (min-endpoint-first) EXACT 4-column key — a packed
-    # x·2^30 + y key collides past 1024 quantized rows and overflows
-    # int64 past 8192 columns; grouping on the exact coordinates has
-    # neither failure mode and shuffles the same rows
-    swap = (F.col("x1") > F.col("x2")) | (
-        (F.col("x1") == F.col("x2")) & (F.col("y1") > F.col("y2"))
-    )
-    und = segs.groupBy(
-        F.when(swap, F.col("x2")).otherwise(F.col("x1")).alias("cxa"),
-        F.when(swap, F.col("y2")).otherwise(F.col("y1")).alias("cya"),
-        F.when(swap, F.col("x1")).otherwise(F.col("x2")).alias("cxb"),
-        F.when(swap, F.col("y1")).otherwise(F.col("y2")).alias("cyb"),
-    ).agg(
-        F.collect_list(
-            F.struct("x1", "y1", "x2", "y2", "o1", "o2")
-        ).alias("es")
-    )
-    owner_edges = und.filter(F.size("es") == 2).select(
-        F.col("es")[0]["o1"].alias("a1"),
-        F.col("es")[0]["o2"].alias("a2"),
-        F.col("es")[1]["o1"].alias("b1"),
-        F.col("es")[1]["o2"].alias("b2"),
-    )
-    boundary = und.filter(F.size("es") == 1).select(
-        F.col("es")[0]["x1"].alias("x1"),
-        F.col("es")[0]["y1"].alias("y1"),
-        F.col("es")[0]["x2"].alias("x2"),
-        F.col("es")[0]["y2"].alias("y2"),
-        F.col("es")[0]["o1"].alias("o1"),
-        F.col("es")[0]["o2"].alias("o2"),
-    )
-    roots = cc_roots_df(owner_edges)
-    rooted = (
-        boundary.join(
-            roots.select(
-                F.col("n1").alias("o1"), F.col("n2").alias("o2"),
-                F.col("r1").alias("rx"), F.col("r2").alias("ry"),
-            ),
-            ["o1", "o2"],
-            "left",
-        )
-        .withColumn("rx", F.coalesce("rx", "o1"))
-        .withColumn("ry", F.coalesce("ry", "o2"))
-    )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .. import wkb as wkb_mod
-
-        arr = pdf[["x1", "y1", "x2", "y2"]].to_numpy(dtype=np.int64)
-        rings = _trace_rings(arr)
-        if not rings:
-            return pd.DataFrame(
-                [], columns=["region_id", "n_holes", "area", "geom_wkb"]
-            )
-        rings = [rg / float(quant) for rg in rings]
-        areas = [
-            0.5 * float(
-                np.sum(rg[:-1, 0] * rg[1:, 1] - rg[1:, 0] * rg[:-1, 1])
-            )
-            for rg in rings
-        ]
-        outer_i = int(np.argmax(np.abs(areas)))
-        outer = rings[outer_i]
-        holes = [rg for i, rg in enumerate(rings) if i != outer_i]
-        area = abs(areas[outer_i]) - sum(
-            abs(a) for i, a in enumerate(areas) if i != outer_i
-        )
-        rid = int(pdf["rx"].iloc[0]) * (1 << 30) + int(pdf["ry"].iloc[0])
-        return pd.DataFrame({
-            "region_id": [rid],
-            "n_holes": [len(holes)],
-            "area": [area],
-            "geom_wkb": [wkb_mod.polygon([outer, *holes])],
-        })
-
-    return rooted.groupBy("rx", "ry").applyInPandas(
-        assemble,
-        "region_id long, n_holes long, area double, geom_wkb binary",
-    )
-
-
 # ---------------------------------------------------------------------------
 # proximity (distance raster via iterative halo relaxation)
 # ---------------------------------------------------------------------------
@@ -1572,79 +1275,8 @@ def proximity_d2(
 
 
 # ---------------------------------------------------------------------------
-# point probe: raster value enrichment of a point table
+# rasterize polygons and lines (ALL_TOUCHED burns)
 # ---------------------------------------------------------------------------
-
-
-def point_probe_nearest(
-    points: DataFrame,
-    tiles: DataFrame,
-    gt: tuple,
-    tile_size: int,
-    grid_w: int,
-    grid_h: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    id_col: str = "doc_id",
-    broadcast_tiles: bool = True,
-) -> DataFrame:
-    """Sample a tiled raster at point locations, nearest-pixel
-    (GDALInterpolateAtPoint near path, alg/gdal_interpolateatpoint.cpp
-    :415): inverse geotransform JVM-side → equi-join points to their
-    tile → per-tile vectorized gather. Points outside the raster get
-    val = -1.
-
-    Output: (id, val)."""
-    igt = raster.inv_gt(gt)
-    gx = F.col(lon_col) * igt[1] + F.col(lat_col) * igt[2] + igt[0]
-    gy = F.col(lon_col) * igt[4] + F.col(lat_col) * igt[5] + igt[3]
-    px = F.floor(gx).cast("long")
-    py = F.floor(gy).cast("long")
-    pts = points.select(
-        F.col(id_col).alias("id"), px.alias("px"), py.alias("py")
-    ).withColumn(
-        "__in",
-        (F.col("px") >= 0) & (F.col("px") < grid_w)
-        & (F.col("py") >= 0) & (F.col("py") < grid_h),
-    )
-    inside = pts.filter("__in").withColumn(
-        "tx", (F.col("px") / tile_size).cast("long")
-    ).withColumn("ty", (F.col("py") / tile_size).cast("long"))
-    # broadcast when the raster fits (fixture-sized); at scale leave
-    # it to a shuffle join co-partitioned on (tx, ty)
-    tside = F.broadcast(tiles) if broadcast_tiles else tiles
-    # LEFT join: a point whose tile row is absent (sparse raster) must
-    # still yield a row (val = nodata), per the (id, val) contract
-    joined = inside.join(tside, ["tx", "ty"], "left")
-
-    def gather(batches):
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            vals = np.full(len(pdf), raster.NODATA, dtype=np.int64)
-            has = pdf["data"].notna()
-            if has.any():
-                # decode each tile buffer ONCE, then vectorized fancy
-                # indexing over that tile's whole point batch —
-                # per-tile cardinality work, never per-point Python
-                for _, g in pdf[has].groupby(["tx", "ty"], sort=False):
-                    r0 = g.iloc[0]
-                    h, w = int(r0["h"]), int(r0["w"])
-                    arr = _tile_array(w, h, r0["data"])
-                    # tile-LOCAL index = global − tile origin; a
-                    # modulo by the tile's own w/h is wrong for edge
-                    # tiles narrower than tile_size
-                    tx0 = int(r0["tx"]) * tile_size
-                    ty0 = int(r0["ty"]) * tile_size
-                    pxl = g["px"].to_numpy(dtype=np.int64) - tx0
-                    pyl = g["py"].to_numpy(dtype=np.int64) - ty0
-                    vals[g.index.to_numpy()] = arr[pyl, pxl]
-            yield pd.DataFrame({"id": pdf["id"], "val": vals})
-
-    hit = joined.mapInPandas(gather, "id long, val long")
-    miss = pts.filter(~F.col("__in")).select(
-        "id", F.lit(-1).cast("long").alias("val")
-    )
-    return hit.unionByName(miss)
 
 
 def _edge_all_touched_mask(
@@ -1974,50 +1606,6 @@ _PART_SCHEMA = T.StructType(
         T.StructField("side", T.StringType()),  # 'R' | 'D' (right/down)
     ]
 )
-
-
-def mosaic(sources: list[DataFrame], nodata: int = 0) -> DataFrame:
-    """Priority composite of tile tables (gdalbuildvrt / raster mosaic
-    semantics, apps/gdalbuildvrt_lib.cpp): earlier sources win; where a
-    higher-priority tile has ``nodata`` pixels, lower-priority sources
-    show through (per-pixel resolve). Tiles present in only one source
-    pass through unchanged.
-
-    Plan: union with a priority tag → groupBy(tile) → per-tile numpy
-    composite. Shuffle carries each tile once per source that has it.
-    """
-    if not sources:
-        raise ValueError("mosaic needs at least one source")
-    tagged = None
-    for prio, src in enumerate(sources):
-        t = src.withColumn("__prio", F.lit(prio))
-        tagged = t if tagged is None else tagged.unionByName(t)
-
-    def composite(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__prio")
-        first = pdf.iloc[0]
-        ts_w, ts_h = int(first["w"]), int(first["h"])
-        out = np.full((ts_h, ts_w), nodata, dtype=np.uint8)
-        filled = np.zeros((ts_h, ts_w), dtype=bool)
-        for _, row in pdf.iterrows():
-            arr = _tile_array(int(row["w"]), int(row["h"]), row["data"])
-            take = (~filled) & (arr != nodata)
-            out[take] = arr[take]
-            filled |= take
-        return pd.DataFrame(
-            {
-                "z": [int(first["z"])],
-                "tx": [int(first["tx"])],
-                "ty": [int(first["ty"])],
-                "w": [ts_w],
-                "h": [ts_h],
-                "data": [out.tobytes()],
-            }
-        )
-
-    return tagged.groupBy("z", "tx", "ty").applyInPandas(
-        composite, TILE_SCHEMA
-    )
 
 
 def sieve(tiles: DataFrame, threshold: int) -> DataFrame:
@@ -2873,8 +2461,7 @@ def footprint(tiles: DataFrame, threshold: int = 1) -> DataFrame:
     threshold) — the mask + polygonize composition of gdal_footprint
     (apps/gdal_footprint_lib.cpp:826,1281). Returns the valid-data
     regions (value=1 rows of the polygonize output) with pixel counts
-    and bboxes; feed the bboxes/pieces to geometry.simplify_dp for the
-    simplified outline."""
+    and bboxes."""
 
     def binarize(batches):
         for pdf in batches:

@@ -519,7 +519,7 @@ def derived_tiles(bands: dict, expr: str):
         ).withColumn("__band", F.lit(name))
         tagged = t if tagged is None else tagged.unionByName(t)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         z, tx, ty = key
         w = int(pdf["w"].iloc[0])
         h = int(pdf["h"].iloc[0])

@@ -203,14 +203,6 @@ def read_warc(spark, path: str, responses_only: bool = True) -> DataFrame:
     """Distributed WARC scan: ``binaryFile`` rows (one per file) →
     per-file parse in mapInPandas. File-level parallelism is the
     upstream-standard unit for crawls (~1 GB/file); no shuffle."""
-    return _parse_files(
-        spark.read.format("binaryFile").load(path), responses_only
-    )
-
-
-def _parse_files(files: DataFrame, responses_only: bool) -> DataFrame:
-    """The per-file WARC parse kernel shared by the batch and the
-    streaming scan: ``binaryFile`` rows → READ_SCHEMA records."""
 
     def parse(batches):
         for pdf in batches:
@@ -224,7 +216,8 @@ def _parse_files(files: DataFrame, responses_only: bool) -> DataFrame:
                 rows, columns=[f.name for f in READ_SCHEMA.fields]
             )
 
-    return files.select("path", "content").mapInPandas(parse, READ_SCHEMA)
+    return (spark.read.format("binaryFile").load(path)
+            .select("path", "content").mapInPandas(parse, READ_SCHEMA))
 
 
 def write_warc_dir(df: DataFrame, out_dir: str,
@@ -291,25 +284,3 @@ def _iso_z(ts: str) -> str:
     if not s.endswith("Z"):
         s += "Z"
     return s
-
-
-def read_warc_stream(spark, path: str,
-                     responses_only: bool = True) -> DataFrame:
-    """Streaming twin of :func:`read_warc`: a ``binaryFile`` file-
-    arrival stream over a landing directory — each new ``.warc.gz``
-    that a crawler drops becomes one micro-batch task, parsed by the
-    SAME per-file kernel as the batch scan (parity by construction).
-    Downstream streaming stages compose with it
-    (``read_warc_stream → extract_text → spatial join``). Stateless (pure
-    projection), so no watermark or state store is involved here."""
-    files = (
-        spark.readStream.format("binaryFile")
-        # binaryFile's schema is fixed, but streaming sources demand
-        # it stated explicitly
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(path)
-    )
-    return _parse_files(files, responses_only)

@@ -148,66 +148,10 @@ def test_curve_codec_round_trip_tree():
     assert kids[1][0] == wkb.LINESTRING
 
 
-def test_linearize_udf_matches_local(spark):
-    import pandas as pd
-
-    r = 3.0
-    cp = curves.curvepolygon([
-        curves.circularstring([[r, 0], [-r, 0], [r, 0]])
-    ])
-    df = spark.createDataFrame(
-        pd.DataFrame({"g": [cp, wkb.point(7, 8), None]})
-    )
-    out = {
-        i: v
-        for i, v in enumerate(
-            df.select(
-                curves.linearize_udf(4.0)("g").alias("lin")
-            ).toPandas()["lin"]
-        )
-    }
-    assert bytes(out[0]) == curves.linearize(cp, 4.0)
-    assert bytes(out[1]) == wkb.point(7, 8)
-    assert out[2] is None
-
-
-def test_curve_wkt_round_trips():
-    """Curve WKT grammar (OGR exportToWkt/importFromWkt forms):
-    byte-exact WKB→WKT→WKB for every curve container, linear
-    delegation intact."""
-    s = np.sqrt(0.5)
-    cs = curves.circularstring([[1, 0], [s, s], [0, 1]])
-    cc = curves.compoundcurve([
-        wkb.linestring([[0, 1], [4, 1]]),
-        curves.circularstring([[4, 1], [5, 0], [4, -1]]),
-        wkb.linestring([[4, -1], [0, 1]]),
-    ])
-    cases = [
-        cs,
-        cc,
-        curves.curvepolygon([cc]),
-        curves.multicurve([wkb.linestring([[0, 0], [1, 1]]), cs]),
-        curves.multisurface([
-            wkb.polygon([np.array(
-                [[0, 0], [1, 0], [1, 1], [0, 0]], float
-            )]),
-            curves.curvepolygon([
-                curves.circularstring([[2, 0], [-2, 0], [2, 0]])
-            ]),
-        ]),
-    ]
-    for g in cases:
-        assert curves.from_wkt(curves.wkt(g)) == g
-    assert curves.wkt(cs).startswith("CIRCULARSTRING (1 0, ")
-    # linear delegation
-    assert curves.wkt(wkb.point(1, 2)) == "POINT (1 2)"
-    assert curves.from_wkt("POINT (1 2)") == wkb.point(1, 2)
-
-
 def test_curved_gpkg_flows_into_linear_operators(spark, tmp_path):
     """End-to-end: a GeoPackage carrying CURVEPOLYGON geometry (GPKG
     allows curve types in GPB blobs) reads through the ranged scan,
-    linearizes at DataFrame width, and lands in a linear kernel — the
+    linearizes in the task, and lands in a linear kernel — the
     closed-form inscribed-n-gon area comes out exact."""
     import os
     import sqlite3
@@ -252,17 +196,15 @@ def test_curved_gpkg_flows_into_linear_operators(spark, tmp_path):
     con.close()
 
     df = gpkg.read_gpkg_ranged(spark, path, "t", rows_per_task=2)
-    lin = df.withColumn(
-        "lin", curves.linearize_udf(3.7)("geometry")
-    )
 
     def area(batches):
         import pandas as pd
 
         for pdf in batches:
             out = []
-            for rr, g in zip(pdf["r"], pdf["lin"]):
-                rings = wkb.polygon_rings(bytes(g))[0]
+            for rr, g in zip(pdf["r"], pdf["geometry"]):
+                lin = curves.linearize(bytes(g), 3.7)
+                rings = wkb.polygon_rings(lin)[0]
                 out.append(
                     (float(rr), abs(geometry.ring_area(rings[0])))
                 )
@@ -270,7 +212,7 @@ def test_curved_gpkg_flows_into_linear_operators(spark, tmp_path):
 
     got = {
         round(rec.r, 3): rec.area
-        for rec in lin.mapInPandas(area, "r double, area double").collect()
+        for rec in df.mapInPandas(area, "r double, area double").collect()
     }
     n = int(np.ceil(360.0 / 3.7))
     for k in range(6):

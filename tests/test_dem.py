@@ -1,5 +1,5 @@
-"""gdaldem family (hillshade/slope/aspect): distributed focal result
-must equal the same Horn kernel applied to the assembled raster."""
+"""gdaldem focal metrics (TPI / TRI / roughness): the distributed
+result must equal the same kernel applied to the assembled raster."""
 
 import numpy as np
 import pandas as pd
@@ -21,71 +21,12 @@ def _tiles_from(spark, full, ts):
     )
 
 
-def _assemble(rows, n, ts):
-    out = np.zeros((n, n), dtype=np.uint8)
-    for r in rows:
-        arr = np.frombuffer(r["data"], dtype=np.uint8).reshape(ts, ts)
-        out[r["ty"] * ts:(r["ty"] + 1) * ts,
-            r["tx"] * ts:(r["tx"] + 1) * ts] = arr
-    return out
-
-
 @pytest.fixture(scope="module")
 def ramp():
     n = 32
     yy, xx = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
     # smooth deterministic surface
     return ((xx * 3 + yy * 2 + (xx * yy) // 8) % 200).astype(np.uint8)
-
-
-@pytest.mark.parametrize("mode", ["hillshade", "slope", "aspect"])
-def test_matches_single_array_reference(spark, ramp, mode):
-    n, ts = 32, 16
-    got = _assemble(
-        dem.dem_derive(_tiles_from(spark, ramp, ts), mode).collect(), n, ts
-    )
-    # reference: same kernel over the full array, zero-padded
-    padded = np.zeros((n + 2, n + 2), dtype=np.uint8)
-    padded[1:-1, 1:-1] = ramp
-    dzdx, dzdy = dem._gradients(padded, 1.0, 1.0)
-    if mode == "slope":
-        want = np.floor(
-            np.degrees(np.arctan(np.sqrt(dzdx ** 2 + dzdy ** 2))) + 0.5
-        )
-    elif mode == "aspect":
-        flat = (dzdx == 0) & (dzdy == 0)
-        want = np.floor(
-            np.mod(450.0 - np.degrees(np.arctan2(dzdy, -dzdx)), 360.0)
-            / 2.0 + 0.5
-        )
-        want[flat] = 0.0
-    else:
-        alt = np.deg2rad(45.0); az = np.deg2rad(315.0)
-        slope = np.arctan(np.sqrt(dzdx ** 2 + dzdy ** 2))
-        aspect = np.arctan2(dzdy, -dzdx)
-        shade = np.sin(alt) * np.cos(slope) + np.cos(alt) * np.sin(
-            slope
-        ) * np.cos(az - np.pi / 2 - aspect)
-        want = np.floor(np.clip(shade, 0, 1) * 255.0 + 0.5)
-    want = np.clip(want, 0, 255).astype(np.uint8)
-    # interior pixels (1 px in): exact; borders differ only by halo fill
-    np.testing.assert_array_equal(got[1:-1, 1:-1], want[1:-1, 1:-1])
-
-
-def test_flat_surface_hillshade_uniform(spark):
-    n, ts = 32, 16
-    flat = np.full((n, n), 77, dtype=np.uint8)
-    got = _assemble(
-        dem.dem_derive(_tiles_from(spark, flat, ts), "hillshade").collect(),
-        n, ts,
-    )
-    # interior: slope 0 → shade = 255*sin(45°) ≈ 180
-    assert (got[2:-2, 2:-2] == 180).all()
-
-
-# ---------------------------------------------------------------------------
-# focal metrics (TPI / TRI / roughness) + color relief
-# ---------------------------------------------------------------------------
 
 
 def _focal_full(full, mode):
@@ -126,43 +67,3 @@ def test_focal_metric_values_handchecked(spark):
     assert dem._focal_metric(padded, "tri_riley")[1, 1] == np.sqrt(
         81 + 64 + 49 + 36 + 16 + 9 + 4 + 1
     )
-
-
-RAMP3 = [(10, 0, 0, 255), (100, 0, 255, 0), (250, 255, 0, 0)]
-
-
-def test_color_relief_lut_semantics():
-    lut = dem._relief_lut(RAMP3, "interpolate")
-    # exact entries
-    assert tuple(lut[10]) == (0, 0, 255, 255)
-    assert tuple(lut[100]) == (0, 255, 0, 255)
-    assert tuple(lut[250]) == (255, 0, 0, 255)
-    # below first / above last clamp to end colors
-    assert tuple(lut[0]) == (0, 0, 255, 255)
-    assert tuple(lut[255]) == (255, 0, 0, 255)
-    # interpolation with GDAL rounding: v=55 ratio=0.5 between 10,100
-    r = (55 - 10) / (100 - 10)
-    g = int(0.5 + 0 + r * 255)
-    b = int(0.5 + 255 + r * (0 - 255))
-    assert tuple(lut[55]) == (0, g, b, 255)
-    # nearest: tie goes to the upper entry
-    nearest = dem._relief_lut(RAMP3, "nearest")
-    assert tuple(nearest[55]) == (0, 255, 0, 255)
-    assert tuple(nearest[54]) == (0, 0, 255, 255)
-    # exact: non-entries are transparent black
-    exact = dem._relief_lut(RAMP3, "exact")
-    assert tuple(exact[55]) == (0, 0, 0, 0)
-    assert tuple(exact[100]) == (0, 255, 0, 255)
-
-
-def test_color_relief_tiles(spark, ramp):
-    n, ts = 32, 16
-    rows = dem.color_relief(
-        _tiles_from(spark, ramp, ts), RAMP3
-    ).collect()
-    lut = dem._relief_lut(RAMP3, "interpolate")
-    for r in rows:
-        arr = np.frombuffer(r["data"], dtype=np.uint8).reshape(ts, ts, 4)
-        tile = ramp[r["ty"] * ts:(r["ty"] + 1) * ts,
-                    r["tx"] * ts:(r["tx"] + 1) * ts]
-        assert np.array_equal(arr, lut[tile])

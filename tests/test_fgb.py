@@ -267,41 +267,3 @@ def test_nonfinite_coords_with_index_rejected():
         fgb.fgb_encode(pdf)
     out = fgb.fgb_decode(fgb.fgb_encode(pdf, index=False))
     assert len(out) == 2
-
-
-def test_fgb_arrival_stream_matches_batch(spark, tmp_path):
-    """read_fgb_stream over a landing dir emits the same features as
-    batch decode of the same files (same whole-blob kernel)."""
-    import json
-
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    rng = np.random.default_rng(31)
-    want = set()
-    for b in range(3):
-        pdf = pd.DataFrame({
-            "gid": np.arange(b * 10, b * 10 + 10),
-            "geometry": [
-                wkb.point(float(x), float(y))
-                for x, y in rng.uniform(0, 50, (10, 2))
-            ],
-        })
-        blob = fgb.fgb_encode(pdf)
-        with open(os.path.join(land, f"drop-{b}.fgb"), "wb") as f:
-            f.write(blob)
-        for rec in fgb.fgb_decode(blob).itertuples(index=False):
-            want.add((int(rec.gid), bytes(rec.geometry)))
-
-    q = (
-        fgb.read_fgb_stream(spark, land)
-        .writeStream.format("memory").queryName("fgb_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (json.loads(r.attrs)["gid"], bytes(r.geometry))
-        for r in spark.sql(
-            "SELECT attrs, geometry FROM fgb_stream"
-        ).collect()
-    }
-    assert got == want

@@ -110,15 +110,6 @@ def test_point_segment_distance():
     assert np.allclose(dr, [3.0])
 
 
-def test_segments_intersect_bbox():
-    assert G.segments_intersect_bbox(SQUARE, 3.5, 3.5, 5, 5)  # corner overlap
-    assert G.segments_intersect_bbox(SQUARE, 1, 1, 2, 2)  # rect inside ring
-    assert not G.segments_intersect_bbox(SQUARE, 5, 5, 6, 6)  # disjoint
-    # edge passes through rect without vertices inside
-    thin = np.array([[-1, 2], [5, 2], [5, 2.1], [-1, 2.1], [-1, 2]], dtype=float)
-    assert G.segments_intersect_bbox(thin, 1, 0, 2, 4)
-
-
 def _duckdb_raycast(points: pd.DataFrame, ring: np.ndarray) -> np.ndarray:
     """Independent SQL implementation of the same crossing rule."""
     edges = pd.DataFrame(
@@ -202,85 +193,6 @@ def test_convex_hull_properties_random():
     assert inside.all()
 
 
-def test_simplify_dp_drops_collinear_keeps_corners():
-    line = np.array(
-        [[0, 0], [1, 0.001], [2, 0], [3, 0], [4, 5], [5, 0]], dtype=float
-    )
-    out = geometry.simplify_dp(line, tolerance=0.01)
-    # near-collinear points dropped, the spike at (4,5) kept
-    assert [tuple(p) for p in out] == [(0, 0), (3, 0), (4, 5), (5, 0)]
-    # zero tolerance keeps everything
-    assert len(geometry.simplify_dp(line, 0.0)) == len(line)
-
-
-def test_clip_ring_to_rect_partial_overlap():
-    ring = np.array(
-        [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float
-    )
-    out = geometry.clip_ring_to_rect(ring, 5, 5, 15, 15)
-    assert abs(geometry.ring_area(out)) == pytest.approx(25.0)
-    out2 = geometry.clip_ring_to_rect(ring, 20, 20, 30, 30)
-    assert len(out2) == 0
-
-
-def test_clip_partition_conserves_area():
-    """Clipping a polygon against a grid of cells partitions its area
-    exactly — the invariant behind per-cell splitting of giant
-    polygons."""
-    ring = np.array(
-        [[0.5, 0.2], [9.3, 1.1], [7.7, 8.8], [2.1, 6.4], [0.5, 0.2]],
-        dtype=float,
-    )
-    total = abs(geometry.ring_area(ring))
-    acc = 0.0
-    for cx in range(0, 10, 2):
-        for cy in range(0, 10, 2):
-            part = geometry.clip_ring_to_rect(ring, cx, cy, cx + 2, cy + 2)
-            if len(part):
-                acc += abs(geometry.ring_area(part))
-    assert acc == pytest.approx(total, rel=1e-12)
-
-
-def test_convex_hull_per_key_spark(spark):
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "grp": [0] * 5 + [1] * 4,
-            "lon": [0, 4, 4, 0, 2, 10, 12, 12, 10],
-            "lat": [0, 0, 4, 4, 2, 10, 10, 12, 12],
-        }
-    )
-    from gdal_spark.operators.geom_ops import convex_hull_per_key
-
-    out = {
-        int(r["grp"]): (int(r["n_vertices"]), int(r["area_q6"]))
-        for r in convex_hull_per_key(
-            spark.createDataFrame(pdf), ["grp"]
-        ).collect()
-    }
-    assert out[0] == (4, 16_000_000)   # square, interior point dropped
-    assert out[1] == (4, 4_000_000)    # 2x2 square
-
-
-def test_clip_polygons_to_cells_partitions_area(spark):
-    from gdal_spark.operators.geom_ops import clip_polygons_to_cells
-    from gdal_spark.testdata import polygons_pdf
-
-    pdf = polygons_pdf(8)
-    out = clip_polygons_to_cells(spark, pdf, res=4).toPandas()
-    # per-polygon: sum of piece areas == full polygon area (incl. holes)
-    from gdal_spark import wkb as wkb_mod
-
-    for pid, buf in zip(pdf["poly_id"], pdf["geom_wkb"]):
-        parts = wkb_mod.polygon_rings(bytes(buf))
-        want = sum(geometry.polygon_area(p) for p in parts)
-        got = out[out["poly_id"] == pid]["area_q6"].sum() / 1e6
-        assert got == pytest.approx(want, abs=2e-5), f"poly {pid}"
-    # the giant polygon (poly 0) really was split across many cells
-    assert (out["poly_id"] == 0).sum() > 20
-
-
 class TestBufferMakeValid:
     def test_point_buffer_is_circle(self):
         from gdal_spark import geometry
@@ -319,51 +231,3 @@ class TestBufferMakeValid:
         parts = geometry.make_valid(sq)
         assert len(parts) == 1
         assert abs(geometry.ring_area(parts[0])) == pytest.approx(4.0)
-
-
-class TestConcaveHull:
-    def _c_points(self):
-        # dense samples of a C shape: concave hull must exclude the
-        # mouth that the convex hull spans
-        pts = []
-        for x in range(0, 11):
-            for y in range(0, 11):
-                inside = (x <= 3) or (y <= 3) or (y >= 7)
-                if inside:
-                    pts.append((float(x), float(y)))
-        return np.array(pts)
-
-    def test_concave_tighter_than_convex(self):
-        from gdal_spark import geometry
-        from gdal_spark.operators.geom_ops import concave_hull
-
-        pts = self._c_points()
-        ch = geometry.convex_hull(pts)
-        cc = concave_hull(pts, ratio=0.15)
-        a_convex = abs(geometry.ring_area(ch))
-        a_concave = abs(geometry.ring_area(cc))
-        assert a_convex == 100.0  # 10x10 bounding square
-        # true C area = 100 - mouth (7x3... x in (3,10], y in (3,7))
-        assert a_concave < a_convex - 10
-        assert a_concave > 50
-        # closed simple ring
-        assert (cc[0] == cc[-1]).all()
-
-    def test_ratio_one_is_convex_hull(self):
-        from gdal_spark import geometry
-        from gdal_spark.operators.geom_ops import concave_hull
-
-        rng = np.random.default_rng(3)
-        pts = rng.uniform(0, 50, size=(60, 2))
-        cc = concave_hull(pts, ratio=1.0)
-        ch = geometry.convex_hull(pts)
-        assert abs(
-            abs(geometry.ring_area(cc)) - abs(geometry.ring_area(ch))
-        ) < 1e-9
-
-    def test_few_points_fallback(self):
-        from gdal_spark.operators.geom_ops import concave_hull
-
-        pts = np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 1.0]])
-        out = concave_hull(pts)
-        assert len(out) >= 3

@@ -1,102 +1,9 @@
-"""IDW / moving-average gridding vs numpy oracle; salted aggregates."""
+"""Salted aggregates: the two-level salted count-distinct and the
+salted dimension join equal their plain counterparts."""
 
-import numpy as np
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from gdal_spark.operators.grid import idw_grid, moving_average_grid
 from gdal_spark.operators.skew import salted_count_distinct, salted_dim_join
-
-RES = 4
-N_CELLS = 1 << RES
-
-
-@pytest.fixture(scope="module")
-def pts_pdf():
-    rng = np.random.default_rng(3)
-    n = 3000
-    return pd.DataFrame(
-        {
-            "lon": rng.uniform(-179, 179, n),
-            "lat": rng.uniform(-89, 89, n),
-            "z": rng.uniform(0, 100, n),
-        }
-    )
-
-
-def _numpy_idw(pdf, res, r, power=2, smoothing=1e-9):
-    n = 1 << res
-    ix = np.clip(
-        np.floor((pdf["lon"].to_numpy() + 180.0) / 360.0 * n).astype(int), 0, n - 1
-    )
-    iy = np.clip(
-        np.floor((pdf["lat"].to_numpy() + 90.0) / 180.0 * n).astype(int), 0, n - 1
-    )
-    out = {}
-    for p in range(len(pdf)):
-        for dx in range(-r, r + 1):
-            for dy in range(-r, r + 1):
-                cx_i, cy_i = ix[p] + dx, iy[p] + dy
-                if not (0 <= cx_i < n and 0 <= cy_i < n):
-                    continue
-                cx = (cx_i + 0.5) / n * 360.0 - 180.0
-                cy = (cy_i + 0.5) / n * 180.0 - 90.0
-                d2 = (
-                    (pdf["lon"][p] - cx) ** 2
-                    + (pdf["lat"][p] - cy) ** 2
-                    + smoothing
-                )
-                w = 1.0 / d2 ** (power / 2.0)
-                acc = out.setdefault((cx_i, cy_i), [0.0, 0.0, 0])
-                acc[0] += pdf["z"][p] * w
-                acc[1] += w
-                acc[2] += 1
-    return {k: (v[2], v[0] / v[1]) for k, v in out.items()}
-
-
-def test_idw_matches_numpy(spark, pts_pdf):
-    df = spark.createDataFrame(pts_pdf)
-    got = {
-        (int(r["cell_ix"]), int(r["cell_iy"])): (int(r["n_points"]), r["idw"])
-        for r in idw_grid(df, RES, radius_cells=1).collect()
-    }
-    want = _numpy_idw(pts_pdf, RES, 1)
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][0] == want[k][0]
-        assert got[k][1] == pytest.approx(want[k][1], rel=1e-9)
-
-
-def test_idw_partitioning_invariant_counts(spark, pts_pdf):
-    df = spark.createDataFrame(pts_pdf)
-    a = idw_grid(df.repartition(3), RES).select(
-        "cell_ix", "cell_iy", "n_points"
-    )
-    b = idw_grid(df.repartition(17), RES).select(
-        "cell_ix", "cell_iy", "n_points"
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_moving_average_simple(spark):
-    pdf = pd.DataFrame(
-        {
-            # two points in the same cell, far from everything else
-            "lon": [0.1, 0.2],
-            "lat": [0.1, 0.2],
-            "z": [10.0, 30.0],
-        }
-    )
-    rows = {
-        (int(r["cell_ix"]), int(r["cell_iy"])): (int(r["n_points"]), r["avg_z"])
-        for r in moving_average_grid(spark.createDataFrame(pdf), RES).collect()
-    }
-    # the home cell sees both points
-    home = (int((0.1 + 180) / 360 * N_CELLS), int((0.1 + 90) / 180 * N_CELLS))
-    assert rows[home] == (2, pytest.approx(20.0))
-    # all 9 neighbor cells of the home cell got contributions
-    assert len(rows) == 9
 
 
 def test_salted_count_distinct_matches_exact(spark):

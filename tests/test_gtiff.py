@@ -163,25 +163,6 @@ def test_ranged_scan_equals_file_parallel(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
-def test_to_engine_tiles_composes(spark, tmp_path):
-    """A uint8 GeoTIFF flows straight into the tiling operators."""
-    from gdal_spark.operators import tiling
-    from gdal_spark import raster
-
-    a = _rand((64, 64), "u1", seed=42)
-    p = str(tmp_path / "t.tif")
-    with open(p, "wb") as f:
-        f.write(gtiff.tiff_encode(a, tile=(32, 32)))
-    eng = gtiff.to_engine_tiles(gtiff.read_gtiff(spark, p))
-    cks = {
-        (r["tx"], r["ty"]): r["cks"]
-        for r in tiling.tile_checksums(eng).collect()
-    }
-    for (tx, ty), v in cks.items():
-        blk = a[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-        assert v == raster.tile_checksum(blk)
-
-
 # ---------------------------------------------------------------------------
 # distributed sink: write_gtiff_dir
 # ---------------------------------------------------------------------------
@@ -246,64 +227,6 @@ def test_write_gtiff_dir_non_multiple16_uses_strips(spark, tmp_path):
     man = gtiff.write_gtiff_dir(tiles, str(tmp_path)).collect()
     arr = gtiff.tiff_decode(open(man[0]["path"], "rb").read())
     assert np.array_equal(arr.reshape(40, 40), a)
-
-
-def test_tile_index(spark, tmp_path):
-    """gdaltindex analog: one footprint row per file, header-only."""
-    paths, arrays = _write_fixture_files(tmp_path)
-    idx = {
-        os.path.basename(r.location): r
-        for r in gtiff.tile_index(spark, str(tmp_path / "*.tif")).collect()
-    }
-    assert len(idx) == len(paths)
-    for i, (p, a) in enumerate(zip(paths, arrays)):
-        r = idx[os.path.basename(p)]
-        h, w = a.shape
-        assert (r.width, r.height, r.epsg) == (w, h, 32601 + i)
-        # north-up gt (i*100, 1, 0, 0, 0, -1): bbox is exact
-        assert r.minx == pytest.approx(i * 100.0)
-        assert r.maxx == pytest.approx(i * 100.0 + w)
-        assert (r.miny, r.maxy) == (pytest.approx(-float(h)), 0.0)
-        # footprint WKB parses to a closed ring with the same bbox
-        from gdal_spark import wkb
-
-        rings = wkb.polygon_rings(bytes(r.wkb))
-        ring = rings[0][0] if isinstance(rings[0], list) else rings[0]
-        import numpy as _np
-
-        ring = _np.asarray(ring)
-        assert ring[0].tolist() == ring[-1].tolist()
-        assert ring[:, 0].min() == pytest.approx(r.minx)
-        assert ring[:, 1].max() == pytest.approx(r.maxy)
-
-
-def test_tile_index_transform_densifies(spark, tmp_path):
-    """-t_srs analog: the footprint ring is densified before the
-    transform, so a curved projection bows the edges (a corner-only
-    rectangle could not contain the true footprint)."""
-    a = _rand((32, 48), "u1", seed=5)
-    p = str(tmp_path / "t.tif")
-    with open(p, "wb") as f:
-        f.write(
-            gtiff.tiff_encode(
-                a, geotransform=(10.0, 0.1, 0.0, 50.0, 0.0, -0.1),
-                epsg=4326,
-            )
-        )
-
-    from gdal_spark.proj import LonLatToWebMercator
-
-    rows = gtiff.tile_index(
-        spark, [p], transform=LonLatToWebMercator(), densify=33
-    ).collect()
-    assert len(rows) == 1
-    from gdal_spark import wkb
-    import numpy as _np
-
-    rings = wkb.polygon_rings(bytes(rows[0].wkb))
-    ring = _np.asarray(rings[0][0] if isinstance(rings[0], list) else rings[0])
-    # densified: 4 edges x 33 points + closure
-    assert len(ring) == 4 * 33 + 1
 
 
 def test_ranged_scan_bbox_prunes_blocks(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Halo exchange, focal mean, contour census, point probe vs numpy."""
+"""Halo exchange and the proximity distance raster vs numpy."""
 
 import numpy as np
 import pandas as pd
@@ -37,76 +37,6 @@ def test_add_halo_assembles_neighbors(spark, tiles):
             ty * TS : ty * TS + TS + 2 * p, tx * TS : tx * TS + TS + 2 * p
         ]
         np.testing.assert_array_equal(arr, want, err_msg=f"tile {tx},{ty}")
-
-
-def test_focal_mean_matches_numpy(spark, tiles):
-    got = {
-        (int(r["tx"]), int(r["ty"])): np.frombuffer(
-            r["data"], dtype=np.uint8
-        ).reshape(TS, TS)
-        for r in tiling.focal_mean(tiles).collect()
-    }
-    full = _full().astype(np.int64)
-    padded = np.zeros((GH + 2, GW + 2), dtype=np.int64)
-    padded[1 : 1 + GH, 1 : 1 + GW] = full
-    s = sum(
-        padded[1 + dy : 1 + dy + GH, 1 + dx : 1 + dx + GW]
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    want_full = ((s + 4) // 9).astype(np.uint8)
-    for (tx, ty), arr in got.items():
-        np.testing.assert_array_equal(
-            arr, want_full[ty * TS : (ty + 1) * TS, tx * TS : (tx + 1) * TS]
-        )
-
-
-def test_contour_census_matches_numpy(spark, tiles):
-    thr = 100
-    got = {
-        int(r["case_code"]): int(r["n"])
-        for r in tiling.contour_case_census(tiles, GW, GH, thr).collect()
-    }
-    b = (_full() >= thr).astype(np.int64)
-    case = (
-        b[:-1, :-1] + 2 * b[:-1, 1:] + 4 * b[1:, 1:] + 8 * b[1:, :-1]
-    )
-    want = {
-        int(c): int(n)
-        for c, n in zip(*np.unique(case, return_counts=True))
-    }
-    assert got == want
-    assert sum(got.values()) == (GW - 1) * (GH - 1)
-    assert len(got) > 4  # the fixture produces a real variety of cases
-
-
-GT = (-180.0, 360.0 / GW, 0.0, 90.0, 0.0, -180.0 / GH)
-
-
-def test_point_probe_matches_direct_lookup(spark, tiles):
-    rng = np.random.default_rng(5)
-    pdf = pd.DataFrame(
-        {
-            "doc_id": np.arange(300, dtype=np.int64),
-            "lon": rng.uniform(-200, 200, 300),  # some outside
-            "lat": rng.uniform(-100, 100, 300),
-        }
-    )
-    pts = spark.createDataFrame(pdf)
-    got = {
-        int(r["id"]): int(r["val"])
-        for r in tiling.point_probe_nearest(
-            pts, tiles, GT, TS, GW, GH
-        ).collect()
-    }
-    assert len(got) == 300
-    igt = raster.inv_gt(GT)
-    full = _full()
-    for i in range(300):
-        px = int(np.floor(igt[0] + pdf["lon"][i] * igt[1] + pdf["lat"][i] * igt[2]))
-        py = int(np.floor(igt[3] + pdf["lon"][i] * igt[4] + pdf["lat"][i] * igt[5]))
-        want = full[py, px] if 0 <= px < GW and 0 <= py < GH else -1
-        assert got[i] == want, f"point {i}"
 
 
 def _brute_d2(targets_mask):
@@ -166,44 +96,3 @@ def test_proximity_d2_distributed_matches_brute(spark):
     }
     assert got == want
     assert len(want) > 100  # bound actually bites somewhere or coverage real
-
-
-def test_point_probe_ragged_edge_tiles(spark):
-    """Edge tiles narrower/shorter than tile_size: the tile-local
-    index must be global − tile·tile_size, not a modulo by the edge
-    tile's own width (which silently read the wrong pixel)."""
-    gw, gh = 3 * TS - 5, 2 * TS - 3   # ragged right + bottom edges
-    full = raster.formula_block(0, 0, gw, gh)
-    rows = []
-    for ty in range((gh + TS - 1) // TS):
-        for tx in range((gw + TS - 1) // TS):
-            w = min(TS, gw - tx * TS)
-            h = min(TS, gh - ty * TS)
-            block = full[ty * TS: ty * TS + h, tx * TS: tx * TS + w]
-            rows.append(
-                (tx, ty, w, h, block.astype(np.uint8).tobytes())
-            )
-    tiles = spark.createDataFrame(
-        rows, "tx long, ty long, w long, h long, data binary"
-    )
-    gt = (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)  # identity: lon=px, lat=py
-    rng = np.random.default_rng(8)
-    # bias sampling into the ragged edge tiles
-    px = np.concatenate([
-        rng.integers(2 * TS, gw, 60), rng.integers(0, gw, 40)
-    ])
-    py = np.concatenate([
-        rng.integers(TS, gh, 60), rng.integers(0, gh, 40)
-    ])
-    pdf = pd.DataFrame({
-        "doc_id": np.arange(100, dtype=np.int64),
-        "lon": px + 0.5, "lat": py + 0.5,
-    })
-    got = {
-        int(r["id"]): int(r["val"])
-        for r in tiling.point_probe_nearest(
-            spark.createDataFrame(pdf), tiles, gt, TS, gw, gh
-        ).collect()
-    }
-    for i in range(100):
-        assert got[i] == int(full[py[i], px[i]]), f"point {i}"

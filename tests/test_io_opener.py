@@ -128,23 +128,6 @@ def test_read_shapefile_all_bytes_via_opener(spark, tmp_path):
         read_shapefile(spark, [base + ".shp"]).toPandas()
 
 
-def test_tile_index_reads_headers_via_opener(spark, tmp_path):
-    from gdal_spark.gtiff import tile_index, tiff_encode
-
-    a = np.zeros((20, 30), dtype=np.uint8)
-    blob = tiff_encode(
-        a, geotransform=(5.0, 1.0, 0.0, 40.0, 0.0, -1.0), epsg=4326
-    )
-    p = _shadow(tmp_path, "r.tif", blob)
-    rows = tile_index(spark, [p], opener=PrefixOpener()).collect()
-    assert [(r.location, r.width, r.height, r.epsg) for r in rows] == [
-        (p, 30, 20, 4326)
-    ]
-    assert (rows[0].minx, rows[0].maxy) == (5.0, 40.0)
-    with pytest.raises(Exception, match="FileNotFoundError"):
-        tile_index(spark, [p]).collect()
-
-
 def test_local_opener_is_plain_open(tmp_path):
     p = str(tmp_path / "f.bin")
     with open(p, "wb") as f:

@@ -4,7 +4,7 @@ import numpy as np
 import pandas as pd
 
 from gdal_spark import testdata
-from gdal_spark.operators.knn import knn_join
+from gdal_spark.operators.knn import knn_join_df
 
 
 def exhaustive_knn(pts: pd.DataFrame, queries: pd.DataFrame, k: int) -> set:
@@ -36,10 +36,11 @@ def test_knn_matches_exhaustive(spark):
     queries.loc[:4, "qlon"] = 13.405 + rng.uniform(0, 0.005, 5)
     queries.loc[:4, "qlat"] = 52.525 + rng.uniform(0, 0.005, 5)
 
+    qdf = spark.createDataFrame(queries)
     for k in (1, 4, 8):
         got = {
             (int(r.qid), int(r.rank), int(r.pid))
-            for r in knn_join(points, queries, k=k, res=6).collect()
+            for r in knn_join_df(points, qdf, k=k, res=6).collect()
         }
         want = exhaustive_knn(pts_pdf, queries, k)
         assert got == want, f"k={k} mismatch"
@@ -48,8 +49,10 @@ def test_knn_matches_exhaustive(spark):
 def test_knn_k_larger_than_candidates(spark):
     pts_pdf = testdata.grid_points_pdf(50)
     points = spark.createDataFrame(pts_pdf)
-    queries = pd.DataFrame({"qid": [0], "qlon": [0.0], "qlat": [0.0]})
-    got = knn_join(points, queries, k=60, res=4).collect()
+    queries = spark.createDataFrame(
+        pd.DataFrame({"qid": [0], "qlon": [0.0], "qlat": [0.0]})
+    )
+    got = knn_join_df(points, queries, k=60, res=4).collect()
     assert len(got) == 50  # all points returned when k > n
 
 
@@ -58,7 +61,6 @@ def test_knn_join_df_matches_brute_force(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from gdal_spark.operators.knn import knn_join_df
     from gdal_spark.testdata import grid_points_pdf
 
     pts_pdf = grid_points_pdf(3000)
@@ -85,7 +87,6 @@ def test_knn_join_df_matches_brute_force(spark):
 
 
 def test_knn_join_df_partitioning_invariant(spark):
-    from gdal_spark.operators.knn import knn_join_df
     from gdal_spark.testdata import grid_points_pdf
 
     pts_pdf = grid_points_pdf(1500)

@@ -1,9 +1,8 @@
 """Layer algebra: clipping kernels, piece decomposition, predicates.
 
 Mirrors the semantics corpus of autotest/ogr/ogr_layer_algebra.py
-(Intersection/Union/SymDifference/Identity/Update/Clip/Erase row and
-area semantics) with exact unit fixtures plus conservation properties
-on the seeded convex fixture set.
+(Intersection/Clip row and area semantics) with exact unit fixtures
+plus conservation properties on the seeded convex fixture set.
 """
 
 from __future__ import annotations
@@ -126,39 +125,6 @@ class TestPieceOperators:
         ring = wkb.polygon_rings(bytes(r.piece_wkb))[0][0]
         assert area_of(ring[:-1]) == pytest.approx(8.0)
 
-    def test_erase_and_union(self, fixture_dfs):
-        from gdal_spark.operators.layer_algebra import (
-            erase_pieces, sym_difference_pieces, union_pieces,
-        )
-
-        a_df, b_pdf = fixture_dfs
-        er = erase_pieces(a_df, b_pdf).collect()
-        # a0 minus b0 → 8.0 of residue; a1 untouched → full 4.0
-        by_a: dict[int, float] = {}
-        for r in er:
-            by_a[r.a_id] = by_a.get(r.a_id, 0.0) + r.area
-        assert by_a[0] == pytest.approx(8.0)
-        assert by_a[1] == pytest.approx(4.0)
-
-        un = union_pieces(a_df, b_pdf).collect()
-        total = sum(r.area for r in un)
-        # union area = 16 + 4 + 16 + 1 - 8 (overlap counted once)
-        assert total == pytest.approx(29.0)
-
-        sd = sym_difference_pieces(a_df, b_pdf).collect()
-        assert sum(r.area for r in sd) == pytest.approx(29.0 - 8.0)
-
-    def test_update(self, fixture_dfs):
-        from gdal_spark.operators.layer_algebra import update_pieces
-
-        a_df, b_pdf = fixture_dfs
-        up = update_pieces(a_df, b_pdf).collect()
-        total = sum(r.area for r in up)
-        # A\B (8 + 4) + B whole (16 + 1)
-        assert total == pytest.approx(29.0)
-        assert {r.b_id for r in up if r.a_id == -1} == {0, 1}
-
-
 class TestConcave:
     def L(self):
         # L-shape: 4x4 square minus its 2x2 top-right quadrant
@@ -204,9 +170,7 @@ class TestConcave:
 
     def test_operator_with_concave_b(self, spark):
         import pandas as pd
-        from gdal_spark.operators.layer_algebra import (
-            erase_pieces, intersection_pieces,
-        )
+        from gdal_spark.operators.layer_algebra import intersection_pieces
 
         a_pdf = pd.DataFrame(
             {"a_id": [0], "geom_wkb": [wkb.polygon([sq(1, 1, 3, 3)])]}
@@ -217,8 +181,6 @@ class TestConcave:
         a_df = spark.createDataFrame(a_pdf)
         inter = intersection_pieces(a_df, b_pdf).collect()
         assert sum(r.area for r in inter) == pytest.approx(3.0)
-        er = erase_pieces(a_df, b_pdf).collect()
-        assert sum(r.area for r in er) == pytest.approx(1.0)
 
 
 class TestHoledSubject:
@@ -241,20 +203,6 @@ class TestHoledSubject:
         # probe 36 sq units minus the 16-unit hole = 20
         assert sum(r.area for r in rows) == pytest.approx(20.0)
 
-    def test_erase_respects_holes(self, spark):
-        from gdal_spark.operators.layer_algebra import erase_pieces
-
-        a_df = spark.createDataFrame(
-            pd.DataFrame({"a_id": [0], "geom_wkb": [self.donut_wkb()]})
-        )
-        b_pdf = pd.DataFrame(
-            {"poly_id": [0], "geom_wkb": [wkb.polygon([sq(-1, -1, 5, 11)])]}
-        )
-        rows = erase_pieces(a_df, b_pdf).collect()
-        # donut (84) minus left slab x<5: remaining = x in [5,10] band
-        # minus hole part x in [5,7]: 5*10 - 2*4 = 42
-        assert sum(r.area for r in rows) == pytest.approx(42.0)
-
     def test_multipolygon_subject(self, spark):
         from gdal_spark.operators.layer_algebra import intersection_pieces
 
@@ -271,21 +219,6 @@ class TestHoledSubject:
         rows = intersection_pieces(a_df, b_pdf).collect()
         # 1x1 from the first part + 2x2 from the second
         assert sum(r.area for r in rows) == pytest.approx(1.0 + 4.0)
-
-    def test_flipped_erase_respects_subject_holes(self, spark):
-        from gdal_spark.operators.layer_algebra import erase_b_pieces
-
-        a_df = spark.createDataFrame(
-            pd.DataFrame({"a_id": [0], "geom_wkb": [self.donut_wkb()]})
-        )
-        # B inside the donut's footprint: B \ A keeps the hole overlap
-        b_pdf = pd.DataFrame(
-            {"poly_id": [0], "geom_wkb": [wkb.polygon([sq(2, 2, 8, 8)])]}
-        )
-        rows = erase_b_pieces(a_df, b_pdf).collect()
-        # B area 36; A covers 36 - 16(hole) = 20 → residue = 16
-        assert sum(r.area for r in rows) == pytest.approx(16.0)
-
 
 class TestHoledMethod:
     """Method-side (B) holes and multiparts — the r02 gap: _b_pieces
@@ -314,49 +247,16 @@ class TestHoledMethod:
         ).collect()
         assert sum(r.area for r in out) == pytest.approx(32.0)
 
-    def test_erase_keeps_b_hole_interior(self, spark):
-        from gdal_spark.operators.layer_algebra import erase_pieces
-
-        # A \ donut keeps the 2x2 hole interior: 100 - 32 = 68
-        out = erase_pieces(
-            self._a_df(spark, 0, 0, 10, 10), self._donut_b(),
-        ).collect()
-        assert sum(r.area for r in out) == pytest.approx(68.0)
-
-    def test_partial_overlap_all_six_modes_conserve(self, spark):
+    def test_partial_overlap_intersection(self, spark):
         from gdal_spark.operators import layer_algebra as la
 
         # A = (0,0)-(5,5); B = donut. A∩B: outer∩A 9 − hole∩A 1 = 8
         a_df = self._a_df(spark, 0, 0, 5, 5)
-        b = self._donut_b()
-        area_a, area_b, area_i = 25.0, 32.0, 8.0
-        inter = sum(r.area for r in la.intersection_pieces(a_df, b).collect())
-        assert inter == pytest.approx(area_i)
-        a_minus = sum(r.area for r in la.erase_pieces(a_df, b).collect())
-        assert a_minus == pytest.approx(area_a - area_i)
-        b_minus = sum(r.area for r in la.erase_b_pieces(a_df, b).collect())
-        assert b_minus == pytest.approx(area_b - area_i)
-        ident = sum(r.area for r in la.identity_pieces(a_df, b).collect())
-        assert ident == pytest.approx(area_a)
-        uni = sum(r.area for r in la.union_pieces(a_df, b).collect())
-        assert uni == pytest.approx(area_a + area_b - area_i)
-        sym = sum(r.area for r in la.sym_difference_pieces(a_df, b).collect())
-        assert sym == pytest.approx(area_a + area_b - 2 * area_i)
-        upd = sum(r.area for r in la.update_pieces(a_df, b).collect())
-        assert upd == pytest.approx((area_a - area_i) + area_b)
-
-    def test_untouched_donut_passes_through_with_hole_area(self, spark):
-        from gdal_spark.operators.layer_algebra import erase_b_pieces
-
-        # A far away: B\A must return B whole at its TRUE area (32,
-        # not the solid 36) with the original holed WKB
-        out = erase_b_pieces(
-            self._a_df(spark, 100, 100, 101, 101), self._donut_b(),
-        ).collect()
-        assert len(out) == 1
-        assert out[0].area == pytest.approx(32.0)
-        rings = wkb.polygon_rings(bytes(out[0].piece_wkb))
-        assert len(rings[0]) == 2  # outer + hole intact
+        inter = sum(
+            r.area
+            for r in la.intersection_pieces(a_df, self._donut_b()).collect()
+        )
+        assert inter == pytest.approx(8.0)
 
     def test_multipart_b(self, spark):
         from gdal_spark.operators import layer_algebra as la
@@ -371,10 +271,6 @@ class TestHoledMethod:
         a_df = self._a_df(spark, 0, 0, 10, 10)
         inter = sum(r.area for r in la.intersection_pieces(a_df, b).collect())
         assert inter == pytest.approx(8.0)  # both parts, not just the first
-        a_minus = sum(r.area for r in la.erase_pieces(a_df, b).collect())
-        assert a_minus == pytest.approx(92.0)
-        b_minus = sum(r.area for r in la.erase_b_pieces(a_df, b).collect())
-        assert b_minus == pytest.approx(0.0)
 
     def test_strtree_candidate_lookup_sublinear(self):
         """The broadcast B index answers bbox probes from the STRtree

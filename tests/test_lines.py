@@ -1,6 +1,5 @@
-"""Line × polygon: Cyrus-Beck clip kernel, clip/erase pieces,
-mixed-dimension predicates (KEEP_LOWER_DIMENSION_GEOMETRIES,
-ogr/ogrlayer.cpp:3514-3541; Crosses ogr/ogrgeometry.cpp:5734)."""
+"""Line × polygon: Cyrus-Beck clip kernel and clip pieces
+(KEEP_LOWER_DIMENSION_GEOMETRIES, ogr/ogrlayer.cpp:3514-3541)."""
 
 import numpy as np
 import pandas as pd
@@ -65,16 +64,6 @@ class TestLinePieces:
         out = clip_line_pieces(lines, donut_b).collect()
         assert sum(r.length for r in out) == pytest.approx(8.0)
 
-    def test_erase_complement(self, spark, donut_b):
-        from gdal_spark.operators.layer_algebra import erase_line_pieces
-
-        lines = _line_df(spark, [
-            (0, wkb.linestring([[-5.0, 5.0], [15.0, 5.0]])),
-        ])
-        out = erase_line_pieces(lines, donut_b).collect()
-        # outside the donut: 5 (left) + 2 (hole gap) + 5 (right) = 12
-        assert sum(r.length for r in out) == pytest.approx(12.0)
-
     def test_multisegment_polyline(self, spark, donut_b):
         from gdal_spark.operators.layer_algebra import clip_line_pieces
 
@@ -85,29 +74,3 @@ class TestLinePieces:
         out = clip_line_pieces(lines, donut_b).collect()
         # vertical: y 0..2 -> 2; horizontal: x 2..10 -> 8
         assert sum(r.length for r in out) == pytest.approx(10.0)
-
-
-class TestLinePredicates:
-    def test_matrix(self, spark, donut_b):
-        from gdal_spark.operators.layer_algebra import (
-            line_polygon_predicates,
-        )
-
-        lines = _line_df(spark, [
-            (0, wkb.linestring([[-5.0, 5.0], [15.0, 5.0]])),   # crosses
-            (1, wkb.linestring([[1.0, 1.0], [3.0, 1.0]])),     # within
-            (2, wkb.linestring([[-5.0, 20.0], [15.0, 20.0]])), # disjoint
-            (3, wkb.linestring([[0.0, -2.0], [0.0, 12.0]])),   # touches
-            (4, wkb.linestring([[4.5, 4.5], [5.5, 5.5]])),     # in hole
-        ])
-        got = {
-            int(r.line_id): r
-            for r in line_polygon_predicates(lines, donut_b).collect()
-        }
-        assert got[0].st_crosses == 1 and got[0].st_within == 0
-        assert got[1].st_within == 1 and got[1].st_crosses == 0
-        assert got[2].st_disjoint == 1
-        assert got[3].st_touches == 1 and got[3].st_crosses == 0
-        # a segment wholly inside the HOLE is outside the polygon
-        # interior; it may touch nothing -> disjoint
-        assert got[4].st_disjoint == 1

@@ -4,7 +4,6 @@
 Each test names the reference case whose semantics it pins.
 """
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -70,24 +69,6 @@ def test_like_is_case_insensitive_by_default(spark):
         ).collect()
     ]
     assert got2 == ["10% off"]
-
-
-def test_summary_mode_single_row(spark):
-    """SUMMARY_RECORD mode (ogr_gensql.cpp:849 PrepareSummary): one
-    row of whole-table aggregates, no plain columns."""
-    df = spark.range(1, 101).select(F.col("id").cast("double").alias("v"))
-    out = compat.summary_select(
-        df,
-        [("min", "v", "min_v"), ("max", "v", "max_v"),
-         ("count", "*", "cnt"), ("avg", "v", "avg_v"),
-         ("sum", "v", "sum_v"), ("stddev_pop", "v", "sd")],
-    ).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["min_v"], r["max_v"], r["cnt"]) == (1.0, 100.0, 100)
-    assert r["avg_v"] == pytest.approx(50.5)
-    assert r["sum_v"] == pytest.approx(5050.0)
-    assert r["sd"] == pytest.approx(np.std(np.arange(1, 101)))
 
 
 def test_ogr_geom_area_special_field(spark):

@@ -1,7 +1,6 @@
-"""Median-cut PCT (alg/gdalmediancut.cpp) + dither
-(alg/gdaldither.cpp) tests: exactness on low-color images, literal
-scalar oracles for the split/median/dither rules, distributed
-histogram parity, and tile-mapping round trips."""
+"""Median-cut PCT (alg/gdalmediancut.cpp) tests: exactness on
+low-color images, literal scalar oracles for the split/median rules,
+distributed histogram parity, and tile-mapping round trips."""
 
 import numpy as np
 import pandas as pd
@@ -205,77 +204,6 @@ def test_median_cut_matches_literal_oracle(n_colors):
                  for e in pct.median_cut_pct(hist, n_colors))
     want = _median_cut_oracle(hist, n_colors)
     assert got == [tuple(w) for w in want]
-
-
-# ---------------------------------------------------------- dither
-
-
-def _dither_oracle(r, g, b, table):
-    """Literal scalar transcription of gdaldither.cpp:328-560."""
-    h, w = r.shape
-    out = np.zeros((h, w), dtype=np.uint8)
-    err = [[0, 0, 0] for _ in range(w + 2)]
-
-    def nearest(rv, gv, bv):
-        best, bestd = 0, 768
-        for i, (pr, pg, pb) in enumerate(table):
-            d = abs(rv - int(pr)) + abs(gv - int(pg)) + abs(bv - int(pb))
-            if d < bestd:
-                best, bestd = i, d
-        return best
-
-    def div6(x):
-        q, rem = divmod(abs(x), 6)
-        return q if x >= 0 else -q
-
-    for y in range(h):
-        row = []
-        for x in range(w):
-            row.append(
-                [
-                    max(0, min(255, int(r[y, x]) + err[x + 1][0])),
-                    max(0, min(255, int(g[y, x]) + err[x + 1][1])),
-                    max(0, min(255, int(b[y, x]) + err[x + 1][2])),
-                ]
-            )
-        err = [[0, 0, 0] for _ in range(w + 2)]
-        last = [0, 0, 0]
-        for x in range(w):
-            vals = [
-                max(0, min(255, row[x][c] + last[c])) for c in range(3)
-            ]
-            idx = nearest(*vals)
-            out[y, x] = idx
-            for c in range(3):
-                e = vals[c] - int(table[idx][c])
-                s = div6(e)
-                err[x][c] += s
-                err[x + 2][c] = s
-                err[x + 1][c] += e - 5 * s
-                last[c] = 2 * s
-    return out
-
-
-def test_dither_matches_literal_oracle():
-    r, g, b = _rgb_image(12, 17)
-    table = pct.median_cut_pct(_hist3d(r, g, b), n_colors=8)
-    got = pct.dither_rgb2pct(r, g, b, table)
-    want = _dither_oracle(r, g, b, table)
-    np.testing.assert_array_equal(got, want)
-
-
-def test_dither_exact_colors_is_identity_mapping():
-    """Every pixel already in the table -> zero error everywhere ->
-    dither == plain nearest mapping."""
-    table = np.array(
-        [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8
-    )
-    idx = rng.integers(0, 4, size=(10, 14))
-    r = table[idx, 0]
-    g = table[idx, 1]
-    b = table[idx, 2]
-    out = pct.dither_rgb2pct(r, g, b, table)
-    np.testing.assert_array_equal(out, idx)
 
 
 # ---------------------------------------------------------- tile map

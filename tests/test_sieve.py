@@ -81,28 +81,6 @@ def test_sieve_invariants_on_noisy_raster(spark):
     assert (out != full).any()
 
 
-def test_mosaic_priority_and_nodata_show_through(spark):
-    a = np.zeros((8, 8), dtype=np.uint8)
-    a[0:4, :] = 7          # top half data, bottom half nodata
-    b = np.full((8, 8), 2, dtype=np.uint8)
-    ta = _tiles_from_array(spark, a, 8)
-    tb = _tiles_from_array(spark, b, 8)
-    out = _assemble(tiling.mosaic([ta, tb]).collect(), 8, 8, 8)
-    want = np.full((8, 8), 2, dtype=np.uint8)
-    want[0:4, :] = 7       # a wins where it has data; b shows through
-    np.testing.assert_array_equal(out, want)
-    # a tile present only in one source passes through
-    c = np.full((8, 8), 9, dtype=np.uint8)
-    tc_rows = [(0, 5, 5, 8, 8, c.tobytes())]
-    import pandas as pd
-    tc = spark.createDataFrame(
-        pd.DataFrame(tc_rows, columns=["z", "tx", "ty", "w", "h", "data"])
-    )
-    rows = tiling.mosaic([ta, tc]).collect()
-    got = {(int(r["tx"]), int(r["ty"])) for r in rows}
-    assert got == {(0, 0), (5, 5)}
-
-
 def test_footprint_outlines_valid_data(spark):
     full = np.zeros((16, 16), dtype=np.uint8)
     full[2:6, 2:10] = 200   # one data patch crossing a tile border

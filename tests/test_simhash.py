@@ -7,11 +7,7 @@ import itertools
 
 import pytest
 
-from gdal_spark.operators.dedup import (
-    simhash,
-    simhash_near_pairs,
-    simhash_pairs_from_fps,
-)
+from gdal_spark.operators.dedup import simhash, simhash_pairs_from_fps
 
 
 def _docs(spark):
@@ -40,11 +36,12 @@ def test_identical_docs_hash_identically(spark):
 
 
 def test_block_join_matches_brute_force(spark):
-    """simhash_near_pairs must return exactly the pairs a brute-force
-    popcount scan over the same fingerprints finds — for every
-    (max_hamming, n_blocks) with the pigeonhole guarantee."""
-    docs = _docs(spark)
-    fps = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
+    """The block join over the text fingerprints must return exactly
+    the pairs a brute-force popcount scan over the same fingerprints
+    finds — for every (max_hamming, n_blocks) with the pigeonhole
+    guarantee."""
+    sh = simhash(_docs(spark))
+    fps = {r["doc_id"]: r["simhash"] for r in sh.collect()}
 
     for max_h, n_blocks in ((0, 4), (3, 4), (7, 8), (15, 16)):
         want = set()
@@ -54,8 +51,8 @@ def test_block_join_matches_brute_force(spark):
                 want.add((a, b, h))
         got = {
             (r["doc_a"], r["doc_b"], r["hamming"])
-            for r in simhash_near_pairs(
-                docs, max_hamming=max_h, n_blocks=n_blocks
+            for r in simhash_pairs_from_fps(
+                sh, max_hamming=max_h, n_blocks=n_blocks
             ).collect()
         }
         assert got == want, (max_h, n_blocks)

@@ -237,6 +237,12 @@ _FULL_CELL_PROBES = {
     500: (_rect(170, -5, 200, 5), (210, 0.1)),
     600: (_rect(-5, 80, 10, 95), (1, 96)),
 }
+# polygons wholly past the grid's edge, each with a point inside it:
+# cell ids clamp both into the grid's outer ring
+_PAST_EDGE_PROBES = {
+    700: (_rect(190, -5, 200, 5), (195, 0.1)),
+    800: (_rect(-10, 91, 10, 95), (0, 93)),
+}
 
 
 def _probe_points(polygons: pd.DataFrame, n_random: int, seed: int):
@@ -266,27 +272,28 @@ def test_spatial_join_exact_on_edge_cases(spark, boundary_is_inside):
     pair, on overlapping holed multipolygons, the sliver and the
     shared-edge pair, a polygon whose 73 rings all reach one cell (two
     mask words), a point that rounds into a cell right of an edge it
-    must cross, and points outside a polygon that round or clamp into
-    a cell it covers fully."""
+    must cross, points outside a polygon that round or clamp into a
+    cell it covers fully, and polygons wholly past the grid's edge."""
     from test_strtree_cover import _holed_multipolygons
 
+    probed = {**_FULL_CELL_PROBES, **_PAST_EDGE_PROBES}
     polygons = pd.concat(
         [
             _holed_multipolygons(),
             testdata.polygons_pdf(7).assign(poly_id=lambda d: d.poly_id + 100),
             pd.DataFrame({
-                "poly_id": [200, 300, *_FULL_CELL_PROBES],
+                "poly_id": [200, 300, *probed],
                 "geom_wkb": [
                     wkb.polygon(_polygon_with_holes()),
                     wkb.polygon([_CLIP_PROBE]),
-                    *(wkb.polygon([r]) for r, _ in _FULL_CELL_PROBES.values()),
+                    *(wkb.polygon([r]) for r, _ in probed.values()),
                 ],
             }),
         ],
         ignore_index=True,
     )[["poly_id", "geom_wkb"]]
     lon, lat = _probe_points(polygons, 200, seed=4)
-    probes = np.array([p for _, p in _FULL_CELL_PROBES.values()])
+    probes = np.array([p for _, p in probed.values()])
     probe_ids = lon.size + np.arange(len(probes))
     lon, lat = np.append(lon, probes[:, 0]), np.append(lat, probes[:, 1])
     want = set()
@@ -307,8 +314,8 @@ def test_spatial_join_exact_on_edge_cases(spark, boundary_is_inside):
     got = {(int(r.id), int(r.poly_id)) for r in joined.collect()}
     assert got == want
     assert (0, 300) not in want and (0, 200) in want
-    for i, pid in zip(probe_ids.tolist(), _FULL_CELL_PROBES):
-        assert (i, pid) not in want
+    for i, pid in zip(probe_ids.tolist(), probed):
+        assert ((i, pid) in want) == (pid in _PAST_EDGE_PROBES)
 
 
 def test_refine_cover_needs_two_words_for_73_rings():

@@ -5,11 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gdal_spark.operators.dedup import (
-    duplicated_spans,
-    strip_duplicated_spans,
-    window_gram_table,
-)
+from gdal_spark.operators.dedup import duplicated_spans, window_gram_table
 
 
 def brute_spans(docs, window, min_count=2):
@@ -95,26 +91,6 @@ def test_short_docs_yield_nothing(spark):
         pd.DataFrame({"doc_id": [1, 2], "text": ["a b", "a b"]})
     )
     assert duplicated_spans(df, window=5).count() == 0
-
-
-def test_strip_removes_all_copies(spark, docs_df):
-    window = 5
-    spans = duplicated_spans(docs_df, window=window)
-    out = {
-        r.doc_id: r.text_dedup
-        for r in strip_duplicated_spans(docs_df, spans).collect()
-    }
-    ref = {d: list(t.split(" ")) for d, t in _mkdocs()}
-    for d, a, b, _ in brute_spans(_mkdocs(), window):
-        for i in range(a - 1, b):
-            ref[d][i] = None
-    want = {
-        d: " ".join(t for t in ts if t is not None)
-        for d, ts in ref.items()
-    }
-    assert out == want
-    assert out[5] in ("", "y")  # the self-repetitive run collapses
-    assert out[3] == dict(_mkdocs())[3]  # untouched doc passes through
 
 
 def test_contamination_pairs(spark):

@@ -244,12 +244,13 @@ def test_polygonize_matches_flood_fill(spark):
     assert len(expect) > 4  # the fixture really produces multiple regions
 
 
-def test_contour_segments_and_polyline_stitch(spark):
-    """A single bump crossing tile borders yields one closed polyline
-    whose stitched segment count equals the per-level census total."""
+def test_contour_segments_close_across_tiles(spark):
+    """A single bump crossing tile borders yields segments that close
+    into one loop (every endpoint shared by exactly two segments, also
+    across tile borders), and the per-level census totals them."""
     import pandas as pd
     from gdal_spark.operators.tiling import (
-        contour_level_stats, contour_polylines, contour_segments,
+        contour_level_stats, contour_segments,
     )
 
     n = 16
@@ -268,10 +269,18 @@ def test_contour_segments_and_polyline_stitch(spark):
     )
     segs = contour_segments(tiles, n, n, [100])
     stats = {r.level: r for r in contour_level_stats(segs).collect()}
-    lines = contour_polylines(segs).collect()
-    assert len(lines) == 1  # one closed loop
-    assert lines[0].n_segments == stats[100].n_segments
-    assert lines[0].len_q6 == stats[100].len_q6
+    rows = segs.collect()
+    ends: dict = {}
+    for r in rows:
+        for p in ((r.x1, r.y1), (r.x2, r.y2)):
+            ends[p] = ends.get(p, 0) + 1
+    assert set(ends.values()) == {2}  # closed, no dangling ends
+    assert stats[100].n_segments == len(rows)
+    want_q6 = sum(
+        int(np.floor(np.hypot(r.x2 - r.x1, r.y2 - r.y1) * 1e6 + 0.5))
+        for r in rows
+    )
+    assert stats[100].len_q6 == want_q6
 
 
 def test_warp_affine_cubicspline_and_lanczos(spark):
@@ -467,8 +476,7 @@ def test_distributed_root_map_long_snake_component(spark):
 
 class TestContourPolygons:
     """Contour polygon mode (gdal_contour -p analog): per-cell
-    marching-squares band polygons → exact quantized areas; real ring
-    geometry with interior-edge cancellation + distributed stitch."""
+    marching-squares band polygons → exact quantized areas."""
 
     def _tiles(self, spark, full, ts):
         n = full.shape[0]
@@ -512,41 +520,6 @@ class TestContourPolygons:
             ).collect()
         }
         assert g2[10] == (n - 1) * (n - 1) * 10**8
-
-    def test_polygons_conserve_band_area_and_cross_tiles(self, spark):
-        from gdal_spark.operators.tiling import (
-            contour_polygon_areas, contour_polygons,
-        )
-
-        n, ts = 32, 8  # region spans 4x4 tile grid
-        full = self._cone(n)
-        tiles = self._tiles(spark, full, ts)
-        lv = 100
-        polys = contour_polygons(tiles, n, n, lv).collect()
-        assert len(polys) == 1  # one connected above-region
-        want = {
-            int(r.level): int(r.area_q8)
-            for r in contour_polygon_areas(tiles, n, n, [lv]).collect()
-        }[lv]
-        assert abs(polys[0].area - want / 1e8) < 1e-5
-        assert polys[0].n_holes == 0
-
-    def test_crater_yields_hole(self, spark):
-        from gdal_spark.operators.tiling import contour_polygons
-
-        n, ts = 32, 16
-        yy, xx = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
-        r = np.sqrt((xx - 16) ** 2 + (yy - 16) ** 2)
-        # high ring: above level for 4 < r < 12, below in the crater
-        full = np.where((r > 4) & (r < 12), 180, 20).astype(np.uint8)
-        polys = contour_polygons(self._tiles(spark, full, ts), n, n, 100).collect()
-        assert len(polys) == 1
-        assert polys[0].n_holes == 1
-        from gdal_spark import wkb as wkb_mod
-
-        rings = wkb_mod.polygon_rings(bytes(polys[0].geom_wkb))[0]
-        assert len(rings) == 2
-
 
 class TestRasterizeVariants:
     """Polygon ALL_TOUCHED and MERGE_ALG=ADD (alg/gdalrasterize.cpp
@@ -621,7 +594,7 @@ def test_overview_cubic_matches_whole_array(spark):
     exchange equals the whole-array kernel; tile borders invisible."""
     from pyspark.sql import functions as F
 
-    from gdal_spark.operators.tiling import formula_tiles, overview_cubic
+    from gdal_spark.operators.tiling import formula_tiles, overview_level
 
     n, ts = 2, 64
     tiles = formula_tiles(spark, n, n, ts).withColumn("z", F.lit(5))
@@ -629,7 +602,7 @@ def test_overview_cubic_matches_whole_array(spark):
         (int(r["tx"]), int(r["ty"])): np.frombuffer(
             r["data"], dtype=np.uint8
         ).reshape(ts, ts)
-        for _, r in overview_cubic(tiles).toPandas().iterrows()
+        for _, r in overview_level(tiles, "cubic").toPandas().iterrows()
     }
     assert set(out) == {(0, 0)}
     full = raster.formula_block(0, 0, n * ts, n * ts)
@@ -640,16 +613,15 @@ def test_overview_cubic_matches_whole_array(spark):
 
 def test_pyramid_dispatches_halo_resamplers(spark):
     """pyramid(method=gauss|cubic) must route through the halo-
-    exchange reducers, matching the standalone functions level-for-
-    level."""
+    exchange reducers, matching one overview_level level-for-level."""
     import pandas as pd  # noqa: F401
 
     from gdal_spark.operators.tiling import (
-        formula_tiles, overview_cubic, overview_gauss, pyramid,
+        formula_tiles, overview_level, pyramid,
     )
 
     tiles = formula_tiles(spark, 2, 2, 32)
-    for method, fn in (("gauss", overview_gauss), ("cubic", overview_cubic)):
+    for method in ("gauss", "cubic"):
         got = {
             (r.z, r.tx, r.ty): r.data
             for r in pyramid(tiles, base_zoom=1, min_zoom=0,
@@ -657,6 +629,7 @@ def test_pyramid_dispatches_halo_resamplers(spark):
             if r.z == -1  # formula_tiles emits z=0 -> one level down
         }
         ref = {
-            (r.z, r.tx, r.ty): r.data for r in fn(tiles).collect()
+            (r.z, r.tx, r.ty): r.data
+            for r in overview_level(tiles, method).collect()
         }
         assert got == ref

@@ -105,44 +105,3 @@ class TestDistributed:
         manifest2 = warc.write_warc_dir(pages, out).collect()
         sizes2 = {r.path: r.n_bytes for r in manifest2}
         assert sizes1 == sizes2
-
-
-class TestStreaming:
-    def test_warc_arrival_stream_matches_batch(self, spark, tmp_path):
-        """read_warc_stream over a landing dir == read_warc batch scan
-        of the same files (parity by construction: same kernel)."""
-        land = str(tmp_path / "landing")
-        os.makedirs(land)
-        for b in range(3):
-            recs = [
-                (
-                    f"https://s.test/{b}/{i}",
-                    f"2026-02-0{b + 1}T00:00:{i:02d}Z",
-                    f"<html><body>b{b} page {i}</body></html>".encode(),
-                )
-                for i in range(10)
-            ]
-            with open(os.path.join(land, f"crawl-{b}.warc.gz"), "wb") as f:
-                f.write(warc.warc_file_bytes(recs))
-
-        stream = warc.read_warc_stream(spark, land)
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("warc_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r.url, bytes(r.html))
-            for r in spark.sql(
-                "SELECT url, html FROM warc_stream"
-            ).collect()
-        }
-        want = {
-            (r.url, bytes(r.html))
-            for r in warc.read_warc(spark, land)
-            .select("url", "html").collect()
-        }
-        assert got == want and len(got) == 30
