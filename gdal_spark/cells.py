@@ -197,13 +197,9 @@ def morton_key(cell_id) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def cell_expr(lon_col, lat_col, res: int):
-    """Spark Column computing encode(lon, lat, res) entirely JVM-side.
-
-    This is the engine's answer to the reference's per-feature spatial
-    hashing: no Python is involved in assigning billions of points to
-    cells — Catalyst codegens the arithmetic.
-    """
+def cell_index_exprs(lon_col, lat_col, res: int):
+    """The clamped (ix, iy) grid indices of encode() as two long
+    Columns."""
     from pyspark.sql import functions as F
 
     n = 1 << res
@@ -215,6 +211,19 @@ def cell_expr(lon_col, lat_col, res: int):
         F.greatest(F.floor((lat_col + 90.0) / 180.0 * n), F.lit(0)),
         F.lit(n - 1),
     ).cast("long")
+    return ix, iy
+
+
+def cell_expr(lon_col, lat_col, res: int):
+    """Spark Column computing encode(lon, lat, res) entirely JVM-side.
+
+    This is the engine's answer to the reference's per-feature spatial
+    hashing: no Python is involved in assigning billions of points to
+    cells — Catalyst codegens the arithmetic.
+    """
+    from pyspark.sql import functions as F
+
+    ix, iy = cell_index_exprs(lon_col, lat_col, res)
     return (
         F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
         + ix * F.lit(1 << _IX_SHIFT).cast("long")

@@ -16,18 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _cell_parts(lon_col, lat_col, res: int):
-    n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((lon_col + 180.0) / 360.0 * n), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((lat_col + 90.0) / 180.0 * n), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    return ix, iy
+from .. import cells
 
 
 def idw_grid_quantized(
@@ -50,7 +39,7 @@ def idw_grid_quantized(
     Output: (cell_ix, cell_iy, n_points, idw_m3)."""
     n = 1 << res
     r = radius_cells
-    ix, iy = _cell_parts(F.col(lon_col), F.col(lat_col), res)
+    ix, iy = cells.cell_index_exprs(F.col(lon_col), F.col(lat_col), res)
     offs = F.expr(
         f"flatten(transform(sequence({-r}, {r}), dx -> "
         f"transform(sequence({-r}, {r}), dy -> struct(dx, dy))))"

@@ -76,14 +76,7 @@ def knn_join_df(
     ).persist()
 
     n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((F.col(qlon_col) + 180.0) / 360.0 * n), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((F.col(qlat_col) + 90.0) / 180.0 * n), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
+    ix, iy = cells.cell_index_exprs(F.col(qlon_col), F.col(qlat_col), res)
     pending = queries.select(
         qid_col, qlon_col, qlat_col, ix.alias("__ix"), iy.alias("__iy")
     ).persist()

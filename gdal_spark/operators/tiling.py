@@ -35,6 +35,7 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -150,12 +151,15 @@ def burn_points_tiles(
 # ---------------------------------------------------------------------------
 
 
-def _overview(tiles: DataFrame, pad: int, reduce) -> DataFrame:
+def _overview(
+    tiles: DataFrame, pad: int, reduce, keyed: bool = False
+) -> DataFrame:
     """One pyramid level up: groupBy(parent tile) over ≤4 children,
     ``reduce`` each child (padded by a ``pad``-pixel halo exchange when
     ``pad`` > 0) to half size and place it in its parent quadrant
     (gdal2tiles create_overview_tile semantics, gdal2tiles.py:1471).
-    Missing children → 0."""
+    Missing children → 0. ``keyed`` tiles already carry their parent
+    key (``_parent_keyed``) and group on it as they are."""
     if pad:
         tiles = add_halo(tiles, pad=pad)
 
@@ -182,13 +186,18 @@ def _overview(tiles: DataFrame, pad: int, reduce) -> DataFrame:
             }
         )
 
-    parent = tiles.withColumn("ptx", (F.col("tx") / 2).cast("long")).withColumn(
-        "pty", (F.col("ty") / 2).cast("long")
-    )
     # z in the keys: a multi-zoom input (e.g. a pyramid() output fed
     # back in) must never merge tiles from different levels
+    parent = tiles if keyed else _parent_keyed(tiles)
     return parent.groupBy("z", "ptx", "pty").applyInPandas(
         reduce_group, TILE_SCHEMA
+    )
+
+
+def _parent_keyed(tiles: DataFrame) -> DataFrame:
+    """``tiles`` plus the (ptx, pty) key of each tile's parent."""
+    return tiles.withColumn("ptx", (F.col("tx") / 2).cast("long")).withColumn(
+        "pty", (F.col("ty") / 2).cast("long")
     )
 
 
@@ -224,14 +233,26 @@ def pyramid(
     """Full overview pyramid base_zoom → min_zoom (inclusive), unioned.
     Each level is one narrow groupBy shuffle (after a halo exchange for
     gauss and cubic); levels are sequential stages exactly as in the
-    reference tiler."""
+    reference tiler.
+
+    For the block methods each level is hash-partitioned on its parent
+    key once: its union branch and the next level's groupBy read that
+    one exchange, which AQE reuses, so every level's kernel (the base's
+    too) runs once per query. AQE reuses no exchange over a cached
+    relation, and a halo level reads its input twice, so a cached base
+    and the halo methods take the plain union, whose branches may
+    recompute the levels below them."""
     pad, reduce = _overview_method(method)
-    out = base
+    shared = not pad and base.storageLevel == StorageLevel.NONE
+    out = None
     level = base
     for _ in range(base_zoom - min_zoom):
-        level = _overview(level, pad, reduce)
-        out = out.unionByName(level)
-    return out
+        if shared:
+            level = _parent_keyed(level).repartition("z", "ptx", "pty")
+        branch = level.drop("ptx", "pty") if shared else level
+        out = branch if out is None else out.unionByName(branch)
+        level = _overview(level, pad, reduce, keyed=shared)
+    return level if out is None else out.unionByName(level)
 
 
 # ---------------------------------------------------------------------------

@@ -449,18 +449,15 @@ def write_pmtiles_dir(
     os.makedirs(out_dir, exist_ok=True)
     if group_col is None:
         src = df.withColumn("__g", F.spark_partition_id())
-        gcol = "__g"
     else:
-        src = df.withColumn("__g", F.col(group_col))
-        gcol = "__g"
-    n_gran = max(1, df.rdd.getNumPartitions())
+        src = df.withColumn("__g", F.col(group_col)).repartition("__g")
 
     def sink(batches):
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True)
-        for g, grp in pdf.groupby(gcol):
+        for g, grp in pdf.groupby("__g"):
             tiles = [
                 (int(r.z), int(r.tx), int(r.ty), bytes(r.data))
                 for r in grp.itertuples(index=False)
@@ -475,6 +472,4 @@ def write_pmtiles_dir(
                 {"path": [p], "n_tiles": [len(tiles)]}
             )
 
-    return src.repartition(n_gran, gcol).mapInPandas(
-        sink, "path string, n_tiles long"
-    )
+    return src.mapInPandas(sink, "path string, n_tiles long")

@@ -490,12 +490,6 @@ def write_shapefile_dir(
             {"path": [base + ".shp"], "n_rows": [len(pdf)]}
         )
 
-    # explicit partition count: a bare repartition("__pid") is a
-    # default-numbered shuffle, which AQE happily coalesces into
-    # ONE task for small batches — serializing the granule encode;
-    # pinning it to the upstream partition count keeps the sink
-    # granule-parallel at every scale
-    n_gran = max(1, df.rdd.getNumPartitions())
-    return src.repartition(n_gran, "__pid").mapInPandas(
+    return src.mapInPandas(
         sink, "path string, n_rows long"
     )

@@ -3,6 +3,7 @@
 import hashlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -34,3 +35,42 @@ def tree_sha256():
         return h.hexdigest()
 
     return digest
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), the number of Spark jobs it started)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def check_granule_sink(count_jobs):
+    """``check(src, write, ext)``: ``write(src)`` returns a granule
+    sink's manifest without starting a Spark job, and collecting it
+    writes one ``part-<pid>.<ext>`` per non-empty partition of ``src``,
+    holding that partition's rows. Returns the manifest rows."""
+    from pyspark.sql import functions as F
+
+    def check(src, write, ext):
+        manifest, jobs = count_jobs(lambda: write(src))
+        assert jobs == 0
+        rows = manifest.collect()
+        sizes = src.groupBy(F.spark_partition_id().alias("pid")).count()
+        assert {os.path.basename(r[0]): r[1] for r in rows} == {
+            f"part-{r.pid:05d}.{ext}": r["count"] for r in sizes.collect()
+        }
+        return rows
+
+    return check

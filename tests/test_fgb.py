@@ -233,6 +233,26 @@ def test_sink_stays_granule_parallel(spark, tmp_path):
     assert len(manifest) >= 2
 
 
+def test_write_fgb_dir_one_file_per_partition(
+    spark, tmp_path, check_granule_sink
+):
+    """The sink writes each partition of its input as it stands: no
+    shuffle, and no job before the caller's action."""
+    pdf = pd.DataFrame({
+        "gid": np.arange(300),
+        "geometry": [wkb.point(float(i % 17), float(i % 13)) for i in range(300)],
+    })
+    src = spark.createDataFrame(pdf).repartition(4, "gid")
+    rows = check_granule_sink(
+        src, lambda s: fgb.write_fgb_dir(s, str(tmp_path / "sink")), "fgb"
+    )
+    back = pd.concat(
+        [fgb.read_fgb(spark, r.path).toPandas() for r in rows],
+        ignore_index=True,
+    )
+    assert sorted(back["gid"]) == list(range(300))
+
+
 def test_bbox_without_index_matches_indexed_semantics(spark, tmp_path):
     """bbox pruning must not depend on index presence: an unindexed
     file applies the same envelope filter post-decode (the old code

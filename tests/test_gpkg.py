@@ -86,6 +86,19 @@ def test_write_read_round_trip(spark, tmp_path):
     assert got == want
 
 
+def test_write_gpkg_dir_one_file_per_partition(
+    spark, tmp_path, check_granule_sink
+):
+    src = _feature_df(spark, 60).repartition(4, "fid_src")
+    rows = check_granule_sink(
+        src,
+        lambda s: gpkg.write_gpkg_dir(s, str(tmp_path / "gp"), table="feat"),
+        "gpkg",
+    )
+    back = gpkg.read_gpkg(spark, [r.path for r in rows], "feat").toPandas()
+    assert sorted(back["fid_src"]) == list(range(60))
+
+
 def test_ranged_scan_equals_file_scan(spark, tmp_path):
     out = str(tmp_path / "gp1")
     df = _feature_df(spark, 57).coalesce(1)

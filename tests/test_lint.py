@@ -18,18 +18,14 @@ def _sources():
 
 
 def test_no_rdd_usage():
-    """No RDD DATA paths (the DataFrame API is the engine contract).
-    `.rdd.getNumPartitions()` is exempt: plan metadata only — the
-    granule sinks pin their repartition width with it so AQE can't
-    coalesce the shuffle into one task."""
+    """No RDD paths (the DataFrame API is the engine contract). Not
+    even `.rdd.getNumPartitions()`: under AQE it runs every shuffle
+    stage of the plan to size the partitions, and the action that
+    follows runs them again."""
     offenders = []
     for p in _sources():
         for i, line in enumerate(p.read_text().splitlines(), 1):
-            if (
-                re.search(r"\.rdd\b", line)
-                and "sparkContext" not in line
-                and ".rdd.getNumPartitions()" not in line
-            ):
+            if re.search(r"\.rdd\b", line) and "sparkContext" not in line:
                 offenders.append(f"{p.name}:{i}")
     assert not offenders, offenders
 

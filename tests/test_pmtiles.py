@@ -2,6 +2,9 @@
 encode/decode round trip, content dedup, leaf spill, ranged read."""
 
 import gzip
+import hashlib
+import os
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -176,7 +179,51 @@ def test_write_pmtiles_dir_round_trip(spark, tmp_path):
         (int(r.z), int(r.tx), int(r.ty)): bytes(r.data)
         for r in pdf.itertuples(index=False)
     }
+    # archive bytes pinned across changes to the sink's plan
+    assert {
+        os.path.basename(p): hashlib.sha256(Path(p).read_bytes()).hexdigest()
+        for p in manifest["path"]
+    } == {
+        "part-00000.pmtiles":
+        "31594a51885b1da2e8bb95cda18de731f640f8bc2ce53499a6a057e9ca6eac29",
+        "part-00001.pmtiles":
+        "f5870318a83a2aaa3356911f0db7a3bb721e5d75d7b496374505545b44e3bc70",
+    }
 
+
+def _shuffled_tiles(spark):
+    pdf = pd.DataFrame(
+        [(3, x, y, bytes(f"t{x}.{y}", "ascii"))
+         for x in range(8) for y in range(8)],
+        columns=["z", "tx", "ty", "data"],
+    )
+    return spark.createDataFrame(pdf).repartition(4, "tx")
+
+
+def test_write_pmtiles_dir_one_archive_per_partition(
+    spark, tmp_path, check_granule_sink
+):
+    rows = check_granule_sink(
+        _shuffled_tiles(spark),
+        lambda src: pmtiles.write_pmtiles_dir(src, str(tmp_path / "sink")),
+        "pmtiles",
+    )
+    assert sum(r.n_tiles for r in rows) == 64
+
+
+def test_write_pmtiles_dir_by_group_starts_no_job(spark, tmp_path, count_jobs):
+    src = _shuffled_tiles(spark).withColumn("gk", F.col("ty") % 3)
+    manifest, jobs = count_jobs(
+        lambda: pmtiles.write_pmtiles_dir(
+            src, str(tmp_path / "sink"), group_col="gk"
+        )
+    )
+    assert jobs == 0
+    rows = manifest.collect()
+    assert sorted(os.path.basename(r.path) for r in rows) == [
+        f"part-{g:05d}.pmtiles" for g in range(3)
+    ]
+    assert sum(r.n_tiles for r in rows) == 64
 
 
 def test_write_pmtiles_dir_rejects_string_group_key(spark, tmp_path):

@@ -118,6 +118,45 @@ def test_pyramid_checksums_pinned(formula_4x4, method):
     assert hashlib.sha256(key.encode()).hexdigest() == PYRAMID_PINS[method]
 
 
+def _final_plan(df) -> str:
+    """AQE's final physical plan of ``df``, which has run."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("levels", [1, 2, 3])
+@pytest.mark.parametrize("method", ["nearest", "average", "rms", "mode"])
+def test_pyramid_runs_each_kernel_once(spark, points_pdf, method, levels):
+    """The burn kernel and each level's kernel run once: every level's
+    parent-key exchange feeds both its union branch and the next level,
+    so the final plan holds L + 1 Python nodes, not 2L + 1."""
+    base = tiling.burn_points_tiles(spark.createDataFrame(points_pdf), 3, 16)
+    df = tiling.tile_checksums(tiling.pyramid(base, 3, 3 - levels, method))
+    assert len(df.collect()) > levels
+    plan = _final_plan(df)
+    assert plan.count("FlatMapGroupsInPandas") == levels + 1
+    assert plan.count("ReusedExchange") == levels
+
+
+def test_pyramid_of_a_cached_base_reads_the_cache(spark, points_pdf):
+    """AQE reuses no exchange over a cached relation, so a cached base
+    keeps the plain union: no extra shuffle of the base, same tiles."""
+    from pyspark import StorageLevel
+
+    base = tiling.burn_points_tiles(spark.createDataFrame(points_pdf), 2, 16)
+    plain = tiling.pyramid(base, 2, 0).collect()
+    cached = base.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        df = tiling.pyramid(cached, 2, 0)
+        assert sorted(df.collect()) == sorted(plain)
+        plan = _final_plan(df)
+    finally:
+        cached.unpersist()
+    assert "REPARTITION_BY_COL" not in plan
+    assert "ReusedExchange" not in plan
+
+
 def test_unknown_overview_method_raises_on_the_driver(spark):
     """A bad method fails at the call, naming the method, before any
     plan is built, on empty input too (it used to surface only as a

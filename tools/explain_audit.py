@@ -39,6 +39,14 @@ exchange on poly_id (map-side combine; ~100 groups).""",
     "burn_points_tiles": """Shuffles carry DEDUPED PIXELS, not points: partial_count
 HashAggregate sits upstream of both exchanges; FlatMapGroupsInPandas
 only assembles dense tiles from per-pixel counts.""",
+    "pyramid": """Average pyramid z=2 -> 0 over 4x4 formula tiles, then
+tile_checksums; AQE's final plan, taken after it ran. Each
+level is hash-partitioned on its parent key (REPARTITION_BY_COL) once:
+the level's union branch reads that exchange, and the next level's
+FlatMapGroupsInPandas reads it again as a ReusedExchange, with no
+second shuffle. So the base's and each level's kernel run once (over a
+point burn: L + 1 Python nodes, not the 2L + 1 of a union whose every
+branch recomputed the levels below it).""",
     "knn_join_df_round1": """First ring iteration of the distributed kNN: offsets explode
 is pure codegen, candidate cells broadcast against bucketed points,
 row_number window ranks per query. Later rings repeat on the shrinking
@@ -143,7 +151,9 @@ def main() -> int:
     from gdal_spark.operators.spatial_join import (
         spatial_join, spatial_join_count,
     )
-    from gdal_spark.operators.tiling import burn_points_tiles
+    from gdal_spark.operators.tiling import (
+        burn_points_tiles, formula_tiles, pyramid, tile_checksums,
+    )
     from gdal_spark.session import get_spark
 
     import __spark_entry__ as entry
@@ -158,6 +168,11 @@ def main() -> int:
         spatial_join_count(pts, polys, res_min=2, res_max=7)
     )
     plans["burn_points_tiles"] = _plan(burn_points_tiles(pts, 3, 64))
+    pyr = tile_checksums(
+        pyramid(formula_tiles(spark, 4, 4, 64).withColumn("z", F.lit(2)), 2, 0)
+    )
+    pyr.collect()
+    plans["pyramid"] = _plan(pyr).split("+- == Initial Plan ==")[0]
     queries = pts.filter(F.col("doc_id") % 101 == 0).select(
         F.col("doc_id").alias("qid"),
         F.col("lon").alias("qlon"),
@@ -184,7 +199,7 @@ def main() -> int:
     )
     from gdal_spark.operators.grid import idw_grid_quantized
     from gdal_spark.operators.layer_algebra import intersection_pieces
-    from gdal_spark.operators.tiling import formula_tiles, warp_aggregate
+    from gdal_spark.operators.tiling import warp_aggregate
 
     a_pdf = entry._la_fixture(entry._LA_NA, 101, 8, 18)
     b_pdf = entry._la_fixture(entry._LA_NB, 202, 14, 30)
